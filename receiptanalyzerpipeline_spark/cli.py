@@ -48,8 +48,8 @@ def _backend(name: str, rate_per_sec: float | None = None):
 
 def cmd_analyze(args: argparse.Namespace) -> int:
     """One-shot batch: images → ahash → OCR → curated tables (SURVEY §3.1)."""
-    from receiptanalyzerpipeline_spark.multimodal.images import read_images, with_ahash
-    from receiptanalyzerpipeline_spark.multimodal.ocr import ocr_with_cache, parse_ocr_documents
+    from receiptanalyzerpipeline_spark.multimodal.images import read_images
+    from receiptanalyzerpipeline_spark.multimodal.ocr import ocr_documents
     from receiptanalyzerpipeline_spark.sources.textract import (
         extract_line_items,
         flatten_summary_fields,
@@ -58,21 +58,20 @@ def cmd_analyze(args: argparse.Namespace) -> int:
 
     spark = _spark()
     path = args.image_file or args.path
-    images = with_ahash(read_images(spark, path, glob=args.glob))
+    images = read_images(spark, path, glob=args.glob)
     work = Path(args.work_dir)
-    ocr = ocr_with_cache(
-        spark, images, str(work / "raw_zone"), _backend(args.backend, args.ocr_rate)
-    )
-    docs = parse_ocr_documents(ocr)
-    summary = pivot_receipt_summary(flatten_summary_fields(docs))
-    items = extract_line_items(docs)
-    summary.show(truncate=False)
-    items.show(truncate=False)
-    if args.write:
-        from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_month
+    backend = _backend(args.backend, args.ocr_rate)
+    # One hash, OCR and parse pass shared by both show()s and both writes.
+    with ocr_documents(images, str(work / "raw_zone"), backend) as docs:
+        summary = pivot_receipt_summary(flatten_summary_fields(docs))
+        items = extract_line_items(docs)
+        summary.show(truncate=False)
+        items.show(truncate=False)
+        if args.write:
+            from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_month
 
-        write_partitioned_by_month(summary, str(work / "receipt_summary"))
-        items.write.mode("append").parquet(str(work / "receipt_line_item"))
+            write_partitioned_by_month(summary, str(work / "receipt_summary"))
+            items.write.mode("append").parquet(str(work / "receipt_line_item"))
     return 0
 
 

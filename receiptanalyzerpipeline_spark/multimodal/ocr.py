@@ -13,6 +13,9 @@ Here OCR is a ``mapInPandas`` stage with:
   so retries, AQE re-execution, and re-runs never re-pay the OCR call —
   the *plan-shape* optimization the reference encodes as pipeline order
   (hash/dedup before Textract, SURVEY §4.1);
+- **one pass per batch**: ``ocr_documents`` persists the hashed images and
+  the parsed documents, so a caller with several sinks hashes, probes the
+  cache and parses once;
 - OCR results as JSON strings in the raw zone (schema applied on read via
   ``from_json`` with sources.textract.TEXTRACT_SCHEMA) so the cache is
   append-only and schema-evolution-safe (K3 semantics).
@@ -23,12 +26,15 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from receiptanalyzerpipeline_spark.multimodal.images import with_ahash
 from receiptanalyzerpipeline_spark.sources.textract import TEXTRACT_SCHEMA
 
 OCR_RESULT_SCHEMA = "ahash string, doc_json string, ocr_error string"
@@ -254,7 +260,7 @@ def ocr_with_cache(
     The anti-join keys on ahash — exactly-once OCR per distinct image
     content, idempotent under replay (SURVEY §7.3.4/§7.3.6)."""
     distinct_imgs = images.select("ahash", "content").dropDuplicates(["ahash"])
-    cache = _read_cache_or_none(spark, cache_path)
+    cache = _read_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
     if cache is None:
         cache = spark.createDataFrame([], OCR_RESULT_SCHEMA)
 
@@ -265,27 +271,52 @@ def ocr_with_cache(
     # below is the only execution of the OCR stage.
     if misses.limit(1).count() > 0:
         ocr_expense(misses, backend).write.mode("append").parquet(cache_path)
-    cache_now = _read_cache_or_none(spark, cache_path)
+    cache_now = _read_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
     if cache_now is None:  # nothing cached and nothing missed: empty input
         return spark.createDataFrame([], OCR_RESULT_SCHEMA)
     return cache_now.join(distinct_imgs.select("ahash"), "ahash", "left_semi")
 
 
-def _read_cache_or_none(spark: SparkSession, cache_path: str) -> DataFrame | None:
-    """Read the raw-zone cache, returning None ONLY when the path does not
-    exist yet (first run). Any other failure — corrupt files, permission
-    errors, transient FS faults — re-raises: treating those as "nothing
-    cached" would silently drop OCR results."""
+@contextmanager
+def ocr_documents(
+    images: DataFrame, cache_path: str, backend: OcrBackend
+) -> Iterator[DataFrame]:
+    """Image bytes → parsed documents, with each stage computed once.
+
+    Hashes the ``content`` column, runs ``ocr_with_cache`` over it and
+    parses the result. The hashed images and the parsed documents are
+    persisted, so the cache probe, the OCR write and every action on the
+    yielded frame reuse one hash pass and one parse instead of re-reading
+    the input and the raw zone. Neither persisted frame holds the paid
+    call: OCR runs only inside ``ocr_with_cache``'s append write, and the
+    documents are read back from the raw zone, so recomputing an evicted
+    partition re-reads the cache and never calls the backend again. Both
+    frames are released on exit."""
+    hashed = with_ahash(images.select("content")).select("ahash", "content").persist()
+    docs = None
+    try:
+        raw = ocr_with_cache(images.sparkSession, hashed, cache_path, backend)
+        docs = parse_ocr_documents(raw).persist()
+        yield docs
+    finally:
+        if docs is not None:
+            docs.unpersist()
+        hashed.unpersist()
+
+
+def _read_or_none(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame | None:
+    """Read a parquet table with a declared schema (no inference job),
+    returning None ONLY when the path does not exist yet (first run). Any
+    other failure re-raises, and a corrupt file fails the query that
+    executes the frame: treating an unreadable table as "nothing there"
+    would silently re-pay OCR calls or append duplicate curated rows."""
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(cache_path)
+        return spark.read.schema(schema).parquet(path)
     except AnalysisException as ex:
-        error_class = None
-        try:
-            error_class = ex.getErrorClass()
-        except Exception:
-            pass
-        if error_class == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in str(ex):
+        if ex.getCondition() == "PATH_NOT_FOUND":
             return None
         raise

@@ -19,6 +19,13 @@ Reference → engine mapping (SURVEY §3.2, §2.9):
 The batch transforms are the SAME DataFrame functions proven against the
 DuckDB oracle (flatten/pivot) — Spark's batch/streaming unification means
 the streaming path inherits their correctness.
+
+Each micro-batch is hashed, OCR'd and parsed once (multimodal.ocr
+``ocr_documents``): the hashed images and the parsed documents are
+persisted for the cache probe, the OCR write and the two curated merges,
+then released at the end of the batch, so a long-running stream does not
+accumulate cached batches. Every parquet read declares its schema, so no
+read launches a schema-inference job.
 """
 
 from __future__ import annotations
@@ -34,11 +41,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from receiptanalyzerpipeline_spark.multimodal.images import with_ahash
 from receiptanalyzerpipeline_spark.multimodal.ocr import (
     OcrBackend,
-    ocr_with_cache,
-    parse_ocr_documents,
+    _read_or_none,
+    ocr_documents,
 )
 from receiptanalyzerpipeline_spark.sources.textract import (
     extract_line_items,
@@ -105,12 +111,10 @@ def _merge_append_new(batch: DataFrame, target_path: str, key: str) -> None:
 
     Parquet stand-in for MERGE INTO (no Delta in this environment): the
     anti-join on the natural key makes replays no-ops, which together with
-    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6)."""
-    spark = batch.sparkSession
-    try:
-        existing = spark.read.parquet(target_path).select(key)
-    except Exception:
-        existing = None
+    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6). Only the
+    key column is read, with its declared type; a target that exists but
+    cannot be read fails the batch rather than counting as empty."""
+    existing = _read_or_none(batch.sparkSession, target_path, StructType([batch.schema[key]]))
     fresh = batch if existing is None else batch.join(existing, key, "left_anti")
     fresh.write.mode("append").parquet(target_path)
 
@@ -122,19 +126,17 @@ def process_receipt_batch(
     curated_items: str,
     backend: OcrBackend,
 ) -> None:
-    """One micro-batch: hash → memoized OCR → flatten/pivot → merge."""
-    spark = images.sparkSession
-    hashed = with_ahash(images)
-    ocr = ocr_with_cache(spark, hashed, raw_zone, backend)
-    docs = parse_ocr_documents(ocr)
-    summary = pivot_receipt_summary(flatten_summary_fields(docs))
-    items = extract_line_items(docs)
-    _merge_append_new(summary, curated_summary, "img_id")
-    _merge_append_new(
-        items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
-        curated_items,
-        "item_key",
-    )
+    """One micro-batch: hash → memoized OCR → flatten/pivot → merge, with
+    the hash and the parse computed once and shared by both sinks."""
+    with ocr_documents(images, raw_zone, backend) as docs:
+        summary = pivot_receipt_summary(flatten_summary_fields(docs))
+        items = extract_line_items(docs)
+        _merge_append_new(summary, curated_summary, "img_id")
+        _merge_append_new(
+            items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
+            curated_items,
+            "item_key",
+        )
 
 
 def run_ingest(

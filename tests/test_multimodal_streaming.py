@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from receiptanalyzerpipeline_spark.multimodal.images import (
     STUB_MAGIC,
+    _ahash_hex,
     ahash_neardup_pairs,
     exact_dedup_by_ahash,
     with_ahash,
@@ -73,20 +74,37 @@ def stream_dirs(tmp_path: Path) -> dict[str, str]:
     return d
 
 
-def _ingest(spark, d):
+def _ingest(spark, d, backend=None, checkpoint=None):
     from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
     from receiptanalyzerpipeline_spark.streaming.ingest import run_ingest
 
     run_ingest(
         spark,
         d["landing"],
-        d["checkpoint"],
+        checkpoint or d["checkpoint"],
         d["raw"],
         d["summary"],
         d["items"],
-        StubBackend(),
+        backend or StubBackend(),
         available_now=True,
     )
+
+
+def _logging_backend(log_path: str, responses: dict[str, dict] | None = None):
+    """A backend that appends one line per analyze() call to a shared file —
+    visible across Python worker processes, so a test can count exactly how
+    many times the paid OCR call ran. The class is defined inside this
+    function so cloudpickle ships it by value to the workers."""
+
+    class _LoggingBackend:
+        def analyze(self, content: bytes, ahash: str) -> dict:
+            with open(log_path, "a") as f:
+                f.write(ahash + "\n")
+            from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
+
+            return StubBackend(responses).analyze(content, ahash)
+
+    return _LoggingBackend()
 
 
 def _summary_count(spark, d) -> int:
@@ -136,28 +154,11 @@ def test_ocr_with_cache_single_invocation(spark, tmp_path):
     stage — each distinct image is analyzed exactly ONCE across repeated
     ocr_with_cache calls, and an empty input with no cache yet returns an
     empty frame instead of raising."""
-    from receiptanalyzerpipeline_spark.multimodal.images import with_ahash
     from receiptanalyzerpipeline_spark.multimodal.ocr import ocr_with_cache
-
-    class _LoggingBackend:
-        """Appends one line per analyze() call to a shared file — visible
-        across Python worker processes, so the test can count exactly how
-        many times the paid OCR call ran. (Defined inside the test so
-        cloudpickle ships it by value to the workers.)"""
-
-        def __init__(self, log_path: str):
-            self.log_path = log_path
-
-        def analyze(self, content: bytes, ahash: str) -> dict:
-            with open(self.log_path, "a") as f:
-                f.write(ahash + "\n")
-            from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
-
-            return StubBackend().analyze(content, ahash)
 
     log = tmp_path / "calls.log"
     cache = str(tmp_path / "ocr_cache")
-    backend = _LoggingBackend(str(log))
+    backend = _logging_backend(str(log))
 
     imgs = with_ahash(images_df(spark, {"a": IMG_A, "a2": IMG_A2, "c": IMG_C}))
     out1 = ocr_with_cache(spark, imgs, cache, backend)
@@ -181,3 +182,44 @@ def test_ocr_with_cache_single_invocation(spark, tmp_path):
     out4 = ocr_with_cache(spark, empty, str(tmp_path / "never_written"), backend)
     assert out4.count() == 0
     assert len(log.read_text().splitlines()) == 3
+
+
+def test_ingest_exactly_once_and_loud_on_unreadable_target(spark, stream_dirs, tmp_path):
+    """The ingest path in the default run: one backend call per distinct new
+    hash, the expected curated rows, a replay that adds nothing, and an
+    unreadable curated table that fails the batch instead of being treated
+    as empty (which would append duplicate rows)."""
+    from receiptanalyzerpipeline_spark.sources.fixtures import RECEIPT_ACME
+    from receiptanalyzerpipeline_spark.streaming.ingest import process_receipt_batch
+
+    d = stream_dirs
+    landing = Path(d["landing"])
+    (landing / "scan_001.png").write_bytes(IMG_A)
+    (landing / "scan_002.png").write_bytes(IMG_A2)  # duplicate content
+    (landing / "scan_003.png").write_bytes(IMG_C)
+    hashes = {_ahash_hex(IMG_A), _ahash_hex(IMG_C)}
+    # Every document carries RECEIPT_ACME's two line items.
+    responses = {h: {**RECEIPT_ACME, "img_id": h} for h in hashes}
+    log = tmp_path / "calls.log"
+    backend = _logging_backend(str(log), responses)
+
+    def state():
+        calls = sorted(log.read_text().splitlines())
+        return calls, _summary_count(spark, d), spark.read.parquet(d["items"]).count()
+
+    _ingest(spark, d, backend)
+    assert state() == (sorted(hashes), 2, 4)
+
+    # Replay every file from a fresh checkpoint: the OCR cache and the
+    # idempotent merges turn the whole batch into a no-op.
+    _ingest(spark, d, backend, checkpoint=str(tmp_path / "checkpoint_replay"))
+    assert state() == (sorted(hashes), 2, 4)
+
+    summary_files = sorted(Path(d["summary"]).glob("part-*.parquet"))
+    for f in summary_files:
+        f.write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        process_receipt_batch(
+            images_df(spark, {"b": IMG_B}), d["raw"], d["summary"], d["items"], backend
+        )
+    assert sorted(Path(d["summary"]).glob("part-*.parquet")) == summary_files
