@@ -81,11 +81,6 @@ def get_spark(
         # application scan >= 10 GB) are cluster-appropriate and left
         # alone; tests/test_plan_shapes.py lowers them to prove injection.
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        # Python DataSource filter pushdown (Spark 4.1): lets the receipts
-        # landing-zone source (sources/receipt_datasource.py) prune files at
-        # driver-side LISTING time from img_id/path predicates — the custom-
-        # source equivalent of partition pruning.
-        "spark.sql.python.filterPushdown.enabled": "true",
         # Local-mode memory hygiene; harmless on a cluster where the
         # submitter overrides these.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -116,7 +111,4 @@ def prepare_session(spark: SparkSession) -> SparkSession:
       erroring — no silent value change for non-nano data.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Runtime-settable; needed whenever the receipts Python DataSource is
-    # mounted on an externally-built session (it implements pushFilters).
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark

@@ -138,65 +138,6 @@ TEXTRACT_SCHEMA = StructType(
 )
 
 
-def read_textract_json(spark, path: str) -> DataFrame:
-    """Raw-zone scan of AnalyzeExpense JSON with the explicit schema
-    (SURVEY S5). Permissive mode: corrupt documents surface as NULL rows
-    rather than failing the scan."""
-    return spark.read.schema(TEXTRACT_SCHEMA).option("mode", "PERMISSIVE").json(path)
-
-
-def read_textract_variant(spark, path: str) -> DataFrame:
-    """S5 alternative raw zone: Spark 4 VariantType instead of the fixed
-    struct schema.
-
-    ``parse_json`` stores each AnalyzeExpense response as a binary-encoded
-    variant — NO schema declared at ingest, so when the OCR service adds
-    response fields (Textract does, version by version) the raw zone keeps
-    accepting them without a migration; extraction happens per-query with
-    ``try_variant_get`` path expressions, and unparseable lines surface as
-    NULL variants rather than failing the scan (the PERMISSIVE analogue).
-    The typed-struct path (read_textract_json) remains the curated-zone
-    contract; this is the landing contract that never breaks.
-    """
-    raw = spark.read.text(path)
-    return raw.select(
-        F.try_parse_json(F.col("value")).alias("doc"),
-    )
-
-
-def flatten_summary_fields_variant(raw: DataFrame, variant_col: str = "doc") -> DataFrame:
-    """P1 over the variant raw zone: byte-identical rows to
-    flatten_summary_fields without ever declaring TEXTRACT_SCHEMA.
-
-    Arrays hop out of the variant via ``try_variant_get(..,
-    'array<variant>')`` + ordinary posexplode, so the whole flatten stays
-    in the DataFrame API and inside codegen — no JSON re-parse per field,
-    no Python. Missing paths → NULL (try_variant_get), matching the
-    struct path's PERMISSIVE nulls."""
-    v = F.col(variant_col)
-
-    def vg(col, path, typ="string"):
-        return F.try_variant_get(col, path, typ)
-
-    return (
-        raw.select(
-            vg(v, "$.img_id").alias("img_id"),
-            F.explode(vg(v, "$.ExpenseDocuments", "array<variant>")).alias("d"),
-        )
-        .select("img_id", F.posexplode(vg(F.col("d"), "$.SummaryFields", "array<variant>")).alias("pos", "f"))
-        .select(
-            "img_id",
-            "pos",
-            vg(F.col("f"), "$.Type.Text").alias("TypeText"),
-            vg(F.col("f"), "$.Type.Confidence", "double").alias("TypeConfidence"),
-            vg(F.col("f"), "$.LabelDetection.Text").alias("LabelText"),
-            vg(F.col("f"), "$.LabelDetection.Confidence", "double").alias("LabelConfidence"),
-            vg(F.col("f"), "$.ValueDetection.Text").alias("ValueText"),
-            vg(F.col("f"), "$.ValueDetection.Confidence", "double").alias("ValueConfidence"),
-        )
-    )
-
-
 def flatten_summary_fields(raw: DataFrame) -> DataFrame:
     """P1: the JMESPath double-unnest as explode+explode, with ``pos``
     preserving document order for last-wins pivot parity (SURVEY §7.3.2).

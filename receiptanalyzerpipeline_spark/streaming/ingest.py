@@ -16,6 +16,10 @@ Reference → engine mapping (SURVEY §3.2, §2.9):
                                        foreachBatch + idempotent
                                        anti-join merge on img_id     (T7)
 
+The binaryFile file source is the only watcher: ``anarcpt-spark watch``
+and ``run_ingest`` both read the landing directory through
+``read_image_stream``.
+
 The batch transforms are the SAME DataFrame functions proven against the
 DuckDB oracle (flatten/pivot) — Spark's batch/streaming unification means
 the streaming path inherits their correctness.
@@ -79,33 +83,6 @@ def read_image_stream(
     return reader.load(landing_dir)
 
 
-def read_receipt_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    glob: str = "*.png,*.jpg,*.jpeg",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Same landing-dir watcher through the native `receipts` Python
-    DataSource (sources/receipt_datasource.py): O(1) watermark offsets
-    instead of the binaryFile source's seen-files log, LPT-balanced
-    partitions, executor-side byte reads. Column-compatible with
-    read_image_stream (modificationTime alias) so the downstream OCR
-    pipeline is shared verbatim."""
-    from receiptanalyzerpipeline_spark.sources.receipt_datasource import ReceiptDataSource
-
-    spark.dataSource.register(ReceiptDataSource)
-    reader = spark.readStream.format("receipts").option("glob", glob)
-    if num_partitions:
-        reader = reader.option("numPartitions", str(num_partitions))
-    # Drop the source's filename-stem img_id: in the OCR pipeline img_id is
-    # the content ahash (multimodal/ocr.py), and keeping both would shadow it.
-    return (
-        reader.load(landing_dir)
-        .withColumnRenamed("modification_time", "modificationTime")
-        .drop("img_id")
-    )
-
-
 def _merge_append_new(batch: DataFrame, target_path: str, key: str) -> None:
     """Idempotent merge: append only keys absent from the target.
 
@@ -148,17 +125,12 @@ def run_ingest(
     curated_items: str,
     backend: OcrBackend,
     available_now: bool = True,
-    source: str = "binaryFile",
 ) -> None:
     """Drain the landing dir through the pipeline. availableNow=True
     processes the backlog and stops (test/replay mode); False runs
-    continuously with default micro-batch triggers. ``source`` picks the
-    watcher implementation: Spark's binaryFile file source or the native
-    `receipts` Python DataSource — the downstream stages are identical."""
-    if source == "receipts":
-        stream = read_receipt_stream(spark, landing_dir)
-    else:
-        stream = read_image_stream(spark, landing_dir)
+    continuously with default micro-batch triggers. The watcher is
+    Spark's binaryFile file source (``read_image_stream``)."""
+    stream = read_image_stream(spark, landing_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():

@@ -11,12 +11,8 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from receiptanalyzerpipeline_spark.compat import ensure_protobuf
     from receiptanalyzerpipeline_spark.session import get_spark
 
-    # Before the session exists, so Python workers inherit PYTHONPATH
-    # (transformWithState needs google.protobuf on both sides).
-    ensure_protobuf()
     spark = get_spark(app_name="receiptanalyzerpipeline-tests")
     yield spark
 
