@@ -68,10 +68,11 @@ def cmd_analyze(args: argparse.Namespace) -> int:
         summary.show(truncate=False)
         items.show(truncate=False)
         if args.write:
-            from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_month
+            from receiptanalyzerpipeline_spark.streaming.ingest import merge_curated
 
-            write_partitioned_by_month(summary, str(work / "receipt_summary"))
-            items.write.mode("append").parquet(str(work / "receipt_line_item"))
+            merge_curated(
+                summary, items, str(work / "receipt_summary"), str(work / "receipt_line_item")
+            )
     return 0
 
 

@@ -10,8 +10,8 @@ deterministic shards. All math is engine-portable (int/int IEEE
 divisions, md5-derived buckets) so every query is DuckDB-replayable.
 
 Output contract per registry docstring: BIGINT / DOUBLE / STRING /
-BOOLEAN only; every query ends in a total ORDER BY with a unique
-tiebreaker.
+BOOLEAN only; each query's presentation order is its registered
+``order``, not a sort in the builder or the oracle SQL.
 """
 
 from __future__ import annotations
@@ -57,7 +57,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(m.top_cnt AS DOUBLE) / m.n_bigrams AS top_bigram_frac,
                CAST(m.top_cnt AS DOUBLE) / m.n_bigrams >= {_TOP_BIGRAM_FLAG} AS flagged
         FROM base b JOIN m USING (doc_id)
-        ORDER BY doc_id
     """,
     doc=(
         "Gopher-style repetition-quality filter: duplicate-token fraction "
@@ -68,12 +67,13 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("text", "quality", "curation"),
     bench=True,
+    order=("doc_id",),
 )
 def q_x9(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = C.repetition_stats(_docs(spark, sf_dir), "doc_id", "text")
     return stats.withColumn(
         "flagged", F.col("top_bigram_frac") >= F.lit(_TOP_BIGRAM_FLAG)
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -92,7 +92,7 @@ def q_x9(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CASE WHEN bucket < bound THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
                CAST(SUM(CASE WHEN bucket < bound THEN 1 ELSE 0 END) AS DOUBLE)
                    / COUNT(*) AS kept_frac
-        FROM rated GROUP BY source ORDER BY source
+        FROM rated GROUP BY source
     """,
     doc=(
         "Deterministic source-mixture sampling audit: head sources kept "
@@ -101,6 +101,7 @@ def q_x9(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the oracle. One hash + projection per row, then a tiny agg."
     ),
     tags=("sampling", "curation"),
+    order=("source",),
 )
 def q_x10(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -114,7 +115,6 @@ def q_x10(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("keep").cast("long")).alias("n_kept"),
             (F.sum(F.col("keep").cast("long")).cast("double") / F.count("*")).alias("kept_frac"),
         )
-        .orderBy("source")
     )
 
 
@@ -136,7 +136,6 @@ def q_x10(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT d.doc_id, d.source, (h.doc_id IS NOT NULL) AS contaminated
         FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
         WHERE d.source <> 'src0'
-        ORDER BY d.doc_id
     """,
     doc=(
         "Benchmark decontamination: flag training docs (source<>src0) "
@@ -148,6 +147,7 @@ def q_x10(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("dedup", "curation", "decontamination"),
     bench=True,
+    order=("doc_id",),
 )
 def q_x11(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -162,7 +162,6 @@ def q_x11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "source", F.coalesce(F.col("contaminated"), F.lit(False)).alias("contaminated")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -176,7 +175,7 @@ def q_x11(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM documents
         )
         SELECT shard_id, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS total_tokens
-        FROM s GROUP BY shard_id ORDER BY shard_id
+        FROM s GROUP BY shard_id
     """,
     doc=(
         "Training-set shard packing audit: deterministic md5 shard "
@@ -187,6 +186,7 @@ def q_x11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "not RNG- or partition-derived."
     ),
     tags=("sampling", "curation", "sink-layout"),
+    order=("shard_id",),
 )
 def q_x12(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -197,7 +197,6 @@ def q_x12(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("shard_id")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("total_tokens"))
-        .orderBy("shard_id")
     )
 
 
@@ -219,7 +218,7 @@ def q_x12(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT shard_id, doc_id, CAST(n_tok AS BIGINT) AS n_tok,
                CAST(off AS BIGINT) AS token_offset,
                CAST(off // 256 AS BIGINT) AS chunk_id
-        FROM p ORDER BY shard_id, doc_id
+        FROM p
     """,
     doc=(
         "Concat-then-chunk sequence packing (the GPT-style training "
@@ -230,6 +229,7 @@ def q_x12(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact integer math so the oracle replays bit-for-bit."
     ),
     tags=("sampling", "curation", "packing"),
+    order=("shard_id", "doc_id"),
 )
 def q_x13(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -254,7 +254,6 @@ def q_x13(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token_offset",
             F.expr("token_offset div 256").alias("chunk_id"),
         )
-        .orderBy("shard_id", "doc_id")
     )
 
 
@@ -280,7 +279,6 @@ def q_x13(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT source, tok, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS n_sources,
                score, CAST(rk AS BIGINT) AS rk
         FROM ranked WHERE rk <= 3
-        ORDER BY source, rk
     """,
     doc=(
         "Top-3 distinctive terms per source by rarity-weighted term "
@@ -292,6 +290,7 @@ def q_x13(spark: SparkSession, sf_dir: str) -> DataFrame:
         "join→per-source top-k window."
     ),
     tags=("text", "tfidf", "topk"),
+    order=("source", "rk"),
 )
 def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -317,7 +316,6 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= 3)
         .select("source", "tok", "tf", "n_sources", "score", "rk")
-        .orderBy("source", "rk")
     )
 
 
@@ -330,7 +328,6 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM part a JOIN part b
           ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
         WHERE levenshtein(a.p_name, b.p_name) <= 2
-        ORDER BY key_a, key_b
     """,
     doc=(
         "Blocked fuzzy matching (entity resolution): candidate pairs come "
@@ -343,6 +340,7 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "engine-portable with no rounding concerns."
     ),
     tags=("dedup", "entity-resolution", "fuzzy"),
+    order=("key_a", "key_b"),
 )
 def q_er1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _er1_plan(spark, sf_dir)
@@ -412,7 +410,7 @@ def _er1_plan(
             q=3,
             d=2,
             block_keys=("brand",),
-        ).orderBy("key_a", "key_b")
+        )
     return (
         cands.select(
             "key_a",
@@ -422,7 +420,6 @@ def _er1_plan(
             F.levenshtein("name_a", "name_b").cast("long").alias("edit_dist"),
         )
         .where(F.col("edit_dist") <= 2)
-        .orderBy("key_a", "key_b")
     )
 
 
@@ -446,7 +443,6 @@ def _er1_plan(
         )
         SELECT doc_id, lang, stop_ratio, rn, cnt
         FROM r WHERE rn * 4 <= cnt
-        ORDER BY doc_id
     """,
     doc=(
         "Group-relative quantile filter: keep each language's top quartile "
@@ -462,6 +458,7 @@ def _er1_plan(
         "is the oracle-replayable ground truth the sketch is graded against."
     ),
     tags=("text", "quality", "curation", "window"),
+    order=("doc_id",),
 )
 def q_x14(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -480,7 +477,6 @@ def q_x14(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").over(wc).alias("cnt"),
         )
         .where(F.col("rn") * 4 <= F.col("cnt"))
-        .orderBy("doc_id")
     )
 
 
@@ -504,7 +500,6 @@ def q_x14(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(array_to_string(list_slice(t, i * 24 + 1, i * 24 + 32), ' '))
                    AS chunk_md5
         FROM c, LATERAL unnest(range(0, n_chunks)) AS u(i)
-        ORDER BY doc_id, chunk_idx
     """,
     doc=(
         "Overlapping-window chunking (RAG / long-context training export): "
@@ -517,6 +512,7 @@ def q_x14(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sibling; this is the retrieval-index layout."
     ),
     tags=("sampling", "curation", "packing", "chunking"),
+    order=("doc_id", "chunk_idx"),
 )
 def q_x15(spark: SparkSession, sf_dir: str) -> DataFrame:
     C, S = 32, 24
@@ -543,7 +539,6 @@ def q_x15(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.array_join(F.slice(F.col("t"), F.col("chunk_idx") * S + 1, C), " ")
             ).alias("chunk_md5"),
         )
-        .orderBy("doc_id", "chunk_idx")
     )
 
 
@@ -567,7 +562,7 @@ _QUALITY_RULES = "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12
         )
         SELECT doc_id, n_tokens, mean_tok_len, alpha_frac, symbol_frac,
                ({_QUALITY_RULES}) AS keep
-        FROM m ORDER BY doc_id
+        FROM m
     """,
     doc=(
         "Gopher/C4 rule-based quality pre-filter: token count, mean token "
@@ -579,10 +574,11 @@ _QUALITY_RULES = "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12
     ),
     tags=("text", "quality", "curation"),
     bench=True,
+    order=("doc_id",),
 )
 def q_x16(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = C.heuristic_quality(_docs(spark, sf_dir), "doc_id", "text")
-    return m.withColumn("keep", F.expr(_QUALITY_RULES)).orderBy("doc_id")
+    return m.withColumn("keep", F.expr(_QUALITY_RULES))
 
 
 @register(
@@ -605,7 +601,6 @@ def q_x16(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / COUNT(*) AS dup_frac
         FROM e JOIN nd USING (whash)
         GROUP BY e.doc_id
-        ORDER BY doc_id
     """,
     doc=(
         "Exact substring-span deduplication signal (Lee et al. 2022): "
@@ -620,6 +615,7 @@ def q_x16(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("text", "dedup", "curation"),
     bench=True,
+    order=("doc_id",),
 )
 def q_x17(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -644,7 +640,6 @@ def q_x17(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "dup_frac", F.col("n_dup_windows").cast("double") / F.col("n_windows")
         )
-        .orderBy("doc_id")
     )
 
 
@@ -691,7 +686,6 @@ _DSIR_TARGET = "src0"
                ROUND(list_aggregate(list(term ORDER BY b), 'sum'), 9) AS log_weight
         FROM terms
         GROUP BY doc_id, source
-        ORDER BY doc_id
     """,
     doc=(
         "DSIR-style importance weight (Xie et al. 2023): hashed bigram "
@@ -707,6 +701,7 @@ _DSIR_TARGET = "src0"
         "addition order — and therefore every output bit — matches."
     ),
     tags=("sampling", "curation", "statistics"),
+    order=("doc_id",),
 )
 def q_x18(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -773,7 +768,6 @@ def q_x18(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("log_weight"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -793,7 +787,7 @@ _QUOTA_CAP = 60
         )
         SELECT doc_id, lang, CAST(rk AS BIGINT) AS rk,
                rk <= {_QUOTA_CAP} AS kept
-        FROM r ORDER BY doc_id
+        FROM r
     """,
     doc=(
         "Per-language hard quota capping: keep at most N docs per "
@@ -807,6 +801,7 @@ _QUOTA_CAP = 60
         "on one partition's sort spill."
     ),
     tags=("sampling", "curation"),
+    order=("doc_id",),
 )
 def q_x19(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -821,7 +816,6 @@ def q_x19(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).cast("long").alias("rk"),
         )
         .withColumn("kept", F.col("rk") <= _QUOTA_CAP)
-        .orderBy("doc_id")
     )
 
 
@@ -861,7 +855,7 @@ def q_x19(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(len(tk) AS BIGINT) AS n_tokens,
                CAST(len(tk) - len(kept) AS BIGINT) AS n_removed,
                COALESCE(array_to_string(kept, ' '), '') AS clean_text
-        FROM k ORDER BY doc_id
+        FROM k
     """,
     doc=(
         "Span-level dedup REMOVAL (Lee et al. 2022's cut step, not just "
@@ -874,11 +868,12 @@ def q_x19(spark: SparkSession, sf_dir: str) -> DataFrame:
         "with the identical comprehension."
     ),
     tags=("text", "dedup", "curation"),
+    order=("doc_id",),
 )
 def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.remove_duplicated_spans(
         _docs(spark, sf_dir), "doc_id", "text", w=8
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -939,7 +934,6 @@ def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
         FROM mixed
         GROUP BY shard_id
-        ORDER BY shard_id
     """,
     doc=(
         "The END-TO-END curation pipeline as one declarative plan: "
@@ -954,6 +948,7 @@ def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("curation", "pipeline", "dedup", "sampling"),
     bench=True,
+    order=("shard_id",),
 )
 def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -985,7 +980,6 @@ def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_tok").alias("total_tokens"),
         )
-        .orderBy("shard_id")
     )
 
 
@@ -1014,7 +1008,6 @@ def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
                      / SUM(n), 9) AS nll_per_token
         FROM terms
         GROUP BY doc_id
-        ORDER BY doc_id
     """,
     doc=(
         "LM-perplexity quality filter (the CCNet shape, with the corpus "
@@ -1030,6 +1023,7 @@ def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vocabulary co-occurrence, not doc pairs; one groupBy(doc) after."
     ),
     tags=("text", "quality", "curation", "statistics"),
+    order=("doc_id",),
 )
 def q_x25(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -1080,7 +1074,6 @@ def q_x25(spark: SparkSession, sf_dir: str) -> DataFrame:
                 9,
             ).alias("nll_per_token"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1093,7 +1086,6 @@ def q_x25(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM part a JOIN part b ON a.p_partkey < b.p_partkey
         WHERE abs(len(a.p_name) - len(b.p_name)) <= 2
           AND levenshtein(a.p_name, b.p_name) <= 2
-        ORDER BY key_a, key_b
     """,
     doc=(
         "Blocking-free edit-distance self-join via q-gram PREFIX "
@@ -1111,6 +1103,7 @@ def q_x25(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("dedup", "entity-resolution", "fuzzy", "strings"),
     bench=True,
+    order=("key_a", "key_b"),
 )
 def q_er2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate generation + verify live in operators/blocking.
@@ -1129,7 +1122,7 @@ def q_er2(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = table(spark, sf_dir, "part")
     return prefix_filter_edit_join(
         parts, "p_partkey", "p_name", q=3, d=2
-    ).orderBy("key_a", "key_b")
+    )
 
 
 # --- Fellegi–Sunter probabilistic record linkage (q_er3) ----------------
@@ -1211,7 +1204,6 @@ def _fs_md5_sql(salt: str) -> str:
                CASE WHEN weight >= {_FS_MATCH} THEN 'match'
                     ELSE 'possible' END AS cls
         FROM scored WHERE weight >= {_FS_POSSIBLE}
-        ORDER BY key_a, key_b
     """,
     doc=(
         "Fellegi–Sunter probabilistic record linkage over two 'sources' "
@@ -1243,6 +1235,7 @@ def _fs_md5_sql(salt: str) -> str:
     ),
     tags=("entity-resolution", "linkage", "dedup", "statistics"),
     bench=True,
+    order=("key_a", "key_b"),
 )
 def q_er3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer")
@@ -1347,7 +1340,6 @@ def q_er3(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("possible")
             .alias("cls"),
         )
-        .orderBy("key_a", "key_b")
     )
 
 
@@ -1387,7 +1379,6 @@ def q_er3(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(k.keep) AS DOUBLE) / r.n AS kept_frac
         FROM kept k JOIN r USING (source)
         GROUP BY source, r.n, r.rate
-        ORDER BY source
     """,
     doc=(
         "Temperature-based mixture sampling (tau = 0.5, the multilingual-"
@@ -1403,6 +1394,7 @@ def q_er3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "map-side hash compare — one shuffle on source, no RNG state."
     ),
     tags=("sampling", "curation", "mixture"),
+    order=("source",),
 )
 def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -1456,7 +1448,6 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_kept",
             "kept_frac",
         )
-        .orderBy("source")
     )
 
 
@@ -1489,7 +1480,6 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) % 16 AS shard_id,
                doc_id
         FROM dedup
-        ORDER BY shard_id, doc_id
     """,
     doc=(
         "The STREAMING curation loop's shard membership, driver-checked "
@@ -1507,6 +1497,7 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anti-join scans O(|batch buckets|/N) of the table at 100 TB."
     ),
     tags=("streaming", "curation", "dedup"),
+    order=("shard_id", "doc_id"),
 )
 def q_x36(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
@@ -1556,7 +1547,6 @@ def q_x36(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("shard_id").cast("long").alias("shard_id"),
                 F.col("doc_id").cast("long").alias("doc_id"),
             )
-            .orderBy("shard_id", "doc_id")
         )
         # Small result (one row per surviving doc): pin it so the tmp
         # dirs (input chunks, checkpoint, snapshot state, shard export)

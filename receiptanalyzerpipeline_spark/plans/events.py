@@ -32,13 +32,13 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, in microseconds
                MAX(CAST(props->>'k' AS BIGINT)) AS max_k
         FROM events
         GROUP BY event_type
-        ORDER BY event_type
     """,
     doc=(
         "JSON property extraction + aggregation — the other_data JSON column pattern "
         "(models.py:17, SURVEY F7/F12/Q-F3)."
     ),
     tags=("json", "agg"),
+    order=("event_type",),
 )
 def q_f3(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -52,7 +52,6 @@ def q_f3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("k").alias("min_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -66,7 +65,6 @@ def q_f3(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         FROM events
         GROUP BY 1, 2, 3
-        ORDER BY window_start, event_type
     """,
     doc=(
         "1-hour tumbling event-time window, batch-equivalent of "
@@ -74,6 +72,7 @@ def q_f3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("window-time", "agg", "streaming-equivalent"),
     bench=True,
+    order=("window_start", "event_type"),
 )
 def q_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -91,7 +90,6 @@ def q_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -114,7 +112,6 @@ def q_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         FROM assigned
         GROUP BY 1, 2, 3
-        ORDER BY window_start, event_type
     """,
     doc=(
         "Sliding event-time window (1 h window, 30 min slide): each event in "
@@ -122,6 +119,7 @@ def q_t1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(SURVEY T6). Oracle assigns the two bucket starts explicitly."
     ),
     tags=("window-time", "agg", "streaming-equivalent"),
+    order=("window_start", "event_type"),
 )
 def q_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -139,7 +137,6 @@ def q_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             "sum_value",
         )
-        .orderBy("window_start", "event_type")
     )
 
 
@@ -153,13 +150,13 @@ def q_t5(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM events
         ) t
         WHERE rn = 1
-        ORDER BY event_id
     """,
     doc=(
         "Keyed dedup with a deterministic survivor (first by ts) — the engine form of "
         "dropDuplicates / rename-to-hash collision (anarcptlib.py:155-159, SURVEY T7/Q-T2)."
     ),
     tags=("dedup", "streaming-equivalent"),
+    order=("event_id",),
 )
 def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -169,7 +166,6 @@ def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .drop("rn")
-        .orderBy("event_id")
     )
 
 
@@ -197,7 +193,6 @@ def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_events
         FROM sessions
         GROUP BY user_id, session_id
-        ORDER BY user_id, session_start
     """,
     doc=(
         "Native session windows: session_window(ts, '30 minutes') — Spark's "
@@ -206,6 +201,7 @@ def q_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Testdata has no exact-30min gaps, so the >=-gap oracle is exact."
     ),
     tags=("window-time", "sessionization", "streaming-equivalent"),
+    order=("user_id", "session_start"),
 )
 def q_t4(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -218,7 +214,6 @@ def q_t4(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.end").alias("session_end"),
             "n_events",
         )
-        .orderBy("user_id", "session_start")
     )
 
 
@@ -250,11 +245,11 @@ def q_t4(spark: SparkSession, sf_dir: str) -> DataFrame:
                MAX(ts) AS session_end
         FROM sessions
         GROUP BY user_id, session_id
-        ORDER BY user_id, session_id
     """,
     doc="Gap-based sessionization (30-min gaps) via lag + cumulative sum (SURVEY Q-T3).",
     tags=("window", "sessionization", "streaming-equivalent"),
     bench=True,
+    order=("user_id", "session_id"),
 )
 def q_t3(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -276,7 +271,6 @@ def q_t3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -312,7 +306,6 @@ _WEEK_US = 7 * 24 * 3600 * 1_000_000
         FROM u LEFT JOIN v USING (user_id)
                LEFT JOIN c USING (user_id)
                LEFT JOIN p USING (user_id)
-        ORDER BY user_id
     """,
     doc=(
         "Ordered conversion funnel (view → later click → later purchase "
@@ -324,6 +317,7 @@ _WEEK_US = 7 * 24 * 3600 * 1_000_000
         "100 TB; DuckDB replays the same CTE chain."
     ),
     tags=("events", "funnel", "join", "agg"),
+    order=("user_id",),
 )
 def q_t6(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -359,7 +353,6 @@ def q_t6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, "user_id", "left")
         .join(p, "user_id", "left")
         .select("user_id", "view_ts", "click_ts", "purchase_ts", stage.alias("stage"))
-        .orderBy("user_id")
     )
 
 
@@ -382,7 +375,6 @@ def q_t6(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_users
         FROM a JOIN f USING (user_id)
         GROUP BY 1, 2
-        ORDER BY cohort_week, week_offset
     """,
     doc=(
         "Weekly cohort retention triangle: cohort = ISO week of each "
@@ -394,6 +386,7 @@ def q_t6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and engine-portable."
     ),
     tags=("events", "cohort", "agg", "window"),
+    order=("cohort_week", "week_offset"),
 )
 def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -410,7 +403,6 @@ def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("cohort_week", "week_offset")
         .agg(F.count("*").alias("n_users"))
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -426,7 +418,6 @@ def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
                    PARTITION BY user_id ORDER BY ts, event_id
                ) IS NULL) AS is_current
         FROM events
-        ORDER BY user_id, valid_from, event_id
     """,
     doc=(
         "SCD-type-2 dimension build: each per-user change event becomes a "
@@ -438,6 +429,7 @@ def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sources/sinks.upsert_by_key)."
     ),
     tags=("events", "window", "dimension"),
+    order=("user_id", "valid_from", "event_id"),
 )
 def q_w4(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -452,5 +444,4 @@ def q_w4(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt.alias("valid_to"),
             nxt.isNull().alias("is_current"),
         )
-        .orderBy("user_id", "valid_from", "event_id")
     )

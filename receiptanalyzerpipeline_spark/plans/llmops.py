@@ -67,10 +67,11 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT lang, COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS total_chars,
                CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
-        FROM documents GROUP BY lang ORDER BY lang
+        FROM documents GROUP BY lang
     """,
     doc="Per-language corpus stats (SURVEY Q-N1).",
     tags=("text", "agg"),
+    order=("lang",),
 )
 def q_n1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -81,7 +82,6 @@ def q_n1(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             (F.sum("n_chars").cast("double") / F.count("*")).alias("avg_chars"),
         )
-        .orderBy("lang")
     )
 
 
@@ -298,7 +298,6 @@ def q_d3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT id AS doc_id, CAST(MIN(r) AS BIGINT) AS cluster_id
         FROM reach GROUP BY id
-        ORDER BY doc_id
     """,
     doc=(
         "Near-dup CLUSTER resolution: MinHash-LSH pairs (q_d3's edges) "
@@ -311,6 +310,7 @@ def q_d3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "closure over the exhaustive exact-Jaccard pairs."
     ),
     tags=("dedup", "graph", "components"),
+    order=("doc_id",),
 )
 def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.components import connected_components
@@ -321,7 +321,7 @@ def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = connected_components(pairs.select("id_a", "id_b"))
     return labels.select(
         F.col("id").alias("doc_id"), F.col("component").alias("cluster_id")
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -367,7 +367,6 @@ def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY n_tokens DESC, doc_id) = 1
                    AS is_canonical
         FROM labeled
-        ORDER BY doc_id
     """,
     doc=(
         "Canonical-document selection per near-dup cluster: instead of "
@@ -383,6 +382,7 @@ def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "window over (cluster_id) — per-cluster state is O(1)."
     ),
     tags=("dedup", "curation", "graph"),
+    order=("doc_id",),
 )
 def q_d10(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.components import connected_components
@@ -404,7 +404,6 @@ def q_d10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         labeled.withColumn("is_canonical", F.row_number().over(w) == 1)
         .select("doc_id", "cluster_id", "n_tokens", "is_canonical")
-        .orderBy("doc_id")
     )
 
 
@@ -554,7 +553,6 @@ def q_d4b(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AS BIGINT) < 62259 THEN 'valid'
                     ELSE 'test' END AS split
         FROM keyed
-        ORDER BY doc_id
     """,
     doc=(
         "Leakage-safe deterministic train/valid/test split (90/5/5): the "
@@ -565,6 +563,7 @@ def q_d4b(spark: SparkSession, sf_dir: str) -> DataFrame:
         "closure + the md5 bucket math exactly."
     ),
     tags=("sampling", "split", "dedup", "north-star"),
+    order=("doc_id",),
 )
 def q_x7(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.components import connected_components
@@ -587,7 +586,7 @@ def q_x7(spark: SparkSession, sf_dir: str) -> DataFrame:
         deterministic_split(
             F.col("split_key"), {"train": 0.90, "valid": 0.05, "test": 0.05}
         ).alias("split"),
-    ).orderBy("doc_id")
+    )
 
 
 @register(
@@ -617,7 +616,6 @@ def q_x7(spark: SparkSession, sf_dir: str) -> DataFrame:
                        '<EMAIL>', 'g'),
                    '\+?[0-9][0-9 ()\-]{6,}[0-9]', '<PHONE>', 'g') AS redacted
         FROM seeded
-        ORDER BY doc_id
     """,
     doc=(
         "PII scrubbing (training-data hygiene, SURVEY N6 family): emails "
@@ -627,6 +625,7 @@ def q_x7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "transformation; counts verified alongside the redacted text."
     ),
     tags=("text", "pii", "redaction"),
+    order=("doc_id",),
 )
 def q_x8(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -648,7 +647,6 @@ def q_x8(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.count_phones(F.col("txt")).alias("n_phones"),
             T.redact_pii(F.col("txt")).alias("redacted"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -753,7 +751,6 @@ def q_n2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT q_id, vec_id, sim, CAST(rank AS BIGINT) AS rank
         FROM ranked WHERE rank <= 3
-        ORDER BY q_id, rank
     """,
     doc=(
         "LSH-bucketed ANN top-3, fully hash-checked: hyperplane signs from "
@@ -768,6 +765,7 @@ def q_n2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("similarity", "embedding", "ann"),
     bench=True,
+    order=("q_id", "rank"),
 )
 def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -775,7 +773,7 @@ def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     topk = S.lsh_bucketed_topk(emb, probes, k=3)
-    return topk.withColumn("rank", F.col("rank").cast("long")).orderBy("q_id", "rank")
+    return topk.withColumn("rank", F.col("rank").cast("long"))
 
 
 @register(
@@ -796,7 +794,7 @@ def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM pairs
         )
         SELECT q_id, vec_id, sim, rank, TRUE AS ivf_recall_ok
-        FROM ranked WHERE rank <= 3 ORDER BY q_id, rank
+        FROM ranked WHERE rank <= 3
     """,
     doc=(
         "IVF approximate top-3 with the invariant-as-data oracle pattern "
@@ -815,6 +813,7 @@ def q_x5(spark: SparkSession, sf_dir: str) -> DataFrame:
         "three rounds of 'no_oracle' rows could not."
     ),
     tags=("similarity", "embedding", "ann", "ivf"),
+    order=("q_id", "rank"),
 )
 def q_x6(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators import ivf
@@ -832,7 +831,7 @@ def q_x6(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = exact.join(
         approx.select("q_id", "vec_id"), ["q_id", "vec_id"], "left_semi"
     ).agg((F.count(F.lit(1)) >= F.lit(18)).alias("ivf_recall_ok"))
-    return exact.crossJoin(F.broadcast(hits)).orderBy("q_id", "rank")
+    return exact.crossJoin(F.broadcast(hits))
 
 
 @register(
@@ -909,7 +908,6 @@ def q_d6(spark: SparkSession, sf_dir: str) -> DataFrame:
                (p.id_b IS NULL) AS kept
         FROM sigs s
         LEFT JOIN (SELECT DISTINCT id_b FROM pairs) p ON p.id_b = s.vec_id
-        ORDER BY s.vec_id
     """,
     doc=(
         "SemDeDup-shaped semantic dedup: hyperplane-LSH buckets (md5-"
@@ -922,6 +920,7 @@ def q_d6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket equi-join, never corpus x corpus."
     ),
     tags=("dedup", "similarity", "embedding", "semdedup"),
+    order=("vec_id",),
 )
 def q_d8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The SemDeDup bucket self-join runs over DISTINCT vectors and the
@@ -991,7 +990,6 @@ def q_d8(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
             F.coalesce(~F.col("is_dropped"), F.lit(True)).alias("kept"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -1044,7 +1042,6 @@ def q_d8(spark: SparkSession, sf_dir: str) -> DataFrame:
                     WHEN b.doc_id IN (SELECT bid FROM near) THEN 'near_dup'
                     ELSE 'new' END AS status
         FROM batch b
-        ORDER BY doc_id
     """,
     doc=(
         "Incremental corpus dedup: a deterministic md5-sampled 'incoming "
@@ -1056,6 +1053,7 @@ def q_d8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inverted-index join (operators/dedup.py:incremental_dedup_status)."
     ),
     tags=("dedup", "curation", "incremental"),
+    order=("doc_id",),
 )
 def q_d9(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select("doc_id", "text")
@@ -1078,7 +1076,7 @@ def q_d9(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("text"),
         )
     )
-    return D.incremental_dedup_status(batch, docs, "doc_id", "text").orderBy("doc_id")
+    return D.incremental_dedup_status(batch, docs, "doc_id", "text")
 
 
 def _pagerank_oracle() -> str:
@@ -1133,7 +1131,7 @@ def _pagerank_oracle() -> str:
         ),{iters}
         dummy AS (SELECT 1)
         SELECT node AS doc_id, CAST(pr AS DOUBLE) AS pagerank
-        FROM pr3 ORDER BY node
+        FROM pr3
     """
 
 
@@ -1154,6 +1152,7 @@ def _pagerank_oracle() -> str:
         "(operators/components.py:pagerank). One shuffle per iteration."
     ),
     tags=("graph", "pagerank", "iterative", "dedup"),
+    order=("doc_id",),
 )
 def q_g1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.components import pagerank
@@ -1167,7 +1166,6 @@ def q_g1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pagerank(edges, iterations=3)
         .select(F.col("node").alias("doc_id"), "pagerank")
-        .orderBy("doc_id")
     )
 
 
@@ -1208,7 +1206,6 @@ def q_g1(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT label, vec_id, dist2, CAST(rk AS BIGINT) AS rk
         FROM ranked WHERE rk <= 5
-        ORDER BY label, rk
     """,
     doc=(
         "Embedding-space outlier detection (prototype-distance quality "
@@ -1225,6 +1222,7 @@ def q_g1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "and broadcasts back; one window for the top-5."
     ),
     tags=("similarity", "embedding", "quality"),
+    order=("label", "rk"),
 )
 def q_x20(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -1265,7 +1263,6 @@ def q_x20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= 5)
-        .orderBy("label", "rk")
     )
 
 
@@ -1335,7 +1332,6 @@ def q_x20(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT anchor_id, neg_id, sim, CAST(rank AS BIGINT) AS rank
         FROM ranked WHERE rank <= 3
-        ORDER BY anchor_id, rank
     """,
     doc=(
         "Contrastive hard-negative mining: per anchor, the top-3 most-"
@@ -1350,12 +1346,11 @@ def q_x20(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pipeline is hash-verified."
     ),
     tags=("similarity", "embedding", "contrastive"),
+    order=("anchor_id", "rank"),
 )
 def q_x21(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = S.hard_negative_pairs(_emb(spark, sf_dir), k=3)
-    return pairs.withColumn("rank", F.col("rank").cast("long")).orderBy(
-        "anchor_id", "rank"
-    )
+    return pairs.withColumn("rank", F.col("rank").cast("long"))
 
 
 def _kmeans_ctes(k: int = 8, iters: int = 2, dims: int = 64) -> str:
@@ -1422,7 +1417,6 @@ def _kmeans_oracle(k: int = 8, iters: int = 2, dims: int = 64) -> str:
         + f"""
         SELECT vec_id, CAST(cid AS BIGINT) AS cluster, dist2
         FROM a{iters}
-        ORDER BY vec_id
     """
     )
 
@@ -1446,6 +1440,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 2, dims: int = 64) -> str:
         "q_x6's IVF."
     ),
     tags=("similarity", "embedding", "clustering", "iterative"),
+    order=("vec_id",),
 )
 def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.kmeans import portable_kmeans
@@ -1454,7 +1449,7 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, asg = portable_kmeans(emb, k=8, iters=2)
     return asg.select(
         "vec_id", F.col("cid").cast("long").alias("cluster"), "dist2"
-    ).orderBy("vec_id")
+    )
 
 
 @register(
@@ -1464,7 +1459,6 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || i), 1, 8))
                     AS BIGINT) / 4294967296.0 * 2 - 1 AS val
         FROM documents, LATERAL unnest(range(0, 16)) AS u(i)
-        ORDER BY doc_id, dim
     """,
     doc=(
         "The embedding-generation boundary, hash-checked end to end: an "
@@ -1478,6 +1472,7 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
         "IEEE ops on identical operands — bit-identical across engines."
     ),
     tags=("embedding", "udf", "multimodal"),
+    order=("doc_id", "dim"),
 )
 def q_x26(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.embedder import (
@@ -1493,7 +1488,7 @@ def q_x26(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.posexplode("embedding").alias("dim", "val")
     ).select(
         "doc_id", F.col("dim").cast("long").alias("dim"), "val"
-    ).orderBy("doc_id", "dim")
+    )
 
 
 def _ivf_portable_oracle() -> str:
@@ -1539,7 +1534,6 @@ def _ivf_portable_oracle() -> str:
         )
         SELECT q_id, vec_id, sim, CAST(rank AS BIGINT) AS rank
         FROM ranked WHERE rank <= 3
-        ORDER BY q_id, rank
     """
     )
 
@@ -1561,6 +1555,7 @@ def _ivf_portable_oracle() -> str:
         "nested loop."
     ),
     tags=("similarity", "embedding", "ann", "ivf", "iterative"),
+    order=("q_id", "rank"),
 )
 def q_x27(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.kmeans import portable_kmeans
@@ -1605,7 +1600,6 @@ def q_x27(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(wr).cast("long"))
         .where(F.col("rank") <= 3)
-        .orderBy("q_id", "rank")
     )
 
 
@@ -1727,7 +1721,6 @@ def _pq_oracle(
         )
         SELECT q_id, vec_id, qdist, CAST(rank AS BIGINT) AS rank
         FROM rranked WHERE rank <= {top_k}
-        ORDER BY q_id, rank
     """
     return body
 
@@ -1755,6 +1748,7 @@ def _pq_oracle(
     ),
     tags=("similarity", "embedding", "ann", "pq", "iterative"),
     bench=True,
+    order=("q_id", "rank"),
 )
 def q_x30(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.pq import (
@@ -1771,7 +1765,7 @@ def q_x30(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pq_search_rerank(
         probes, codebooks, codes, emb, dims=64, m=8, shortlist=50, top_k=5
-    ).orderBy("q_id", "rank")
+    )
 
 
 def _bpe_oracle(n_merges: int = 8) -> str:
@@ -1821,7 +1815,7 @@ def _bpe_oracle(n_merges: int = 8) -> str:
         f" pair_count FROM t{i}"
         for i in range(1, n_merges + 1)
     )
-    return body + f" SELECT * FROM ({merges}) ORDER BY step"
+    return body + f" SELECT * FROM ({merges})"
 
 
 @register(
@@ -1845,6 +1839,7 @@ def _bpe_oracle(n_merges: int = 8) -> str:
         "pattern as the portable k-means / PQ codebooks)."
     ),
     tags=("text", "tokenizer", "curation", "iterative"),
+    order=("step",),
 )
 def q_x31(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.operators.bpe import bpe_train
@@ -1994,7 +1989,6 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(score_nano AS DOUBLE) / {_BM25_NANO} AS score,
                CAST(rk AS BIGINT) AS rk
         FROM ranked WHERE rk <= 5
-        ORDER BY qid, rk
     """,
     doc=(
         "BM25 ranked retrieval: top-5 documents for 8 fixed two-term "
@@ -2012,6 +2006,7 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("text", "retrieval", "ranking", "topk"),
     bench=True,
+    order=("qid", "rk"),
 )
 def q_x28(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = _bm25_per_doc(spark, sf_dir)
@@ -2026,7 +2021,6 @@ def q_x28(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("score_nano").cast("double") / F.lit(_BM25_NANO)).alias("score"),
             "rk",
         )
-        .orderBy("qid", "rk")
     )
 
 
@@ -2081,7 +2075,7 @@ RRF_MICRO = 1000000.0  # micro-quantized 1/(K+rank) -> exact BIGINT sums
                                            ORDER BY rrf_micro DESC, doc_id)
                         AS BIGINT) AS rank
             FROM fused
-        ) WHERE rank <= 10 ORDER BY qid, rank
+        ) WHERE rank <= 10
     """,
     doc=(
         "Hybrid retrieval: BM25 keyword ranking and dense query-by-example "
@@ -2103,6 +2097,7 @@ RRF_MICRO = 1000000.0  # micro-quantized 1/(K+rank) -> exact BIGINT sums
     ),
     tags=("retrieval", "similarity", "hybrid", "llm"),
     bench=True,
+    order=("qid", "rank"),
 )
 def q_x32(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = _bm25_per_doc(spark, sf_dir)
@@ -2146,7 +2141,6 @@ def q_x32(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src",
             "rank",
         )
-        .orderBy("qid", "rank")
     )
 
 
@@ -2201,7 +2195,6 @@ _W_SQL = """CASE source WHEN 'src0' THEN 0.2 WHEN 'src1' THEN 0.1
                COALESCE(k.kept_tokens, 0) AS kept_tokens,
                b.target >= b.t_tokens AS exhausted
         FROM bounds b LEFT JOIN kept k USING (source)
-        ORDER BY source
     """,
     doc=(
         "Token-budget mixture allocator: given a corpus token budget "
@@ -2222,6 +2215,7 @@ _W_SQL = """CASE source WHEN 'src0' THEN 0.2 WHEN 'src1' THEN 0.1
         "k-source broadcast — no corpus-sized shuffle anywhere."
     ),
     tags=("curation", "mixture", "llm"),
+    order=("source",),
 )
 def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
@@ -2282,7 +2276,6 @@ def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("kept_tokens"), F.lit(0)).cast("long").alias("kept_tokens"),
             (F.col("target") >= F.col("t_tokens")).alias("exhausted"),
         )
-        .orderBy("source")
     )
 
 
@@ -2329,7 +2322,6 @@ def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE FLOOR(1000000.0 / h.first_rank)
                END AS DOUBLE) / 1000000.0 AS mrr
         FROM rel r LEFT JOIN hits h ON r.qid = h.qid
-        ORDER BY qid
     """,
     doc=(
         "Retrieval evaluation: recall@10 and MRR@10 for the dense "
@@ -2345,6 +2337,7 @@ def q_x33(spark: SparkSession, sf_dir: str) -> DataFrame:
         "eval-query set, so the probe side never grows with the corpus)."
     ),
     tags=("retrieval", "evaluation", "llm"),
+    order=("qid",),
 )
 def q_x34(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -2395,7 +2388,6 @@ def q_x34(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 1000000.0
             ).alias("mrr"),
         )
-        .orderBy("qid")
     )
 
 

@@ -67,7 +67,6 @@ def q_m1(spark: SparkSession, sf_dir: str) -> DataFrame:
             ('scan_a', 'scan_b', CAST(1 AS BIGINT)),
             ('scan_a_copy', 'scan_b', CAST(1 AS BIGINT))
         ) AS t(id_a, id_b, hamming)
-        ORDER BY id_a, id_b
     """,
     doc=(
         "Near-duplicate images by aHash Hamming ≤ 2 via pigeonhole-banded "
@@ -75,11 +74,10 @@ def q_m1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "checkerboard excluded."
     ),
     tags=("multimodal", "dedup", "golden"),
+    order=("id_a", "id_b"),
 )
 def q_m2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     pairs = ahash_neardup_pairs(with_ahash(images_df(spark)), max_hamming=2)
-    return pairs.withColumn("hamming", F.col("hamming").cast("long")).orderBy(
-        "id_a", "id_b"
-    )
+    return pairs.withColumn("hamming", F.col("hamming").cast("long"))

@@ -32,13 +32,13 @@ from receiptanalyzerpipeline_spark.plans.registry import register
                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         FROM lineitem
         GROUP BY CUBE (l_returnflag, l_linestatus)
-        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
     doc=(
         "CUBE over (returnflag, linestatus): all 4 grouping sets in one "
         "Expand + single hash aggregate (one shuffle total)."
     ),
     tags=("agg", "cube", "olap"),
+    order=("l_returnflag", "l_linestatus"),
 )
 def q_a6(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -47,9 +47,6 @@ def q_a6(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first()
         )
     )
 
@@ -63,13 +60,13 @@ def q_a6(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS sum_price
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
     doc=(
         "Explicit GROUPING SETS ((returnflag),(linestatus)) — disjoint "
         "single-column sets, NOT derivable from cube/rollup shorthand."
     ),
     tags=("agg", "grouping-sets", "olap"),
+    order=("l_returnflag", "l_linestatus"),
 )
 def q_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -78,9 +75,6 @@ def q_a7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_price"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first()
         )
     )
 
@@ -138,7 +132,6 @@ def q_a8(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             GROUP BY l_returnflag
         )
-        ORDER BY l_returnflag
     """,
     doc=(
         "Statistical profile per returnflag: OLS slope/intercept and "
@@ -153,6 +146,7 @@ def q_a8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mergeable, so the same query works as a streaming snapshot."
     ),
     tags=("agg", "statistics", "olap"),
+    order=("l_returnflag",),
 )
 def q_a10(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -175,7 +169,7 @@ def q_a10(spark: SparkSession, sf_dir: str) -> DataFrame:
         slope.alias("slope"),
         ((sy - slope * sx) / n).alias("intercept"),
         ((n * sxy - sx * sy) / F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))).alias("r"),
-    ).orderBy("l_returnflag")
+    )
 
 
 @register(
@@ -189,7 +183,6 @@ def q_a10(spark: SparkSession, sf_dir: str) -> DataFrame:
                              AS DOUBLE) / COUNT(*) AS DECIMAL(18,4))
             FROM part p2 WHERE p2.p_brand = p.p_brand
         )
-        ORDER BY p_partkey
     """,
     doc=(
         "Correlated-scalar-subquery semantics (parts above their brand's "
@@ -199,6 +192,7 @@ def q_a10(spark: SparkSession, sf_dir: str) -> DataFrame:
         "registry decimal-sum/double-divide determinism rule."
     ),
     tags=("subquery", "agg", "join"),
+    order=("p_partkey",),
 )
 def q_p3(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part").withColumn(
@@ -213,7 +207,6 @@ def q_p3(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.join(F.broadcast(brand_avg), p["p_brand"] == F.col("b_brand"))
         .where(F.col("price") > F.col("avg_price"))
         .select("p_partkey", "p_brand", F.col("price").cast("double").alias("price"))
-        .orderBy("p_partkey")
     )
 
 
@@ -254,6 +247,7 @@ def q_a9(spark: SparkSession, sf_dir: str) -> DataFrame:
         "materializes the REUSABLE sketch."
     ),
     tags=("agg", "distinct", "sketch", "mergeable"),
+    order=("o_orderpriority",),
 )
 def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
@@ -268,7 +262,7 @@ def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("_ALL_").alias("o_orderpriority"),
         F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("long").alias("distinct_custkeys"),
     ).select("o_orderpriority", "distinct_custkeys")
-    return est.unionByName(union).orderBy("o_orderpriority")
+    return est.unionByName(union)
 
 
 @register(
@@ -352,7 +346,7 @@ def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
                       GROUP BY c_nationkey, c_mktsegment,
                                FLOOR(c_acctbal / 1000.0))
             ) AS _b
-        ) AS _u ORDER BY part, grp
+        ) AS _u
     """,
     doc=(
         "Sketch-accuracy surface: every approximate operator (HLL++ "
@@ -381,6 +375,7 @@ def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "so the booleans are stable across runs and partition counts."
     ),
     tags=("agg", "sketch", "suite"),
+    order=("part", "grp"),
 )
 def q_a5_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -530,5 +525,4 @@ def q_a5_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(hll_all)
         .unionByName(cms)
         .unionByName(blk)
-        .orderBy("part", "grp")
     )

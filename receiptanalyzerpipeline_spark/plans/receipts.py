@@ -61,13 +61,13 @@ def other_repr(map_col) -> F.Column:
              'US Dollars', '')
         ) AS t(img_id, vendor_name, receiver_address, receipt_date,
                total, sub_total, tax_amount, currency, other_repr)
-        ORDER BY img_id
     """,
     doc=(
         "End-to-end receipt slice: nested AnalyzeExpense docs → flatten (P1) → "
         "last-wins pivot (A1) → receipt_summary golden rows (SURVEY Q-E1)."
     ),
     tags=("receipt", "golden"),
+    order=("img_id",),
 )
 def q_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary = pivot_receipt_summary(flatten_summary_fields(fixture_df(spark)))
@@ -81,7 +81,7 @@ def q_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tax_amount").cast("double").alias("tax_amount"),
         "currency",
         other_repr(F.col("other_data")).alias("other_repr"),
-    ).orderBy("img_id")
+    )
 
 
 @register(
@@ -91,7 +91,6 @@ def q_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
             ('a1b2c3d4e5f60718', CAST(1 AS BIGINT), 'COFFEE BEANS', CAST(12.99 AS DOUBLE), CAST(1 AS BIGINT)),
             ('a1b2c3d4e5f60718', CAST(2 AS BIGINT), 'OAT MILK', CAST(3.49 AS DOUBLE), CAST(1 AS BIGINT))
         ) AS t(img_id, line_no, item_name, price, quantity)
-        ORDER BY img_id, line_no
     """,
     doc=(
         "Line items natively from LineItemGroups (replaces the reference's "
@@ -99,6 +98,7 @@ def q_e1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "default on unparseable input."
     ),
     tags=("receipt", "golden"),
+    order=("img_id", "line_no"),
 )
 def q_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = extract_line_items(fixture_df(spark))
@@ -108,7 +108,7 @@ def q_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "item_name",
         F.col("price").cast("double").alias("price"),
         F.col("quantity").cast("long").alias("quantity"),
-    ).orderBy("img_id", "line_no")
+    )
 
 
 @register(
@@ -137,13 +137,13 @@ def q_e2(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE 'US Dollars'
                END AS currency
         FROM tagged
-        ORDER BY p_partkey
     """,
     doc=(
         "Money-parser roundtrip over the synthetic tables: format a decimal "
         "with a currency symbol, parse it back (reference F1/F2 semantics)."
     ),
     tags=("string", "money"),
+    order=("p_partkey",),
 )
 def q_f4(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.catalog import table
@@ -168,7 +168,6 @@ def q_f4(spark: SparkSession, sf_dir: str) -> DataFrame:
             money_amount(F.col("money_str")).cast("double").alias("amount"),
             money_currency_name(F.col("money_str")).alias("currency"),
         )
-        .orderBy("p_partkey")
     )
 
 
@@ -190,7 +189,6 @@ def q_f4(spark: SparkSession, sf_dir: str) -> DataFrame:
              'Pound Sterling', 'TABLE=7')
         ) AS t(img_id, vendor_name, receiver_address, receipt_date,
                total, sub_total, tax_amount, currency, other_repr)
-        ORDER BY img_id
     """,
     doc=(
         "Full S6 OCR boundary end-to-end as a driver-checked query "
@@ -203,6 +201,7 @@ def q_f4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pivot → receipt_summary golden rows keyed by ahash."
     ),
     tags=("receipt", "ocr", "multimodal", "golden"),
+    order=("img_id",),
 )
 def q_e3(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -245,4 +244,4 @@ def q_e3(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tax_amount").cast("double").alias("tax_amount"),
         "currency",
         other_repr(F.col("other_data")).alias("other_repr"),
-    ).orderBy("img_id")
+    )

@@ -20,9 +20,11 @@ datetime64 while Spark keeps Decimal objects / int64 / date objects):
   aggregation (decimal sums are exact ⇒ shuffle/partition order can't
   change the result); the FINAL column is cast DECIMAL→DOUBLE on both
   engines — one exact decimal value → one identical IEEE double.
-- Every query carries a total ORDER BY with a unique tiebreaker on both
-  sides, so output order is deterministic even though the driver's hash
-  sorts rows.
+- A query's presentation ORDER BY is declared once, in ``order``: the
+  builder and the oracle SQL are unsorted bodies, and ``Query.spark`` /
+  ``Query.oracle`` apply the same ascending, NULLS FIRST column list on
+  both engines. Sorts with semantics — top-k (sort + LIMIT), window
+  orderings, a sort feeding further computation — stay in the body.
 - Averages of decimals are computed as CAST(decimal_sum AS DOUBLE)/count:
   one IEEE division of identical operands — identical bits in both
   engines — instead of engine-specific decimal-division scale rules.
@@ -46,21 +48,39 @@ datetime64 while Spark keeps Decimal objects / int64 / date objects):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 SparkFn = Callable[[SparkSession, str], DataFrame]
 
 
-@dataclass(frozen=True)
 class Query:
-    name: str
-    spark: SparkFn
-    oracle: str | None  # ANSI SQL for DuckDB; None → driver does rows-only check
-    doc: str = ""
-    tags: tuple[str, ...] = ()
-    bench: bool = False  # part of the headline bench set (bench.py)
+    """One registered query: an unsorted Spark ``body`` and DuckDB
+    ``oracle_body``, presented in ``order`` by ``spark`` and ``oracle``."""
+
+    def __init__(
+        self,
+        name: str,
+        spark: SparkFn,
+        oracle: str | None,  # ANSI SQL for DuckDB; None → driver does rows-only check
+        doc: str = "",
+        tags: tuple[str, ...] = (),
+        bench: bool = False,  # part of the headline bench set (bench.py)
+        order: tuple[str, ...] = (),
+    ) -> None:
+        self.name, self.body, self.oracle_body = name, spark, oracle
+        self.doc, self.tags, self.bench, self.order = doc, tags, bench, order
+
+    def spark(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        df = self.body(spark, sf_dir)
+        return df.orderBy(*self.order) if self.order else df
+
+    @property
+    def oracle(self) -> str | None:
+        if self.oracle_body is None or not self.order:
+            return self.oracle_body
+        keys = ", ".join(f"{c} ASC NULLS FIRST" for c in self.order)
+        return f"SELECT * FROM (\n{self.oracle_body}\n) AS _q ORDER BY {keys}"
 
 
 REGISTRY: dict[str, Query] = {}
@@ -72,13 +92,15 @@ def register(
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,
+    order: tuple[str, ...] = (),
 ) -> Callable[[SparkFn], SparkFn]:
-    """Decorator: register a (spark_fn, oracle_sql) pair under ``name``."""
+    """Decorator: register an unsorted (spark_fn, oracle_sql) body pair
+    under ``name``, presented in ``order``."""
 
     def wrap(fn: SparkFn) -> SparkFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name=name, spark=fn, oracle=oracle, doc=doc, tags=tags, bench=bench)
+        REGISTRY[name] = Query(name, fn, oracle, doc, tags, bench, order)
         return fn
 
     return wrap

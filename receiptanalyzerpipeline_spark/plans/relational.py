@@ -61,10 +61,10 @@ def q_p1(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN o_totalprice > 100000 THEN 'big' ELSE 'small' END AS size_class,
                CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec
         FROM orders
-        ORDER BY o_orderkey
     """,
     doc="CASE/WHEN dispatch + decimal money cast (SURVEY P3, F1).",
     tags=("projection", "case"),
+    order=("o_orderkey",),
 )
 def q_p2(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
@@ -72,7 +72,7 @@ def q_p2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.when(F.col("o_totalprice") > 100000, "big").otherwise("small").alias("size_class"),
         dec2("o_totalprice").cast("double").alias("price_dec"),
-    ).orderBy("o_orderkey")
+    )
 
 
 def _morton_sql(x: str, y: str, bits: int) -> str:
@@ -95,7 +95,6 @@ def _morton_sql(x: str, y: str, bits: int) -> str:
                {_morton_sql("CAST(l_linenumber AS BIGINT)", "CAST(l_quantity AS BIGINT)", 6)} AS z
         FROM lineitem
         WHERE l_orderkey % 10 = 0
-        ORDER BY l_orderkey, l_linenumber
     """,
     doc=(
         "Morton (Z-order) cell id over (linenumber, quantity) — the exact "
@@ -103,6 +102,7 @@ def _morton_sql(x: str, y: str, bits: int) -> str:
         "cluster_by (SURVEY N7 layout policy), oracle-replayed arithmetically."
     ),
     tags=("projection", "layout"),
+    order=("l_orderkey", "l_linenumber"),
 )
 def q_p5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from receiptanalyzerpipeline_spark.sources.sinks import zvalue
@@ -116,7 +116,7 @@ def q_p5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").cast("long").alias("l_orderkey"),
         F.col("l_linenumber").cast("long").alias("l_linenumber"),
         z.alias("z"),
-    ).orderBy("l_orderkey", "l_linenumber")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -137,13 +137,13 @@ def q_p5(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_orders
         FROM orders
         GROUP BY o_custkey
-        ORDER BY o_custkey
     """,
     doc=(
         "KV-rows→wide-row pivot by conditional aggregation — the Spark form of the "
         "reference's per-receipt collapse (anarcptlib.py:44-78, SURVEY A1)."
     ),
     tags=("agg", "pivot"),
+    order=("o_custkey",),
 )
 def q_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
@@ -159,7 +159,6 @@ def q_a1(spark: SparkSession, sf_dir: str) -> DataFrame:
             bucket("5-LOW").cast("double").alias("low_max"),
             F.count("*").alias("n_orders"),
         )
-        .orderBy("o_custkey")
     )
 
 
@@ -197,11 +196,11 @@ def q_a2(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2001-09-01'
         GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
     """,
     doc="TPC-H Q1 shape: partial+final agg over the fact table (SURVEY Q-A3).",
     tags=("agg",),
     bench=True,
+    order=("l_returnflag", "l_linestatus"),
 )
 def q_a3(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -218,7 +217,6 @@ def q_a3(spark: SparkSession, sf_dir: str) -> DataFrame:
             avg_via_decimal(sum_qty, F.count("*")).alias("avg_qty"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -252,10 +250,10 @@ def q_a5(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN nation ON n_regionkey = r_regionkey
         JOIN customer ON c_nationkey = n_nationkey
         GROUP BY ROLLUP (r_name, n_name)
-        ORDER BY r_name NULLS FIRST, n_name NULLS FIRST
     """,
     doc="ROLLUP grouping sets over a broadcast dim chain (SURVEY A5).",
     tags=("agg", "rollup", "join"),
+    order=("r_name", "n_name"),
 )
 def q_a4(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.broadcast(table(spark, sf_dir, "region"))
@@ -268,7 +266,6 @@ def q_a4(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_cust"),
             F.sum(dec2("c_acctbal")).cast("double").alias("sum_bal"),
         )
-        .orderBy(F.col("r_name").asc_nulls_first(), F.col("n_name").asc_nulls_first())
     )
 
 
@@ -292,7 +289,6 @@ def q_a4(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND o_orderdate >= TIMESTAMP '1996-01-01'
           AND o_orderdate <  TIMESTAMP '1998-01-01'
         GROUP BY n_name
-        ORDER BY n_name
     """,
     doc=(
         "TPC-H Q5 shape: fact-fact shuffle join + broadcast dims; the engine form of "
@@ -300,6 +296,7 @@ def q_a4(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("join", "agg"),
     bench=True,
+    order=("n_name",),
 )
 def q_j1(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
@@ -324,7 +321,6 @@ def q_j1(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("revenue")
         )
-        .orderBy("n_name")
     )
 
 
@@ -341,7 +337,6 @@ def q_j1(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS mismatch
         FROM orders JOIN lineitem ON l_orderkey = o_orderkey
         GROUP BY o_orderkey, o_totalprice
-        ORDER BY o_orderkey
     """,
     doc=(
         "Header-vs-Σ(line items) reconciliation — receipt_summary.total vs "
@@ -349,6 +344,7 @@ def q_j1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("join", "agg"),
     bench=True,
+    order=("o_orderkey",),
 )
 def q_j2(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
@@ -374,7 +370,6 @@ def q_j2(spark: SparkSession, sf_dir: str) -> DataFrame:
             # reported columns are cast to DOUBLE (pandas-path hash contract).
             (F.abs(dec2("o_totalprice") - F.col("line_total_dec")) > 1.0).alias("mismatch"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -384,10 +379,10 @@ def q_j2(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT c_custkey, c_name
         FROM customer
         WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        ORDER BY c_custkey
     """,
     doc="LEFT ANTI join — the reference's dedup-by-collision as a plan op (SURVEY J2/J5).",
     tags=("join", "anti"),
+    order=("c_custkey",),
 )
 def q_j3(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
@@ -400,7 +395,6 @@ def q_j3(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
     )
 
 
@@ -410,10 +404,10 @@ def q_j3(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s_suppkey, s_name
         FROM supplier
         WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey)
-        ORDER BY s_suppkey
     """,
     doc="LEFT SEMI join (SURVEY J5).",
     tags=("join", "semi"),
+    order=("s_suppkey",),
 )
 def q_j4(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = table(spark, sf_dir, "supplier")
@@ -423,7 +417,6 @@ def q_j4(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         s.join(li, s.s_suppkey == li.l_suppkey, "left_semi")
         .select("s_suppkey", "s_name")
-        .orderBy("s_suppkey")
     )
 
 
@@ -447,10 +440,10 @@ def q_j4(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM customer
         ) t
         WHERE rn <= 3
-        ORDER BY c_mktsegment, rn
     """,
     doc="Ranking windows: top-3 per segment; 'latest receipt per vendor' shape (SURVEY §2.5).",
     tags=("window",),
+    order=("c_mktsegment", "rn"),
 )
 def q_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -470,7 +463,6 @@ def q_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.dense_rank().over(w_rank).cast("long").alias("drnk"),
         )
         .where(F.col("rn") <= 3)
-        .orderBy("c_mktsegment", "rn")
     )
 
 
@@ -486,11 +478,11 @@ def q_w1(spark: SparkSession, sf_dir: str) -> DataFrame:
                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                    AS DOUBLE) AS running_total
         FROM orders
-        ORDER BY o_orderkey
     """,
     doc="Analytic lag + running-frame sum per customer (SURVEY Q-W2).",
     tags=("window",),
     bench=True,
+    order=("o_orderkey",),
 )
 def q_w2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -505,7 +497,7 @@ def q_w2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
         .cast("double")
         .alias("running_total"),
-    ).orderBy("o_orderkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -555,10 +547,10 @@ def q_s1(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
         EXCEPT
         SELECT CAST(s_nationkey AS BIGINT) AS nationkey FROM supplier
-        ORDER BY nationkey
     """,
     doc="EXCEPT (distinct) — nations with customers but no suppliers (SURVEY Q-U1).",
     tags=("setop",),
+    order=("nationkey",),
 )
 def q_u1(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select(
@@ -567,7 +559,7 @@ def q_u1(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").cast("long").alias("nationkey")
     )
-    return c.subtract(s).orderBy("nationkey")
+    return c.subtract(s)
 
 
 @register(
@@ -581,10 +573,10 @@ def q_u1(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT DISTINCT CAST(c_nationkey AS BIGINT) AS nationkey, 'customer' AS src
             FROM customer
         ) t
-        ORDER BY nationkey, src
     """,
     doc="UNION distinct + INTERSECT — the multi-source ingest union (SURVEY §2.7/S1/S2/S4).",
     tags=("setop",),
+    order=("nationkey", "src"),
 )
 def q_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select(
@@ -598,7 +590,7 @@ def q_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("c_nationkey").cast("long").alias("nationkey"), F.lit("customer").alias("src"))
         .distinct()
     )
-    return c.intersect(s).unionByName(cust).distinct().orderBy("nationkey", "src")
+    return c.intersect(s).unionByName(cust).distinct()
 
 
 @register(
@@ -630,7 +622,6 @@ def q_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
                'now=' || CAST(cur.v AS VARCHAR) || '|v1='
                       || CAST(COALESCE(o.v, -999) AS VARCHAR) AS state
         FROM v3 cur LEFT JOIN v1 o ON cur.k = o.k
-        ORDER BY k
     """,
     doc=(
         "SQL front door WRITE lifecycle (VERDICT r6 task 8): CREATE TABLE "
@@ -645,6 +636,7 @@ def q_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "small final result is pinned before cleanup."
     ),
     tags=("sql", "snapshot", "write", "timetravel"),
+    order=("k",),
 )
 def q_u3(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
@@ -674,8 +666,7 @@ def q_u3(spark: SparkSession, sf_dir: str) -> DataFrame:
             "SELECT cur.k AS k, "
             "concat('now=', CAST(cur.v AS STRING), '|v1=', "
             "CAST(coalesce(o.v, -999) AS STRING)) AS state "
-            "FROM lc_u3 cur LEFT JOIN lc_u3 FOR VERSION AS OF 1 o ON cur.k = o.k "
-            "ORDER BY k"
+            "FROM lc_u3 cur LEFT JOIN lc_u3 FOR VERSION AS OF 1 o ON cur.k = o.k"
         )
         return out.localCheckpoint(eager=True)
     finally:
@@ -725,10 +716,10 @@ def q_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS month_total
         FROM orders
         GROUP BY 1, 2
-        ORDER BY 1
     """,
     doc="date_trunc/year + monthly totals — receipt_date time-series semantics (SURVEY F3/Q-F2).",
     tags=("date", "agg"),
+    order=("order_month",),
 )
 def q_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
@@ -746,7 +737,6 @@ def q_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             F.sum(dec2("o_totalprice")).cast("double").alias("month_total"),
         )
-        .orderBy("order_month")
     )
 
 
@@ -762,7 +752,7 @@ def q_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT measure, COUNT(*) AS n,
                CAST(CAST(SUM(CAST(v AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS total,
                MIN(v) AS vmin, MAX(v) AS vmax
-        FROM m GROUP BY measure ORDER BY measure
+        FROM m GROUP BY measure
     """,
     doc=(
         "UNPIVOT/melt: lineitem's four numeric measures into long form, "
@@ -773,6 +763,7 @@ def q_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "map-side, no join, one agg shuffle on the 4-row measure key."
     ),
     tags=("reshape", "unpivot", "agg"),
+    order=("measure",),
 )
 def q_p4(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -790,7 +781,6 @@ def q_p4(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("v").alias("vmin"),
             F.max("v").alias("vmax"),
         )
-        .orderBy("measure")
     )
 
 
@@ -806,7 +796,6 @@ def q_p4(spark: SparkSession, sf_dir: str) -> DataFrame:
                    RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW
                ) AS DOUBLE) AS trail7d_total
         FROM orders
-        ORDER BY o_orderkey
     """,
     doc=(
         "Trailing 7-day revenue per customer via a RANGE window frame — "
@@ -818,6 +807,7 @@ def q_p4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast. One shuffle on o_custkey."
     ),
     tags=("window", "range-frame", "time"),
+    order=("o_orderkey",),
 )
 def q_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -836,7 +826,7 @@ def q_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_orderdate").cast("timestamp_ntz").alias("o_orderdate"),
         F.sum(dec2("o_totalprice")).over(w).cast("double").alias("trail7d_total"),
-    ).orderBy("o_orderkey")
+    )
 
 
 @register(
@@ -871,7 +861,6 @@ def q_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
             UNION ALL
             SELECT 'unique:(l_orderkey,l_linenumber)', v_uniqueness FROM single_pass
         )
-        ORDER BY chk
     """,
     doc=(
         "Declarative data-quality audit (the Deequ/expectations shape): "
@@ -883,6 +872,7 @@ def q_w3(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rows in the result, so adding a constraint never adds a scan."
     ),
     tags=("quality", "audit", "agg", "join"),
+    order=("chk",),
 )
 def q_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
@@ -912,7 +902,7 @@ def q_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(orphans.select(F.lit("ref:l_orderkey->orders").alias("chk"), F.col("v").alias("n_violations")))
         .unionByName(single.select(F.lit("unique:(l_orderkey,l_linenumber)").alias("chk"), F.col("v_uniqueness").alias("n_violations")))
     )
-    return checks.withColumn("passed", F.col("n_violations") == 0).orderBy("chk")
+    return checks.withColumn("passed", F.col("n_violations") == 0)
 
 
 @register(
@@ -934,7 +924,6 @@ def q_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM customer
         ) t
         WHERE rn <= 10
-        ORDER BY c_mktsegment, rn
     """,
     doc=(
         "Distribution window functions (SURVEY §2.5's remaining class): "
@@ -947,6 +936,7 @@ def q_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
         "One shuffle on the partition key, top-10 per segment emitted."
     ),
     tags=("window",),
+    order=("c_mktsegment", "rn"),
 )
 def q_w5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -968,5 +958,4 @@ def q_w5(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("c_acctbal").over(w_unique).alias("next_bal"),
         )
         .where(F.col("rn") <= 10)
-        .orderBy("c_mktsegment", "rn")
     )

@@ -22,6 +22,10 @@ Determinism/portability rules (see plans/registry.py):
 - Every mapping value is a single expression string valid in BOTH Spark
   SQL and DuckDB SQL (column refs, CAST(x AS DOUBLE), 'literal'), so one
   spec generates both sides and they cannot drift.
+- Suites compose their members' UNSORTED bodies (``Query.body`` /
+  ``Query.oracle_body``): no member sort runs inside a suite. The suite's
+  own presentation order, ``("part", *Suite.order)``, is registered as
+  its ``order`` and applied once by the registry, like any other query's.
 """
 
 from __future__ import annotations
@@ -83,25 +87,6 @@ class Suite:
     materialize: bool = False
 
 
-def _strip_trailing_global_sort(df: DataFrame) -> DataFrame:
-    """Remove a member query's trailing PRESENTATION sort before fusing
-    it into a suite (r11): the suite re-sorts the union by
-    ``(part, *order)``, so a member's final ``orderBy`` is a wasted
-    global range-exchange sort in the middle of the suite pipeline —
-    and once a fused branch computes (explodes) above it, the plan
-    audit rightly flags ``computed_global_sort``. Only an EXACT-root
-    global Sort is stripped (a Sort under a Limit is top-k semantics
-    and is left alone); removing a sort cannot change the row SET, and
-    the suite's own ORDER BY fixes the declared ordering."""
-    an = df._jdf.queryExecution().analyzed()
-    if an.getClass().getSimpleName() == "Sort" and getattr(an, "global")():
-        jdf = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-            df.sparkSession._jsparkSession, an.child()
-        )
-        return DataFrame(jdf, df.sparkSession)
-    return df
-
-
 def _spark_fn(suite: Suite):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         store = None
@@ -120,8 +105,8 @@ def _spark_fn(suite: Suite):
             # PER PART. Building the member once (also dropping q_x35's
             # 3× build-time emb.count() jobs) and exploding an array of
             # per-part structs emits all those parts' rows from one
-            # evaluation: same rows, same types, same final
-            # ORDER BY (part, ...) — only the number of passes changes.
+            # evaluation: same rows, same types — only the number of
+            # passes changes.
             by_src: dict[str, list] = {}
             for p in suite.parts:
                 by_src.setdefault(p.src, []).append(p)
@@ -135,19 +120,7 @@ def _spark_fn(suite: Suite):
 
             dfs = []
             for src_name, plist in by_src.items():
-                src = REGISTRY[src_name].spark(spark, sf_dir)
-                if len(plist) > 1:
-                    # Fused branches compute (explode) above the member,
-                    # so a trailing presentation sort below them is a
-                    # mid-pipeline global sort feeding computation — the
-                    # audit-flagged hazard — and pure waste at scale.
-                    # Single-part branches keep the member's sort: only
-                    # a projection sits above it (presentation-class),
-                    # and the A/B showed stripping those is LOCALLY
-                    # slower (3.41 -> 3.87 s med on q_x25 — the sort's
-                    # AQE stage boundary coalesces the member's output
-                    # before the suite-level union sort).
-                    src = _strip_trailing_global_sort(src)
+                src = REGISTRY[src_name].body(spark, sf_dir)
                 if len(plist) == 1:
                     part_df = src.select(*_row(plist[0]))
                 else:
@@ -158,7 +131,6 @@ def _spark_fn(suite: Suite):
                     ).select("_r.*")
                 dfs.append(store.put(part_df) if store else part_df)
             out = reduce(lambda a, b: a.unionByName(b), dfs)
-            out = out.orderBy("part", *suite.order)
             # detach, not finish: the per-part parquet tables already
             # are the spillable materialization; re-pinning the union
             # DISK_ONLY re-serialized 51.6M rows for 68 s at sf1 (r8).
@@ -167,35 +139,27 @@ def _spark_fn(suite: Suite):
             if store:
                 store.close()
 
-    fn.__name__ = suite.name
-    fn.__doc__ = suite.doc
     return fn
 
 
-def _oracle_sql(suite: Suite) -> str:
-    selects = []
-    for p in suite.parts:
-        src_sql = REGISTRY[p.src].oracle
-        assert src_sql is not None, f"suite member {p.src} has no oracle"
-        cols = [f"'{p.tag}' AS part"]
-        for col, typ in suite.cols:
-            expr = p.m.get(col, _PAD[typ])
-            cols.append(f"CAST(({expr}) AS {_DUCK_T[typ]}) AS {col}")
-        selects.append(
-            "SELECT " + ",\n       ".join(cols) + f"\nFROM (\n{src_sql}\n) AS _p"
-        )
-    union = "\nUNION ALL\n".join(selects)
-    order = ", ".join(["part", *suite.order])
-    return f"SELECT * FROM (\n{union}\n) AS _u ORDER BY {order}"
+def _part_sql(suite: Suite, p: Part) -> str:
+    src_sql = REGISTRY[p.src].oracle_body
+    assert src_sql is not None, f"suite member {p.src} has no oracle"
+    cols = [f"'{p.tag}' AS part"]
+    for col, typ in suite.cols:
+        expr = p.m.get(col, _PAD[typ])
+        cols.append(f"CAST(({expr}) AS {_DUCK_T[typ]}) AS {col}")
+    return "SELECT " + ",\n       ".join(cols) + f"\nFROM (\n{src_sql}\n) AS _p"
 
 
 def _register_suite(suite: Suite) -> None:
     members = tuple(p.src for p in suite.parts)
     register(
         suite.name,
-        oracle=_oracle_sql(suite),
+        oracle="\nUNION ALL\n".join(_part_sql(suite, p) for p in suite.parts),
         doc=suite.doc + f" [fuses: {', '.join(members)}]",
         tags=suite.tags + ("suite",),
+        order=("part", *suite.order),
     )(_spark_fn(suite))
     SUITE_MEMBERS[suite.name] = members
     _SUITE_SPECS[suite.name] = suite
@@ -216,17 +180,7 @@ def part_oracle_sqls(suite_name: str) -> dict[str, str]:
     value-checks the suite part-by-part against the already-written
     Spark parquet). Raises KeyError for non-suite queries."""
     suite = _SUITE_SPECS[suite_name]
-    out: dict[str, str] = {}
-    for p in suite.parts:
-        src_sql = REGISTRY[p.src].oracle
-        cols = [f"'{p.tag}' AS part"]
-        for col, typ in suite.cols:
-            expr = p.m.get(col, _PAD[typ])
-            cols.append(f"CAST(({expr}) AS {_DUCK_T[typ]}) AS {col}")
-        out[p.tag] = (
-            "SELECT " + ",\n       ".join(cols) + f"\nFROM (\n{src_sql}\n) AS _p"
-        )
-    return out
+    return {p.tag: _part_sql(suite, p) for p in suite.parts}
 
 
 _SUITES = [
@@ -642,7 +596,7 @@ _X1_MEMBERS = (
 
 
 def _x1_oracle() -> str:
-    subs = {name: REGISTRY[name].oracle for name in _X1_MEMBERS}
+    subs = {name: REGISTRY[name].oracle_body for name in _X1_MEMBERS}
     return f"""
         SELECT a.doc_id, a.lang, a.lang_pred,
                b.n_tokens, b.punct_cnt, b.stop_ratio, b.quality,
@@ -654,16 +608,11 @@ def _x1_oracle() -> str:
         JOIN ({subs['q_x3_token_count']}) c USING (doc_id)
         JOIN ({subs['q_x4_fingerprint']}) d USING (doc_id)
         JOIN ({subs['q_x8_pii_redaction']}) e USING (doc_id)
-        ORDER BY a.doc_id
     """
 
 
 def _x1_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = REGISTRY["q_x1_lang_id"].spark(spark, sf_dir)
-    b = REGISTRY["q_x2_quality"].spark(spark, sf_dir)
-    c = REGISTRY["q_x3_token_count"].spark(spark, sf_dir)
-    d = REGISTRY["q_x4_fingerprint"].spark(spark, sf_dir)
-    e = REGISTRY["q_x8_pii_redaction"].spark(spark, sf_dir)
+    a, b, c, d, e = (REGISTRY[name].body(spark, sf_dir) for name in _X1_MEMBERS)
     return (
         a.join(b, "doc_id")
         .join(c, "doc_id")
@@ -676,7 +625,6 @@ def _x1_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fp",
             "n_emails", "n_phones", "redacted",
         )
-        .orderBy("doc_id")
     )
 
 
@@ -690,6 +638,7 @@ register(
         f"[fuses: {', '.join(_X1_MEMBERS)}]"
     ),
     tags=("text", "curation", "suite"),
+    order=("doc_id",),
 )(_x1_spark)
 SUITE_MEMBERS["q_x1_text_analysis"] = _X1_MEMBERS
 

@@ -94,7 +94,6 @@ def q_as1(spark: SparkSession, sf_dir: str) -> DataFrame:
          AND v.vts <= p.pts
          AND v.vts >= p.pts - INTERVAL 1 HOUR
         GROUP BY 1, 2, 3
-        ORDER BY purchase_id
     """,
     doc=(
         "Bounded time-range join: views in the hour before each purchase, "
@@ -104,6 +103,7 @@ def q_as1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tags=("temporal", "range-join", "north-star"),
     bench=True,
+    order=("purchase_id",),
 )
 def q_as2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
@@ -124,7 +124,6 @@ def q_as2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("sum_view_value"),
         )
-        .orderBy("purchase_id")
     )
 
 

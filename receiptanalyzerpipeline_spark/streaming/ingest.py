@@ -96,6 +96,21 @@ def _merge_append_new(batch: DataFrame, target_path: str, key: str) -> None:
     fresh.write.mode("append").parquet(target_path)
 
 
+def merge_curated(
+    summary: DataFrame, items: DataFrame, curated_summary: str, curated_items: str
+) -> None:
+    """Idempotently append one parsed batch to both curated tables (flat
+    parquet, keyed on ``img_id`` and ``img_id#line_no``). ``watch`` and
+    ``analyze --write`` both write through here, so the two verbs share
+    one layout and a re-run appends nothing."""
+    _merge_append_new(summary, curated_summary, "img_id")
+    _merge_append_new(
+        items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
+        curated_items,
+        "item_key",
+    )
+
+
 def process_receipt_batch(
     images: DataFrame,
     raw_zone: str,
@@ -107,13 +122,7 @@ def process_receipt_batch(
     the hash and the parse computed once and shared by both sinks."""
     with ocr_documents(images, raw_zone, backend) as docs:
         summary = pivot_receipt_summary(flatten_summary_fields(docs))
-        items = extract_line_items(docs)
-        _merge_append_new(summary, curated_summary, "img_id")
-        _merge_append_new(
-            items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
-            curated_items,
-            "item_key",
-        )
+        merge_curated(summary, extract_line_items(docs), curated_summary, curated_items)
 
 
 def run_ingest(

@@ -78,6 +78,14 @@ def main() -> None:
         with open(prev_path) as f:
             prev = json.load(f)
 
+    rows = prev.get("output_rows", {})
+    missing, stale = sorted(set(reference) - set(rows)), sorted(set(rows) - set(reference))
+    if missing or stale:
+        sys.exit(
+            "output_rows inherited from BENCH_FLOORS.json does not match the "
+            f"measured bench set: no row count for {missing}, stale count for "
+            f"{stale}; count those queries' output rows at sf0.1 first"
+        )
     floors = {
         "_doc": doc,
         "multiplier": 1.3,
@@ -85,9 +93,8 @@ def main() -> None:
         "slack_per_mrow_sec": prev.get("slack_per_mrow_sec", 0.025),
         "reference": reference,
         "canary_reference": canary_reference,
+        "output_rows": rows,
     }
-    if prev.get("output_rows"):
-        floors["output_rows"] = prev["output_rows"]
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "BENCH_FLOORS.json",

@@ -175,3 +175,18 @@ def test_row_scaled_slack_absorbs_collect_jitter_but_catches_regressions():
     tight = dict(ref)
     tight[small] = max(ref[small] * mult, ref[small] + slack) + 0.002
     assert any(small in v for v in bench.check_floors(tight))
+
+
+def test_row_slack_never_exceeds_ratio_headroom():
+    """The ratio bound governs every bench query: each entry's row-scaled
+    slack fits inside its 1.3x headroom, so an injected 1.3x regression
+    is caught on all of them, not only on the largest-output one."""
+    floors = _floors()
+    mult, per_mrow = floors["multiplier"], floors["slack_per_mrow_sec"]
+    rows = floors["output_rows"]
+    over = {
+        n: (per_mrow * rows[n] / 1e6, r * (mult - 1))
+        for n, r in floors["reference"].items()
+        if per_mrow * rows[n] / 1e6 > r * (mult - 1)
+    }
+    assert not over, f"row slack exceeds ratio headroom (slack, headroom): {over}"

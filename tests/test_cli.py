@@ -26,18 +26,27 @@ def test_hash_image_and_rename(tmp_path: Path, capsys):
 
 
 def test_analyze_writes_curated(spark, tmp_path: Path):
+    """`analyze --write` and `watch` write one curated layout: a repeated
+    analyze appends nothing, and a later watch into the same work dir adds
+    its new receipt where a plain parquet read sees it."""
     imgs = tmp_path / "in"
     imgs.mkdir()
     (imgs / "a.png").write_bytes(_img([10] * 32 + [200] * 32))
     (imgs / "b.png").write_bytes(_img([0, 255] * 32))
     work = tmp_path / "work"
-    rc = main(
-        ["analyze", "--image-file", str(imgs), "--work-dir", str(work), "--write"]
-    )
-    assert rc == 0
+    for _ in range(2):
+        rc = main(
+            ["analyze", "--image-file", str(imgs), "--work-dir", str(work), "--write"]
+        )
+        assert rc == 0
+    scan = tmp_path / "scan"
+    scan.mkdir()
+    (scan / "c.png").write_bytes(_img([200] * 32 + [10] * 32))
+    assert main(["watch", "--scan-dir", str(scan), "--work-dir", str(work), "--once"]) == 0
     summary = spark.read.parquet(str(work / "receipt_summary"))
-    assert summary.count() == 2
-    assert {"img_id", "vendor_name", "total", "currency", "month"} <= set(summary.columns)
+    assert summary.count() == 3
+    assert summary.select("img_id").distinct().count() == 3
+    assert {"img_id", "vendor_name", "total", "currency"} <= set(summary.columns)
 
 
 def test_init_db(spark, tmp_path: Path):

@@ -3,6 +3,9 @@ stats, decontamination, mixture sampling, shard assignment."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from receiptanalyzerpipeline_spark.operators import curation as C
@@ -309,3 +312,43 @@ def test_er1_prefix_branch_matches_coarse_branch(spark):
     prefix = {tuple(r) for r in _er1_plan(spark, sf, pairs_per_record_budget=0.0).collect()}
     assert len(coarse) > 0
     assert prefix == coarse
+
+
+def test_contaminated_ids_distinct_under_duplicate_doc_ids(spark):
+    """ADVICE r8: the rep-collapsed path carries one member row per
+    INPUT row, so a duplicated (id, text) train row used to emit its id
+    twice; the pre-collapse contract was distinct ids."""
+    from receiptanalyzerpipeline_spark.operators import curation as C
+
+    train = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumps over the lazy dog"),  # dup id+text
+            (2, "completely unrelated content words here now"),
+        ],
+        ["doc_id", "text"],
+    )
+    ev = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog")], ["doc_id", "text"]
+    )
+    hits = [r["doc_id"] for r in C.contaminated_ids(train, ev, "doc_id", "text", k=5).collect()]
+    assert hits == [1]
+
+
+@pytest.mark.parametrize("qname", ["q_x18_dsir_importance", "q_x25_lm_perplexity"])
+def test_corpus_totals_nonnull_on_empty_corpus(spark, sf_dir, tmp_path, qname):
+    """ADVICE r9 (low): q_x18's c_total and q_x25's total moved from
+    count(*) (never NULL) to sum(n) (NULL on empty input) in the round-9
+    single-pass restructure; coalesce restores the non-null contract.
+    Run both builders against an EMPTY documents table end-to-end: the
+    queries must execute (no NULL propagating into ln()/division
+    surprises) and return an empty frame."""
+    from receiptanalyzerpipeline_spark.plans import REGISTRY
+
+    sf = str(tmp_path / "sf_empty")
+    os.makedirs(sf, exist_ok=True)
+    src = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    src.limit(0).write.parquet(os.path.join(sf, "documents.parquet"))
+
+    df = REGISTRY[qname].spark(spark, sf)
+    assert df.count() == 0

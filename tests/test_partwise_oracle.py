@@ -5,9 +5,19 @@ entirely DuckDB-side, no Spark re-run."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 
+import duckdb
 import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_spec = importlib.util.spec_from_file_location(
+    "sf1_sweep", os.path.join(REPO, "scripts", "sf1_sweep.py")
+)
+_sweep = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(_sweep)
 
 
 @pytest.fixture(scope="module")
@@ -83,3 +93,104 @@ def test_streaming_membership_cleans_its_scratch(spark, sf_dir):
     assert df.count() > 0  # pinned result survives scratch deletion
     after = set(glob.glob("/tmp/rap-streammem-*"))
     assert after <= before
+
+
+def test_oracle_interrupt_leaves_connection_usable(spark, tmp_path):
+    """ADVICE r8: the digest timeout interrupt is lock-guarded so a
+    late-firing timer can't cancel the NEXT query on the shared
+    connection. An interrupted oracle raises cleanly AND the connection
+    immediately serves the following query."""
+    from receiptanalyzerpipeline_spark.oracle import compare_setwise
+
+    con = duckdb.connect()
+    df = spark.createDataFrame([(1,)], ["k"])
+    # DESCRIBE is instant; execution of the 1e10-row cross join is not.
+    slow_sql = (
+        "SELECT CAST(a.range + b.range AS BIGINT) AS k "
+        "FROM range(100000) a, range(100000) b"
+    )
+    with pytest.raises(duckdb.Error):
+        compare_setwise(
+            "t_slow", df, slow_sql, con, str(tmp_path), oracle_timeout_s=0.3
+        )
+    # The regression: a racy interrupt would cancel this next statement.
+    assert con.execute("SELECT 42").fetchone() == (42,)
+    con.close()
+
+
+def test_apply_parts_propagates_fail_to_top_level_oracle():
+    """ADVICE r9 (medium): a part digest FAIL used to leave row['oracle']
+    at 'rows-only (...)' so summary['mismatches'] stayed 0 and the sf1
+    gate passed over a recorded real value mismatch."""
+    row = {"name": "q_fake_suite", "oracle": "rows-only (sf0.1 oracle 99s > budget)"}
+    _sweep._apply_parts(
+        row,
+        {"a": "match", "b": "FAIL: ['multiset digest differs: ...']", "c": "match"},
+        3,
+    )
+    assert row["oracle"].startswith("MISMATCH (partwise)")
+    assert "b" in row["oracle"]
+    # The gate's summary counter keys off the MISMATCH prefix.
+    assert str(row["oracle"]).startswith("MISMATCH")
+
+
+def test_apply_parts_full_and_partial_match_strings():
+    row = {"name": "q_fake_suite"}
+    _sweep._apply_parts(row, {"a": "match", "b": "match"}, 2)
+    assert row["oracle"] == "match (partwise)"
+    row2 = {"name": "q_fake_suite"}
+    _sweep._apply_parts(
+        row2, {"a": "match", "b": "skipped (oracle timeout)"}, 2
+    )
+    assert row2["oracle"] == "match (partwise 1/2)"
+    # All-skipped: no match evidence — the row keeps whatever oracle
+    # string it already had (rows-only / oracle_err).
+    row3 = {"name": "q_fake_suite", "oracle": "oracle_err: X"}
+    _sweep._apply_parts(row3, {"a": "skipped (oracle OOM)"}, 1)
+    assert row3["oracle"] == "oracle_err: X"
+
+
+def test_compare_setwise_parts_tags_the_failing_side(spark, tmp_path):
+    """ADVICE r9 (low): the sweep soft-skips only ORACLE-side capacity
+    failures; the exception message must therefore say which digest
+    raised. Oracle-side: broken SQL. Spark-side: parquet missing the
+    'part' column the spark digest filters on."""
+    from receiptanalyzerpipeline_spark import oracle as O
+
+    good = str(tmp_path / "good.parquet")
+    spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 3)], ["part", "v"]
+    ).write.parquet(good)
+    con = duckdb.connect()
+    res = O.compare_setwise_parts(
+        "q_fake", good, {"a": "SELECT * FROM no_such_table_xyz"}, con, str(tmp_path)
+    )
+    assert not res["a"].ok
+    assert "(oracle digest)" in res["a"].mismatches[0]
+
+    bad = str(tmp_path / "nopart.parquet")
+    spark.createDataFrame([(1,), (2,)], ["v"]).write.parquet(bad)
+    res2 = O.compare_setwise_parts(
+        "q_fake", bad, {"a": "SELECT 1 AS v"}, con, str(tmp_path)
+    )
+    assert not res2["a"].ok
+    assert "(spark-parquet digest)" in res2["a"].mismatches[0]
+    con.close()
+
+
+def test_sweep_skip_classification_requires_oracle_side():
+    """The sweep's soft-skip tokens (InterruptException / OOM) must only
+    classify as 'skipped (...)' when tagged '(oracle digest)'. This
+    mirrors the inline classification in _partwise — tested here at the
+    string level because _partwise closes over live sweep state."""
+    msg_oracle = (
+        "exception (oracle digest): OutOfMemoryException: could not allocate"
+    )
+    msg_spark = (
+        "exception (spark-parquet digest): OutOfMemoryException: could not allocate"
+    )
+    for msg, is_skip in ((msg_oracle, True), (msg_spark, False)):
+        soft = "(oracle digest)" in msg and (
+            "InterruptException" in msg or "OutOfMemoryException" in msg
+        )
+        assert soft is is_skip

@@ -8,6 +8,7 @@ import json
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from receiptanalyzerpipeline_spark.sources import snapshots as snap
 
@@ -669,3 +670,23 @@ def test_vacuum_keep_from_protects_consumer_watermarks(spark, tmp_path):
     # (changes strictly AFTER the watermark version).
     feed = snap.read_row_changes(spark, path, 2)
     assert {r["k"] for r in feed.collect()} == {4, 5}
+
+
+def test_manifest_extra_static_reserved_set(spark, tmp_path):
+    """ADVICE r8: the clash guard must check a STATIC reserved set, not
+    the keys present at the call site — tree mode pops 'files' into
+    group manifests before the guard, and append manifests never carry
+    'groups', so both used to slip through and corrupt the file list."""
+    from receiptanalyzerpipeline_spark.sources import snapshots as snap
+
+    p = str(tmp_path / "tbl")
+    df = spark.range(3).select(F.col("id").alias("k"))
+    # 'groups' is never present in a files-mode append manifest — the
+    # old dynamic check let it through.
+    with pytest.raises(ValueError, match="collide"):
+        snap.write_snapshot(df, p, mode="append", manifest_extra={"groups": []})
+    # 'stats' only appears when stats_cols is set — statically reserved.
+    with pytest.raises(ValueError, match="collide"):
+        snap.write_snapshot(df, p, mode="append", manifest_extra={"stats": {}})
+    # Namespaced app metadata still travels.
+    assert snap.write_snapshot(df, p, mode="append", manifest_extra={"app_x": 1}) == 0
