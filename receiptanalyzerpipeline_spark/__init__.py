@@ -17,4 +17,8 @@ Layout:
     streaming   structured-streaming ingest with idempotent merge
 """
 
+from receiptanalyzerpipeline_spark._worker import skip_zip_rereads_in_worker
+
 __version__ = "0.1.0"
+
+skip_zip_rereads_in_worker()

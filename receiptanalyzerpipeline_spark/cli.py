@@ -77,7 +77,8 @@ def cmd_analyze(args: argparse.Namespace) -> int:
 
 
 def cmd_watch(args: argparse.Namespace) -> int:
-    """Streaming ingest (SURVEY §3.2); --once drains the backlog and exits."""
+    """Streaming ingest (SURVEY §3.2); --once drains the backlog and exits,
+    otherwise receipts are curated as they land until the process stops."""
     from receiptanalyzerpipeline_spark.streaming.ingest import run_ingest
 
     work = Path(args.work_dir)
@@ -88,7 +89,7 @@ def cmd_watch(args: argparse.Namespace) -> int:
         )
 
         attach_progress_logger(spark, args.metrics)
-    run_ingest(
+    q = run_ingest(
         spark,
         args.scan_dir,
         str(work / "checkpoint"),
@@ -98,6 +99,7 @@ def cmd_watch(args: argparse.Namespace) -> int:
         _backend(args.backend, args.ocr_rate),
         available_now=args.once,
     )
+    q.awaitTermination()
     return 0
 
 

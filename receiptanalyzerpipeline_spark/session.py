@@ -12,6 +12,12 @@ valid on a 1000-executor cluster:
 - Shuffle partitions default to the core count locally; on a real
   cluster this is overridden (or left to AQE coalescing from a high
   initial value).
+- Parallel file listing only above 1024 root paths. The file stream
+  source hands each micro-batch's files to the reader as separate root
+  paths; above Spark's default threshold (32) each batch would start a
+  listing job with one task per file, which in local mode runs on the
+  driver's own cores and can only add overhead. Table reads pass one
+  directory path and are unaffected.
 """
 
 from __future__ import annotations
@@ -81,6 +87,14 @@ def get_spark(
         # application scan >= 10 GB) are cluster-appropriate and left
         # alone; tests/test_plan_shapes.py lowers them to prove injection.
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        # Above this many root paths a listing becomes a Spark job with
+        # one task per path, and the file stream source passes each
+        # micro-batch file as a root path. A batch that `watch` lands on
+        # one host stays under 1024 and is listed on the driver (at
+        # Spark's 32, two listing jobs were 100 of a 50-file batch's 150
+        # tasks). A cluster submitter overrides this like the defaults
+        # below.
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         # Local-mode memory hygiene; harmless on a cluster where the
         # submitter overrides these.
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

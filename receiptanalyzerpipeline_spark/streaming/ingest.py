@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -134,11 +135,13 @@ def run_ingest(
     curated_items: str,
     backend: OcrBackend,
     available_now: bool = True,
-) -> None:
-    """Drain the landing dir through the pipeline. availableNow=True
-    processes the backlog and stops (test/replay mode); False runs
-    continuously with default micro-batch triggers. The watcher is
-    Spark's binaryFile file source (``read_image_stream``)."""
+) -> StreamingQuery:
+    """Drain the landing dir through the pipeline and return the query.
+    availableNow=True processes the backlog and returns the terminated
+    query (test/replay mode); False returns the running query, which
+    keeps curating with default micro-batch triggers until the caller
+    stops it or awaits its termination. The watcher is Spark's
+    binaryFile file source (``read_image_stream``)."""
     stream = read_image_stream(spark, landing_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
@@ -147,8 +150,8 @@ def run_ingest(
         process_receipt_batch(batch, raw_zone, curated_summary, curated_items, backend)
 
     writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - continuous mode not exercised in tests
-        writer.start()
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q

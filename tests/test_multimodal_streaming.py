@@ -74,11 +74,11 @@ def stream_dirs(tmp_path: Path) -> dict[str, str]:
     return d
 
 
-def _ingest(spark, d, backend=None, checkpoint=None):
+def _ingest(spark, d, backend=None, checkpoint=None, available_now=True):
     from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
     from receiptanalyzerpipeline_spark.streaming.ingest import run_ingest
 
-    run_ingest(
+    return run_ingest(
         spark,
         d["landing"],
         checkpoint or d["checkpoint"],
@@ -86,7 +86,7 @@ def _ingest(spark, d, backend=None, checkpoint=None):
         d["summary"],
         d["items"],
         backend or StubBackend(),
-        available_now=True,
+        available_now=available_now,
     )
 
 
@@ -223,3 +223,41 @@ def test_ingest_exactly_once_and_loud_on_unreadable_target(spark, stream_dirs, t
             images_df(spark, {"b": IMG_B}), d["raw"], d["summary"], d["items"], backend
         )
     assert sorted(Path(d["summary"]).glob("part-*.parquet")) == summary_files
+
+
+def test_continuous_ingest_returns_running_query(spark, stream_dirs):
+    """Without availableNow, run_ingest hands back the running query (what
+    `watch` without --once awaits) instead of dropping it."""
+    d = stream_dirs
+    landing = Path(d["landing"])
+    for i, img in enumerate([IMG_A, IMG_B, IMG_C]):
+        (landing / f"scan_{i:03d}.png").write_bytes(img)
+    q = _ingest(spark, d, available_now=False)
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+        assert _summary_count(spark, d) == 3
+    finally:
+        q.stop()
+
+
+def test_ingest_batch_lists_files_without_a_spark_job(spark, stream_dirs):
+    """The file source passes each batch file to the reader as a root path;
+    above the parallel-listing threshold that was a listing job with one
+    task per file. The session default keeps a batch of 40 files (more than
+    Spark's default threshold of 32) on the driver."""
+    landing = Path(stream_dirs["landing"])
+    for i in range(40):
+        (landing / f"scan_{i:03d}.png").write_bytes(
+            stub_image([(i * 7 + j) % 256 for j in range(64)])
+        )
+    q = _ingest(spark, stream_dirs)
+    st = spark.sparkContext.statusTracker()
+    stages = [
+        st.getStageInfo(s)
+        for j in st.getJobIdsForGroup(str(q.runId))
+        for s in st.getJobInfo(j).stageIds
+    ]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert tasks, "the stream's jobs are tagged with its run id"
+    assert max(tasks) < 40, tasks

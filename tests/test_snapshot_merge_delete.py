@@ -26,6 +26,15 @@ def _table(spark, tmp_path, batches):
     return path
 
 
+def _sixteenth_of_table_bytes(path):
+    """A compaction target of 1/16 of the live table's bytes on disk. The
+    table's bytes depend on how many files ``local[N]`` wrote (one footer
+    each), so a fixed byte target would give a core-count-dependent file
+    count."""
+    files = snap._manifest_files(path, snap._read_manifest(path, snap.current_version(path)))
+    return sum(Path(f).stat().st_size for f in files) // 16
+
+
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
     path = _table(spark, tmp_path, [[(1, "a"), (2, "b")], [(3, "c"), (4, "d")]])
     v_before = snap.current_version(path)
@@ -137,7 +146,11 @@ def test_clustered_compaction_zone_maps_prune_on_both_dims(spark, tmp_path):
     df = spark.createDataFrame(rows, "x long, y long, payload long")
     snap.write_snapshot(df, path, mode="append")
     v = snap.compact_snapshot(
-        spark, path, target_file_bytes=4 << 10, cluster_by=["x", "y"], bits=6
+        spark,
+        path,
+        target_file_bytes=_sixteenth_of_table_bytes(path),
+        cluster_by=["x", "y"],
+        bits=6,
     )
     m = snap._read_manifest(path, v)
     assert m["cluster_by"] == ["x", "y"]
@@ -427,7 +440,9 @@ def test_scan_snapshot_pushes_bounds_to_zone_maps(spark, tmp_path):
     snap.write_snapshot(
         spark.range(4096).selectExpr("id AS k", "id % 13 AS v"), path
     )
-    v = snap.compact_snapshot(spark, path, target_file_bytes=4 << 10, cluster_by=["k"])
+    v = snap.compact_snapshot(
+        spark, path, target_file_bytes=_sixteenth_of_table_bytes(path), cluster_by=["k"]
+    )
     n_files = len(snap._read_manifest(path, v)["files"])
     assert n_files >= 8
 
