@@ -305,81 +305,32 @@ def cmd_table(args: argparse.Namespace) -> int:
 
 def cmd_curate(args: argparse.Namespace) -> int:
     """End-to-end training-data curation (the q_x24 pipeline, user-facing):
-    quality rules -> exact-content dedup -> optional eval-set 5-gram
-    decontamination -> deterministic mixture -> sharded export with a
-    write-audit manifest."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
+    quality rules -> exact-content dedup -> optional near-dup collapse ->
+    optional eval-set 5-gram decontamination -> optional deterministic
+    sample -> sharded export with a write-audit manifest."""
     from receiptanalyzerpipeline_spark.operators import curation as C
-    from receiptanalyzerpipeline_spark.operators.curation import heuristic_quality
+    from receiptanalyzerpipeline_spark.operators import dedup as D
+    from receiptanalyzerpipeline_spark.operators.sampling import hash_sample
     from receiptanalyzerpipeline_spark.sources.sinks import write_training_shards
 
-    rules = (
-        "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12 "
-        "AND alpha_frac >= 0.7 AND symbol_frac <= 0.1"
-    )
     spark = _spark()
     docs = spark.read.parquet(args.input)
-    metrics = heuristic_quality(docs, args.id_col, args.text_col)
-    # heuristic_quality standardizes the id to 'doc_id'; rename it back so
-    # the join key exists under any --id-col (ADVICE r3: a non-default
-    # --id-col used to fail with AnalysisException here).
-    quality = docs.join(
-        metrics.where(F.expr(rules)).select(F.col("doc_id").alias(args.id_col)),
-        args.id_col,
-    )
-    fp = F.md5(F.lower(F.trim(F.col(args.text_col))))
-    dedup = (
-        quality.withColumn("rn", F.row_number().over(Window.partitionBy(fp).orderBy(args.id_col)))
-        .where(F.col("rn") == 1)
-        .drop("rn")
+    kept = D.exact_dedup(
+        C.quality_filter(docs, args.id_col, args.text_col), args.text_col, args.id_col
     )
     if args.near_dedup:
-        # q_d10 policy over MinHash-LSH clusters: keep each near-dup
-        # cluster's longest representative (id tiebreak); singletons pass.
-        from receiptanalyzerpipeline_spark.operators.components import (
-            connected_components,
-        )
-        from receiptanalyzerpipeline_spark.operators.dedup import (
-            minhash_lsh_jaccard_pairs,
-        )
-        from receiptanalyzerpipeline_spark.operators.textanalysis import (
-            token_count_ws,
-        )
-
-        pairs = minhash_lsh_jaccard_pairs(
-            dedup, args.id_col, args.text_col,
-            k=3, threshold=0.5, n_hashes=32, rows_per_band=2,
-        )
-        labels = connected_components(pairs.select("id_a", "id_b")).select(
-            F.col("id").alias("__nd_id"), F.col("component").alias("__nd_comp")
-        )
-        labeled = dedup.join(
-            labels, dedup[args.id_col] == labels["__nd_id"], "left"
-        ).withColumn(
-            "__cluster",
-            F.coalesce(F.col("__nd_comp"), F.col(args.id_col)),
-        ).drop("__nd_id", "__nd_comp")
-        w = Window.partitionBy("__cluster").orderBy(
-            F.desc(token_count_ws(F.col(args.text_col))), F.col(args.id_col)
-        )
-        dedup = (
-            labeled.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__cluster")
+        kept = (
+            D.keep_best_canonical(kept, args.id_col, args.text_col)
+            .where("_nd_canonical")
+            .drop("_nd_cluster", "_nd_tokens", "_nd_canonical")
         )
     if args.eval_set:
         ev = spark.read.parquet(args.eval_set)
-        hits = C.contaminated_ids(dedup, ev, args.id_col, args.text_col, k=5)
-        dedup = dedup.join(hits, args.id_col, "left_anti")
+        kept = C.decontaminate(kept, ev, args.id_col, args.text_col, k=5)
     if args.sample_rate < 1.0:
-        from receiptanalyzerpipeline_spark.operators.sampling import hash_bucket
-
-        bound = int(args.sample_rate * (1 << 16))
-        dedup = dedup.where(hash_bucket(F.col(args.id_col), salt="mix") < bound)
+        kept = hash_sample(kept, args.id_col, args.sample_rate, salt="mix")
     manifest = write_training_shards(
-        dedup,
+        kept,
         args.output,
         id_col=args.id_col,
         text_col=args.text_col,

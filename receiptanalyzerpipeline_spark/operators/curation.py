@@ -167,6 +167,16 @@ def contaminated_ids(
     )
 
 
+def decontaminate(
+    train: DataFrame, eval_docs: DataFrame, id_col: str, text_col: str, k: int = 5
+) -> DataFrame:
+    """``train`` without the rows contaminated_ids flags. The hit list's
+    ``doc_id`` is renamed to ``id_col`` so the anti-join key exists under
+    any id column name."""
+    hits = contaminated_ids(train, eval_docs, id_col, text_col, k)
+    return train.join(hits.select(F.col("doc_id").alias(id_col)), id_col, "left_anti")
+
+
 def mixture_keep(key: Column, source: Column, rates: dict[str, float], default: float) -> Column:
     """Boolean keep-mask implementing a per-source sampling mixture
     (up/down-weighting sources is how pretraining mixes are tuned).
@@ -224,6 +234,28 @@ def heuristic_quality(
         (n_alpha.cast("double") / n_tok).alias("alpha_frac"),
         (n_sym.cast("double") / n_chars).alias("symbol_frac"),
     ).where(F.col("n_tokens") >= 1)
+
+
+# The keep rule over heuristic_quality's metrics. Plain SQL that Spark
+# and DuckDB both parse, so every oracle replays this same text.
+QUALITY_RULES = (
+    "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12 "
+    "AND alpha_frac >= 0.7 AND symbol_frac <= 0.1"
+)
+
+
+def quality_filter(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """The rows of ``docs`` whose heuristic_quality metrics pass
+    QUALITY_RULES, with every input column kept.
+
+    heuristic_quality standardizes the id to ``doc_id``; it is renamed
+    back so the join key exists under any ``id_col`` (ADVICE r3: a
+    non-default id column used to fail with AnalysisException)."""
+    metrics = heuristic_quality(docs, id_col, text_col)
+    return docs.join(
+        metrics.where(F.expr(QUALITY_RULES)).select(F.col("doc_id").alias(id_col)),
+        id_col,
+    )
 
 
 def window_hash_index(

@@ -33,7 +33,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from receiptanalyzerpipeline_spark.operators.textanalysis import let_bound, tokens
+from receiptanalyzerpipeline_spark.operators.textanalysis import (
+    content_fingerprint,
+    let_bound,
+    token_count_ws,
+    tokens,
+)
 
 # 15 hex chars = 60 bits: fits signed int64 positively in Spark AND DuckDB.
 HASH_BITS = 60
@@ -60,8 +65,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     Hash-groupBy shape: shuffles on the content fingerprint, so skew equals
     duplicate multiplicity — AQE skew-join/agg handles pathological cases.
     """
-    fp = F.md5(F.lower(F.trim(F.col(text_col))))
-    w = Window.partitionBy(fp).orderBy(F.col(id_col))
+    w = Window.partitionBy(content_fingerprint(F.col(text_col))).orderBy(F.col(id_col))
     return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
 
 
@@ -392,6 +396,36 @@ def minhash_lsh_jaccard_pairs(
     return _expand_rep_pairs(rep_pairs, members, nonempty).where(
         F.col("jaccard") >= threshold
     )
+
+
+def keep_best_canonical(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Keep-best canonical selection per MinHash-LSH near-dup cluster (the
+    q_d10 policy, also ``curate --near-dedup``).
+
+    Every row of ``docs`` comes back with three columns added:
+    ``_nd_cluster`` (the connected component's min-id label; a singleton
+    is its own cluster), ``_nd_tokens`` (whitespace token count) and
+    ``_nd_canonical``, true for the cluster's longest document (smallest
+    id on ties). The underscored names leave every caller column —
+    ``id`` and ``component`` included — untouched. Scale: the labels come
+    from banded LSH + min-label propagation (never all-pairs); the
+    selection is one window over the cluster label."""
+    from receiptanalyzerpipeline_spark.operators.components import connected_components
+
+    pairs = minhash_lsh_jaccard_pairs(
+        docs, id_col, text_col, k=3, threshold=0.5, n_hashes=32, rows_per_band=2
+    )
+    labels = connected_components(pairs.select("id_a", "id_b")).select(
+        F.col("id").alias("_nd_id"), F.col("component").alias("_nd_comp")
+    )
+    labeled = (
+        docs.withColumn("_nd_tokens", token_count_ws(F.col(text_col)).cast("long"))
+        .join(labels, F.col(id_col) == F.col("_nd_id"), "left")
+        .withColumn("_nd_cluster", F.coalesce(F.col("_nd_comp"), F.col(id_col)))
+        .drop("_nd_id", "_nd_comp")
+    )
+    w = Window.partitionBy("_nd_cluster").orderBy(F.desc("_nd_tokens"), F.col(id_col))
+    return labeled.withColumn("_nd_canonical", F.row_number().over(w) == 1)
 
 
 def simhash_signatures(

@@ -542,9 +542,6 @@ def q_x15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUALITY_RULES = "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12 AND alpha_frac >= 0.7 AND symbol_frac <= 0.1"
-
-
 @register(
     "q_x16_heuristic_quality",
     oracle=f"""
@@ -561,7 +558,7 @@ _QUALITY_RULES = "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12
             FROM t WHERE len(tk) >= 1
         )
         SELECT doc_id, n_tokens, mean_tok_len, alpha_frac, symbol_frac,
-               ({_QUALITY_RULES}) AS keep
+               ({C.QUALITY_RULES}) AS keep
         FROM m
     """,
     doc=(
@@ -578,7 +575,7 @@ _QUALITY_RULES = "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12
 )
 def q_x16(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = C.heuristic_quality(_docs(spark, sf_dir), "doc_id", "text")
-    return m.withColumn("keep", F.expr(_QUALITY_RULES))
+    return m.withColumn("keep", F.expr(C.QUALITY_RULES))
 
 
 @register(
@@ -893,7 +890,7 @@ def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         quality AS (
             SELECT doc_id, source, text, tk, n_tokens FROM m
-            WHERE {_QUALITY_RULES}
+            WHERE {C.QUALITY_RULES}
         ),
         dedup AS (
             SELECT * FROM (
@@ -951,21 +948,12 @@ def q_x23(spark: SparkSession, sf_dir: str) -> DataFrame:
     order=("shard_id",),
 )
 def q_x24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
+    from receiptanalyzerpipeline_spark.operators.dedup import exact_dedup
 
     docs = _docs(spark, sf_dir).where(F.col("source") != "src0")
-    metrics = C.heuristic_quality(docs, "doc_id", "text")
-    quality = (
-        docs.join(metrics.where(F.expr(_QUALITY_RULES)).select("doc_id"), "doc_id")
-    )
-    fp = F.md5(F.lower(F.trim(F.col("text"))))
-    w = Window.partitionBy(fp).orderBy("doc_id")
-    dedup = (
-        quality.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
-    )
+    dedup = exact_dedup(C.quality_filter(docs, "doc_id", "text"), "text", "doc_id")
     ev = _docs(spark, sf_dir).where(F.col("source") == "src0")
-    hits = C.contaminated_ids(dedup, ev, "doc_id", "text", k=5)
-    clean = dedup.join(hits, "doc_id", "left_anti")
+    clean = C.decontaminate(dedup, ev, "doc_id", "text", k=5)
     rates = {s: 1.0 for s in _MIX_FULL}
     mixed = clean.where(
         C.mixture_keep(F.col("doc_id"), F.col("source"), rates, default=_MIX_TAIL_RATE)
@@ -1467,7 +1455,7 @@ def q_x29(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM t WHERE len(tk) >= 1
         ),
         quality AS (
-            SELECT doc_id, text FROM m WHERE {_QUALITY_RULES}
+            SELECT doc_id, text FROM m WHERE {C.QUALITY_RULES}
         ),
         dedup AS (
             SELECT doc_id FROM (

@@ -385,25 +385,11 @@ def q_d7(spark: SparkSession, sf_dir: str) -> DataFrame:
     order=("doc_id",),
 )
 def q_d10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from receiptanalyzerpipeline_spark.operators.components import connected_components
-
-    docs = _docs(spark, sf_dir)
-    pairs = D.minhash_lsh_jaccard_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.5, n_hashes=32, rows_per_band=2
-    )
-    labels = connected_components(pairs.select("id_a", "id_b"))
-    q = docs.select(
-        "doc_id", T.token_count_ws(F.col("text")).cast("long").alias("n_tokens")
-    )
-    labeled = q.join(labels, q.doc_id == labels.id, "left").select(
+    return D.keep_best_canonical(_docs(spark, sf_dir), "doc_id", "text").select(
         "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).cast("long").alias("cluster_id"),
-        "n_tokens",
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("n_tokens"), "doc_id")
-    return (
-        labeled.withColumn("is_canonical", F.row_number().over(w) == 1)
-        .select("doc_id", "cluster_id", "n_tokens", "is_canonical")
+        F.col("_nd_cluster").cast("long").alias("cluster_id"),
+        F.col("_nd_tokens").alias("n_tokens"),
+        F.col("_nd_canonical").alias("is_canonical"),
     )
 
 

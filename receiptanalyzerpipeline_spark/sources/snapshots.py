@@ -617,6 +617,18 @@ def versions(path: str) -> list[int]:
     return sorted(int(p.stem) for p in mdir.glob("*.json") if p.stem.isdigit())
 
 
+def newest_manifest_stamp(path: str, key: str):
+    """The value a writer stamped under ``key`` into this table's
+    manifests, or None if the table doesn't exist or predates the stamp.
+    Newest stamp wins: every commit of a stamping writer carries the same
+    value, so the newest-first scan stops at the first hit."""
+    for v in reversed(versions(path)):
+        value = _read_manifest(path, v).get(key)
+        if value is not None:
+            return value
+    return None
+
+
 def read_changes(
     spark: SparkSession, path: str, from_version: int, to_version: int | None = None
 ) -> DataFrame:

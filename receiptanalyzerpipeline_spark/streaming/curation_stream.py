@@ -1,17 +1,17 @@
-"""Streaming curation end-to-end (VERDICT r4 task 8): the q_x24 batch
-pipeline — quality → exact-content dedup → [decontamination] → sampling →
-shard export — as ONE checkpointed Structured Streaming topology.
+"""Streaming curation end-to-end (VERDICT r4 task 8): the batch
+``curate`` pipeline — quality → exact-content dedup → shard export — as
+ONE checkpointed Structured Streaming topology.
 
 Shape: a document file stream drives ``foreachBatch``; each micro-batch
 
-1. applies the SAME stateless quality rules as the ``curate`` CLI
-   (operators/curation.heuristic_quality + the rules expression),
-2. dedups exactly: within the batch (first id per content fingerprint)
-   AND against the accumulated corpus via an anti-join on the snapshot
-   table's fingerprints — the "stateful" half, whose state is the
-   snapshot table itself, not an in-memory store, so state survives any
-   restart and is queryable/AS-OF-readable like any table
-   (sources/snapshots.py),
+1. applies the same ``quality_filter`` as the ``curate`` CLI and q_x24
+   (operators/curation.py),
+2. dedups exactly on the same ``content_fingerprint``: within the batch
+   (operators/dedup.exact_dedup, first id per fingerprint) AND against
+   the accumulated corpus via an anti-join on the snapshot table's
+   fingerprints — the "stateful" half, whose state is the snapshot
+   table itself, not an in-memory store, so state survives any restart
+   and is queryable/AS-OF-readable like any table (sources/snapshots.py),
 3. merges survivors into the snapshot (version = micro-batch id), and
 4. exports the survivors' shard rows under ``shards/data/snap-<batch>``.
 
@@ -36,16 +36,19 @@ divergence, same class as SURVEY §7.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from receiptanalyzerpipeline_spark.operators import curation as C
+from receiptanalyzerpipeline_spark.operators.dedup import exact_dedup
+from receiptanalyzerpipeline_spark.operators.textanalysis import content_fingerprint
 from receiptanalyzerpipeline_spark.sources import snapshots as snap
 
-DEFAULT_RULES = (
-    "n_tokens BETWEEN 5 AND 10000 AND mean_tok_len BETWEEN 2 AND 12 "
-    "AND alpha_frac >= 0.7 AND symbol_frac <= 0.1"
-)
+# Near-dup LSH parameters: MinHash(32) in 16 bands of 2 rows over word
+# 3-shingles, Jaccard threshold 0.5 — the batch near-dup queries' values.
+ND_K, ND_THRESHOLD, ND_N_HASHES, ND_ROWS_PER_BAND = 3, 0.5, 32, 2
+# Files per state commit in the bucketed layout (fewer when N is smaller).
+BUCKET_FILES = 8
 
 
 def _fpb(col, n_buckets: int):
@@ -58,78 +61,14 @@ def _bb(n_buckets: int):
     return F.pmod(F.xxhash64("band", "vals"), F.lit(n_buckets)).cast("int")
 
 
-def _stamped_bucket_fps(path: str) -> int | None:
-    """The bucket modulus this state table was written under, or None if
-    the table doesn't exist / predates stamping. Newest stamp wins (all
-    commits carry the same value once a sink is constructed)."""
-    for v in reversed(snap.versions(path)):
-        n = snap._read_manifest(path, v).get("bucket_fps")
-        if n is not None:
-            return int(n)
-    return None
-
-
-def _curate_batch(
-    batch_df: DataFrame,
-    prior_fps_fn,
-    id_col: str,
-    text_col: str,
-    rules: str,
-    eval_docs: DataFrame | None,
-    sample_rate: float,
-) -> DataFrame:
-    """One micro-batch through the q_x24 stages; returns surviving rows
-    with their content fingerprint attached. ``prior_fps_fn`` maps the
-    in-batch deduped frame to the corpus fingerprints to anti-join
-    against (None = no prior state) — a function, not a frame, so the
-    bucketed layout can prune the state read by the BATCH's buckets."""
-    metrics = C.heuristic_quality(batch_df, id_col, text_col)
-    quality = batch_df.join(
-        metrics.where(F.expr(rules)).select(F.col("doc_id").alias(id_col)), id_col
-    )
-    with_fp = quality.withColumn(
-        "fp", F.md5(F.lower(F.trim(F.col(text_col))))
-    )
-    in_batch = (
-        with_fp.withColumn(
-            "rn", F.row_number().over(Window.partitionBy("fp").orderBy(id_col))
-        )
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )
-    prior_fps = prior_fps_fn(in_batch)
-    fresh = (
-        in_batch.join(prior_fps, "fp", "left_anti")
-        if prior_fps is not None
-        else in_batch
-    )
-    if eval_docs is not None:
-        hits = C.contaminated_ids(fresh, eval_docs, id_col, text_col, k=5)
-        fresh = fresh.join(hits, id_col, "left_anti")
-    if sample_rate < 1.0:
-        from receiptanalyzerpipeline_spark.operators.sampling import hash_bucket
-
-        bound = int(sample_rate * (1 << 16))
-        fresh = fresh.where(hash_bucket(F.col(id_col), salt="mix") < bound)
-    return fresh
-
-
 def curation_sink(
     snapshot_path: str,
     shards_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    rules: str = DEFAULT_RULES,
-    eval_docs: DataFrame | None = None,
-    sample_rate: float = 1.0,
     n_shards: int = 16,
     near_dedup: bool = False,
-    nd_threshold: float = 0.5,
-    nd_k: int = 3,
-    nd_n_hashes: int = 32,
-    nd_rows_per_band: int = 2,
     bucket_fps: int | None = None,
-    bucket_files: int = 8,
 ):
     """``foreachBatch`` commit function for the streaming curation loop.
 
@@ -149,7 +88,7 @@ def curation_sink(
     ``bucket_fps`` (VERDICT r5 task 4) turns on the BUCKETED state
     layout: the fingerprint snapshot carries a ``_fpb`` cluster column
     (xxhash64(fp) mod N) with zone maps from the first commit on, each
-    batch's state files are range-partitioned on it (``bucket_files``
+    batch's state files are range-partitioned on it (``BUCKET_FILES``
     files per batch, tight per-file ranges), and the per-batch anti-join
     reads ONLY the state files whose range overlaps the BATCH's own
     bucket set (``read_snapshot_in``) — so the corpus side of the dedup
@@ -165,8 +104,8 @@ def curation_sink(
     # computed under a different modulus silently prunes files that hold
     # matching fingerprints (duplicates readmitted, near-dups missed).
     for p in (snapshot_path, buckets_path):
-        stamped = _stamped_bucket_fps(p)
-        if stamped is not None and stamped != (bucket_fps or 0):
+        stamped = snap.newest_manifest_stamp(p, "bucket_fps")
+        if stamped is not None and int(stamped) != (bucket_fps or 0):
             raise ValueError(
                 f"bucket_fps={bucket_fps or 0} does not match the modulus "
                 f"{stamped} stamped into {p}'s manifests; restarting the "
@@ -191,10 +130,13 @@ def curation_sink(
     def _bucketed(df: DataFrame, col: str) -> DataFrame:
         """Range-partition + sort a state batch by its bucket column so
         every output file carries a tight [min, max] zone range."""
-        n = min(bucket_files, max(1, bucket_fps))
+        n = min(BUCKET_FILES, max(1, bucket_fps))
         return df.repartitionByRange(n, col).sortWithinPartitions(col)
 
-    def _prior_fps_fn(in_batch: DataFrame):
+    def _prior_fps(in_batch: DataFrame) -> DataFrame | None:
+        """The corpus fingerprints to anti-join against (None = no prior
+        state); the bucketed layout prunes the read by the BATCH's own
+        buckets."""
         if not snap.versions(snapshot_path):
             return None
         spark = in_batch.sparkSession
@@ -243,13 +185,13 @@ def curation_sink(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
         )
         batch = dedup_in_batch_neardup(
-            batch, nd_k, nd_threshold, nd_n_hashes, nd_rows_per_band
+            batch, ND_K, ND_THRESHOLD, ND_N_HASHES, ND_ROWS_PER_BAND
         )
-        sigs = minhash_signatures(batch, "doc_id", "text", k=nd_k, n_hashes=nd_n_hashes)
+        sigs = minhash_signatures(batch, "doc_id", "text", k=ND_K, n_hashes=ND_N_HASHES)
         v_b = _committed_state_version(buckets_path)
         v_s = _committed_state_version(sigs_path)
         if v_b is not None and v_s is not None:
-            bb = _band_buckets(sigs, nd_n_hashes, nd_rows_per_band)
+            bb = _band_buckets(sigs, ND_N_HASHES, ND_ROWS_PER_BAND)
             if bucket_fps:
                 touched = {
                     r["b"]
@@ -278,11 +220,11 @@ def curation_sink(
             state_s = snap.read_snapshot(spark, sigs_path, version=v_s).select(
                 F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_old")
             )
-            est = minhash_estimate(F.col("sig"), F.col("sig_old"), nd_n_hashes)
+            est = minhash_estimate(F.col("sig"), F.col("sig_old"), ND_N_HASHES)
             dupes = (
                 cands.join(sigs.withColumnRenamed("doc_id", "new_id"), "new_id")
                 .join(state_s, "old_id")
-                .where(est >= nd_threshold)
+                .where(est >= ND_THRESHOLD)
                 .select(F.col("new_id").alias("doc_id"))
                 .distinct()
             )
@@ -297,12 +239,12 @@ def curation_sink(
 
         sigs = minhash_signatures(
             fresh.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-            "doc_id", "text", k=nd_k, n_hashes=nd_n_hashes,
+            "doc_id", "text", k=ND_K, n_hashes=ND_N_HASHES,
         )
         from receiptanalyzerpipeline_spark.operators.dedup import MINHASH_FAMILY
 
         if not snap.batch_committed(buckets_path, batch_id):
-            state_b = _band_buckets(sigs, nd_n_hashes, nd_rows_per_band)
+            state_b = _band_buckets(sigs, ND_N_HASHES, ND_ROWS_PER_BAND)
             extra: dict = {
                 "batch_id": batch_id,
                 "bucket_fps": bucket_fps or 0,
@@ -336,9 +278,14 @@ def curation_sink(
             # manifest, so both exist — no-op (pointer repair only).
             snapshot_commit(batch_df.limit(0), batch_id)
             return
-        fresh = _curate_batch(
-            batch_df, _prior_fps_fn, id_col, text_col, rules, eval_docs, sample_rate
-        )
+        # Quality and in-batch exact dedup are the batch pipeline's own
+        # stage functions; survivors then anti-join the corpus state.
+        fresh = exact_dedup(
+            C.quality_filter(batch_df, id_col, text_col), text_col, id_col
+        ).withColumn("fp", content_fingerprint(F.col(text_col)))
+        prior_fps = _prior_fps(fresh)
+        if prior_fps is not None:
+            fresh = fresh.join(prior_fps, "fp", "left_anti")
         if near_dedup:
             fresh = _neardup_filter(fresh)
         fresh = fresh.persist()

@@ -44,18 +44,6 @@ from receiptanalyzerpipeline_spark.operators.dedup import (
 from receiptanalyzerpipeline_spark.sources import snapshots as snap
 
 
-def stamped_minhash_family(path: str) -> str | None:
-    """The MinHash hash family a persisted LSH state table was written
-    under, or None if the table doesn't exist / predates stamping.
-    Newest stamp wins (every commit carries the same value once a sink
-    is constructed)."""
-    for v in reversed(snap.versions(path)):
-        fam = snap._read_manifest(path, v).get("minhash_family")
-        if fam is not None:
-            return str(fam)
-    return None
-
-
 def check_minhash_family(*paths: str) -> None:
     """Refuse to probe LSH state written by a different signature hash
     family (ADVICE r10). Signatures from different families never
@@ -67,7 +55,7 @@ def check_minhash_family(*paths: str) -> None:
     for path in paths:
         if not snap.versions(path):
             continue  # fresh table: this sink's own commits will stamp it
-        fam = stamped_minhash_family(path)
+        fam = snap.newest_manifest_stamp(path, "minhash_family")
         if fam != MINHASH_FAMILY:
             raise ValueError(
                 f"LSH state at {path} was written by MinHash hash family "

@@ -193,3 +193,28 @@ def test_prefix_edit_join_result_invariant_under_routing(spark, monkeypatch):
         for r in B.prefix_filter_edit_join(df, "key", "name").collect()
     }
     assert fast == slow and len(fast) > 0
+
+
+def test_prefix_edit_join_null_groups_emit_no_pairs(spark):
+    """Window.partitionBy groups NULLs together; without the guard two
+    NULL-name rows formed a rep group and emitted an unverified
+    edit_dist=0 pair — diverging from the direct verify path, where
+    levenshtein(NULL, .) is NULL and equi-joins drop NULL keys."""
+    from receiptanalyzerpipeline_spark.operators.blocking import (
+        prefix_filter_edit_join,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, None, "x"),
+            (2, None, "x"),  # NULL-name pile: must produce nothing
+            (3, "acme", "x"),
+            (4, "acme", None),  # NULL block key: must produce nothing
+            (5, "acme", "x"),
+        ],
+        ["key", "name", "brand"],
+    )
+    out = prefix_filter_edit_join(
+        df, "key", "name", q=3, d=2, block_keys=("brand",)
+    ).collect()
+    assert {(r["key_a"], r["key_b"], r["edit_dist"]) for r in out} == {(3, 5, 0)}

@@ -113,6 +113,59 @@ def test_cli_curate_non_default_id_col(spark, tmp_path):
     assert got.count() > 0
 
 
+def test_cli_curate_sample_rate_keeps_mix_buckets(spark, tmp_path, sf_dir):
+    """`curate --sample-rate r` keeps exactly the unsampled run's ids whose
+    md5 bucket under salt "mix" is below r·65536. The bucket is recomputed
+    here with hashlib, so a changed salt or bound fails the test."""
+    import hashlib
+
+    src = f"{sf_dir}/documents.parquet"
+    full, sampled = str(tmp_path / "full"), str(tmp_path / "sampled")
+    assert main(["curate", "--input", src, "--output", full, "--shards", "2"]) == 0
+    assert main([
+        "curate", "--input", src, "--output", sampled, "--shards", "2",
+        "--sample-rate", "0.5",
+    ]) == 0
+
+    def ids(path):
+        return {r["doc_id"] for r in spark.read.parquet(path).select("doc_id").collect()}
+
+    def mix_bucket(doc_id):
+        return int(hashlib.md5(f"mix:{doc_id}".encode()).hexdigest()[:4], 16)
+
+    kept_all, kept = ids(full), ids(sampled)
+    assert kept == {i for i in kept_all if mix_bucket(i) < 0.5 * 65536}
+    assert kept and kept < kept_all
+
+
+def test_cli_curate_eval_set_non_default_id_col(spark, tmp_path, sf_dir):
+    """`curate --eval-set` decontaminates under any --id-col: the hit
+    list is keyed back to the caller's id column, so some documents are
+    dropped instead of the anti-join failing on a missing column."""
+    import duckdb
+
+    src = f"{sf_dir}/documents.parquet"
+    ev, inp = str(tmp_path / "eval.parquet"), str(tmp_path / "renamed.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT doc_id AS record_id, text FROM '{src}' WHERE source = 'src0') "
+        f"TO '{ev}' (FORMAT PARQUET)"
+    )
+    con.execute(
+        f"COPY (SELECT doc_id AS record_id, text FROM '{src}' WHERE source <> 'src0') "
+        f"TO '{inp}' (FORMAT PARQUET)"
+    )
+    plain, decon = str(tmp_path / "plain"), str(tmp_path / "decon")
+    base = ["curate", "--input", inp, "--id-col", "record_id", "--shards", "2"]
+    assert main(base + ["--output", plain]) == 0
+    assert main(base + ["--output", decon, "--eval-set", ev]) == 0
+
+    def ids(path):
+        return {r["record_id"] for r in spark.read.parquet(path).select("record_id").collect()}
+
+    assert ids(decon) < ids(plain)
+
+
 def test_cli_audit_clean_and_dirty(spark, capsys):
     from receiptanalyzerpipeline_spark.cli import main
 

@@ -370,3 +370,96 @@ def test_vacuum_detached_scratch_reclaims_shared_roots(spark, tmp_path):
         assert not os.path.exists(store.root)
     finally:
         spark.conf.unset(ITER_STORE_DIR_CONF)
+
+
+def test_iterstore_uses_configured_shared_root(spark, tmp_path):
+    from receiptanalyzerpipeline_spark.operators.components import (
+        ITER_STORE_DIR_CONF,
+        _IterStore,
+    )
+
+    root = str(tmp_path / "shared-scratch")
+    spark.conf.set(ITER_STORE_DIR_CONF, root)
+    try:
+        store = _IterStore(spark, "t-")
+        # Round tables land under the configured (cluster-visible) root,
+        # never a driver-local mkdtemp.
+        assert store._shared
+        assert store.root.startswith(root)
+        a = store.put(spark.range(5))
+        assert a.count() == 5
+        assert os.path.isdir(store.root)
+        b = store.put(a.withColumn("x", F.col("id") * 2))
+        store.drop(a)  # superseded round's files deleted via Hadoop FS
+        remaining = [d for d in os.listdir(store.root)]
+        assert remaining == ["t1"]
+        out = store.finish(b)
+        assert out.count() == 5
+        assert not os.path.exists(store.root)  # finish vacuums the store
+    finally:
+        spark.conf.unset(ITER_STORE_DIR_CONF)
+
+
+def test_iterstore_prefers_checkpoint_dir_over_tempdir(spark, tmp_path):
+    from receiptanalyzerpipeline_spark.operators.components import _IterStore
+
+    sc = spark.sparkContext
+    ckpt = str(tmp_path / "ckpt")
+    sc.setCheckpointDir(ckpt)
+    try:
+        store = _IterStore(spark, "t-")
+        assert store._shared
+        # Spark normalizes the checkpoint dir to a file: URI; compare suffix.
+        assert f"/ckpt/" in store.root or store.root.startswith(ckpt)
+        df = store.put(spark.range(3))
+        assert df.count() == 3
+        store.close()
+    finally:
+        # Leave no checkpoint dir configured for other tests (Scala
+        # setter via py4j; there is no public unsetCheckpointDir).
+        scala_none = sc._jvm.scala.Option.empty()
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(scala_none)
+        assert sc.getCheckpointDir() is None
+
+
+def test_iterstore_components_end_to_end_with_shared_root(spark, tmp_path):
+    from receiptanalyzerpipeline_spark.operators.components import (
+        ITER_STORE_DIR_CONF,
+        connected_components,
+    )
+
+    spark.conf.set(ITER_STORE_DIR_CONF, str(tmp_path / "cc"))
+    try:
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
+        )
+        labels = {
+            r["id"]: r["component"] for r in connected_components(edges).collect()
+        }
+        assert labels == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+        # Everything the iteration wrote under the shared root is gone.
+        leftovers = [
+            p for p in (tmp_path / "cc").glob("rap-cc-*")
+        ]
+        assert leftovers == []
+    finally:
+        spark.conf.unset(ITER_STORE_DIR_CONF)
+
+
+def test_iterstore_detach_keeps_files_until_exit(spark):
+    """Round 8: materialized suites return plans that read the store's
+    part tables directly; close() must become a no-op after detach so
+    the builder's ``finally`` can't delete files the returned plan
+    still reads (cleanup moves to interpreter exit)."""
+    from receiptanalyzerpipeline_spark.operators.components import _IterStore
+
+    store = _IterStore(spark, "rap-detach-test-")
+    df = store.put(spark.range(10))
+    out = store.detach(df)
+    store.close()  # builder's finally fires — must be a no-op now
+    assert os.path.isdir(store.root)
+    assert out.count() == 10  # plan still reads the detached files
+    # Manual cleanup (atexit would otherwise handle it at exit).
+    store._detached = False
+    store.close()
+    assert not os.path.exists(store.root)

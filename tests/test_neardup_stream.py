@@ -357,7 +357,6 @@ def test_minhash_family_stamp_guards_persisted_state(spark, tmp_path):
     from receiptanalyzerpipeline_spark.operators.dedup import MINHASH_FAMILY
     from receiptanalyzerpipeline_spark.streaming.neardup_stream import (
         check_minhash_family,
-        stamped_minhash_family,
     )
 
     landing = tmp_path / "landing"
@@ -368,7 +367,7 @@ def test_minhash_family_stamp_guards_persisted_state(spark, tmp_path):
     _run(spark, landing, corpus, buckets, str(tmp_path / "cp1"))
 
     # Writes stamp the current family; a same-family restart constructs.
-    assert stamped_minhash_family(buckets) == MINHASH_FAMILY
+    assert snap.newest_manifest_stamp(buckets, "minhash_family") == MINHASH_FAMILY
     neardup_dedup_sink(corpus, buckets)  # no raise
 
     # Tamper the stamp to simulate state written by another family.

@@ -10,6 +10,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -194,3 +195,40 @@ def test_sweep_skip_classification_requires_oracle_side():
             "InterruptException" in msg or "OutOfMemoryException" in msg
         )
         assert soft is is_skip
+
+
+def test_compare_setwise_digest(spark, tmp_path, sf_dir):
+    """The sf1 sweep's out-of-core compare: streaming multiset digest
+    over the Spark parquet and the oracle query. Green on equal bags,
+    red on a single flipped value and on a pair-cancelling duplicate
+    (the xor blind spot the sum component covers)."""
+    from receiptanalyzerpipeline_spark.oracle import compare_setwise, duckdb_connect
+
+    con = duckdb_connect(sf_dir)
+    df = spark.createDataFrame(
+        [(1, 1.5, "a"), (2, 2.5, "b"), (3, float("nan"), None)],
+        ["k", "v", "s"],
+    )
+    sql = """
+        SELECT * FROM (VALUES (CAST(1 AS BIGINT), 1.5, 'a'),
+                              (CAST(2 AS BIGINT), 2.5, 'b'),
+                              (CAST(3 AS BIGINT), CAST('nan' AS DOUBLE), NULL))
+        AS t(k, v, s)
+    """
+    r = compare_setwise("t_green", df, sql, con, str(tmp_path))
+    assert r.ok, str(r)
+
+    flipped = df.withColumn(
+        "v", F.when(F.col("k") == 2, 2.5000001).otherwise(F.col("v"))
+    )
+    r2 = compare_setwise("t_flip", flipped, sql, con, str(tmp_path))
+    assert not r2.ok and "digest" in r2.mismatches[-1]
+
+    # Same row twice vs two distinct rows: xor cancels, sum must catch.
+    dup = spark.createDataFrame([(1, 1.0, "x"), (1, 1.0, "x")], ["k", "v", "s"])
+    sql_dup = """
+        SELECT * FROM (VALUES (CAST(1 AS BIGINT), 1.0, 'x'),
+                              (CAST(2 AS BIGINT), 2.0, 'y')) AS t(k, v, s)
+    """
+    r3 = compare_setwise("t_dup", dup, sql_dup, con, str(tmp_path))
+    assert not r3.ok

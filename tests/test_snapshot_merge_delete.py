@@ -705,3 +705,37 @@ def test_manifest_extra_static_reserved_set(spark, tmp_path):
         snap.write_snapshot(df, p, mode="append", manifest_extra={"stats": {}})
     # Namespaced app metadata still travels.
     assert snap.write_snapshot(df, p, mode="append", manifest_extra={"app_x": 1}) == 0
+
+
+def test_manifest_extra_reserved_key_collision_raises(spark, tmp_path):
+    from receiptanalyzerpipeline_spark.sources import snapshots as snap
+
+    p = str(tmp_path / "tbl")
+    df = spark.range(3).select(F.col("id").alias("k"))
+    # Benign, namespaced metadata still travels with the commit.
+    v = snap.write_snapshot(df, p, mode="append", manifest_extra={"app_tag": "ok"})
+    assert v == 0
+    with pytest.raises(ValueError, match="collide"):
+        snap.write_snapshot(df, p, mode="append", manifest_extra={"files": []})
+    # The refused commit published nothing.
+    assert snap.current_version(p) == 0
+
+
+def test_merge_upsert_manifest_extra_guarded(spark, tmp_path):
+    from receiptanalyzerpipeline_spark.sources import snapshots as snap
+
+    p = str(tmp_path / "tbl")
+    snap.write_snapshot(
+        spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"]), p, mode="append"
+    )
+    src = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "v"])
+    with pytest.raises(ValueError, match="collide"):
+        snap.merge_upsert(spark, src, p, ["k"], manifest_extra={"merge_of": 99})
+    assert snap.current_version(p) == 0
+    v = snap.merge_upsert(spark, src, p, ["k"], manifest_extra={"app_tag": "x"})
+    assert v == 1
+    rows = {
+        (r["k"], r["v"])
+        for r in snap.read_snapshot(spark, p).collect()
+    }
+    assert rows == {(1, "a"), (2, "B"), (3, "c")}
