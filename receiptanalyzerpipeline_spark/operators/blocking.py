@@ -1,47 +1,33 @@
-"""Occupancy-targeted automatic blocking for entity resolution.
+"""Edit-distance joins for entity resolution.
 
-The ER quadratic trap (round-4, q_er3's own 10× experiment): blocking on
-a single low-cardinality field makes candidate pairs grow as
-sum-over-blocks(cnt²) — quadratic in corpus size. The fix that round was a
-HAND-derived composite key (nation, segment, balance-bucket). This module
-generalizes the idea the ANN path already ships as
-``similarity.auto_n_planes`` (pick hash planes so bucket occupancy stays
-constant): pick/compose BLOCKING KEYS from data statistics until the
-candidate-pair mass is ~linear in the corpus.
+``prefix_filter_edit_join`` returns every pair of records whose names
+are within Levenshtein ``d`` (and whose optional exact ``block_keys``
+are equal). Candidates come from the lossless symmetric rarest-q-gram
+prefix filter (``prefix_filter_pairs``): any pair within edit distance
+``d`` shares at least one of each member's ``d*q+1`` globally rarest
+q-grams, so a rare-gram equi-join plus a length filter finds every true
+pair without ever forming block² or corpus² candidate sets. Exact
+duplicates of (block_keys, name) collapse to one representative before
+discovery, so both candidate mass and the Levenshtein count scale with
+distinct content. q_er1 (brand-blocked) and q_er2 (unblocked) are the
+registry's two callers.
 
-The statistic: for a key set S, ``pair_mass(S) = Σ_blocks cnt²`` is the
-exact number of candidate pairs a self-join on S generates (up to the
-diagonal). Requiring ``pair_mass ≤ target_pairs_per_record × N`` bounds
-the expected per-record candidate list by a constant — the same invariant
-``auto_n_planes`` maintains, expressed on categorical keys instead of
-hyperplane counts.
-
-The search is greedy: at each step add the candidate column whose
-composite most reduces pair mass, stop as soon as the budget holds (or
-keys run out — then the caller knows blocking alone cannot bound this
-corpus and needs a cap, cf. ``similarity.BUCKET_CAP``). Each evaluation
-is ONE map-side-combined aggregate returning a 2-value row; the stats are
-bounded driver-held model state, the documented exception class (MLlib
-fit / IVF sample / BPE argmax). At 100 TB the stats jobs scan the key
-columns only (column-pruned) and everything downstream is plain equi-join
-blocking.
+Join strategy is the one size decision: past ``SHUFFLE_ONLY_ROWS``
+input rows, read from plan statistics or parquet footers by
+``_estimated_rows`` without running a Spark job, the corpus-sized
+joins are merge-hinted so no broadcast build scales with the corpus.
+Either strategy returns the same rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "pair_mass",
-    "auto_blocking_keys",
-    "blocked_pairs",
-    "join_cardinality",
     "prefix_filter_pairs",
     "prefix_filter_edit_join",
 ]
-
-TARGET_PAIRS_PER_RECORD = 32.0
 
 
 # Inputs past this row count route the prefix machinery's joins through
@@ -87,8 +73,8 @@ def _estimated_rows(df: DataFrame) -> int:
        rows — the safe direction.
     3. ``sizeInBytes`` over a deliberately small assumed row width.
 
-    Callers that know their scale (q_er1/q_er2-style plans) can bypass
-    the estimate by passing ``shuffle_only`` explicitly."""
+    Callers that know their scale can bypass the estimate by passing
+    ``shuffle_only`` explicitly."""
     stats = df._jdf.queryExecution().optimizedPlan().stats()
     rc = stats.rowCount()
     if rc.isDefined():
@@ -128,9 +114,7 @@ def prefix_filter_pairs(
     shuffle_only: bool | None = None,
 ) -> DataFrame:
     """LOSSLESS candidate pairs for ``levenshtein(name_a, name_b) <= d``:
-    the symmetric rarest-(d*q+1)-gram prefix filter (q_er2's machinery,
-    factored out so any blocked fuzzy join can route through it when the
-    coarse blocking's pair mass explodes — VERDICT r6 task 4).
+    the symmetric rarest-(d*q+1)-gram prefix filter.
 
     Theorem: strings within edit distance d share at least
     max(|s|,|t|) − q + 1 − d·q q-grams, so any pair under the threshold
@@ -148,8 +132,7 @@ def prefix_filter_pairs(
 
     Returns (key_a, key_b, name_a, name_b) distinct candidates; callers
     apply the edit-distance verify. Output is a SUPERSET of the true
-    pairs and the verify stage makes the composition exact, so routing
-    between this and a coarse equi-join cannot change results.
+    pairs and the verify stage makes the composition exact.
     """
     prefix_n = d * q + 1
     if shuffle_only is None:
@@ -209,96 +192,6 @@ def prefix_filter_pairs(
         .select("key_a", "key_b", "name_a", "name_b")
         .distinct()
     )
-
-
-def pair_mass(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(Σ_blocks cnt², N) for blocks keyed by ``cols`` (NULL keys form
-    their own block, matching equi-join-on-null-safe semantics only if
-    the caller uses eqNullSafe; plain equi-joins drop NULL blocks, so
-    this is an upper bound there)."""
-    if not cols:
-        n = df.count()
-        return n * n, n
-    row = (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .agg(
-            F.sum(F.col("cnt") * F.col("cnt")).cast("long").alias("m"),
-            F.sum("cnt").cast("long").alias("n"),
-        )
-        .first()
-    )
-    return (int(row["m"] or 0), int(row["n"] or 0))
-
-
-def auto_blocking_keys(
-    df: DataFrame,
-    candidates: list[str],
-    target_pairs_per_record: float = TARGET_PAIRS_PER_RECORD,
-    max_keys: int = 4,
-) -> list[str]:
-    """Greedily compose blocking keys until candidate-pair mass is linear:
-    ``pair_mass(keys) ≤ target_pairs_per_record × N``.
-
-    Returns the chosen key list IN SELECTION ORDER (most discriminating
-    first). If the budget still doesn't hold after ``max_keys`` (e.g.
-    exact-duplicate piles no key can split), the best-found keys are
-    returned anyway — callers should then add an occupancy cap; use
-    ``pair_mass`` on the result to detect that case.
-    """
-    if not candidates:
-        raise ValueError("need at least one candidate blocking column")
-    chosen: list[str] = []
-    remaining = list(candidates)
-    n = df.count()
-    budget = target_pairs_per_record * max(n, 1)
-    mass = n * n
-    while remaining and mass > budget and len(chosen) < max_keys:
-        scored = [(pair_mass(df, chosen + [c])[0], c) for c in remaining]
-        best_mass, best_col = min(scored)
-        if best_mass >= mass:  # no candidate improves: stop
-            break
-        chosen.append(best_col)
-        remaining.remove(best_col)
-        mass = best_mass
-    return chosen
-
-
-def blocked_pairs(
-    a: DataFrame,
-    b: DataFrame,
-    keys: list[str] | list[tuple[str, str]],
-) -> DataFrame:
-    """Candidate pairs via equi-join on the blocking keys — the shape that
-    shuffles on the composite key and never goes all-pairs. ``keys`` may
-    be shared column names or (col_in_a, col_in_b) pairs."""
-    cond: Column | None = None
-    for k in keys:
-        ka, kb = (k, k) if isinstance(k, str) else k
-        term = a[ka] == b[kb]
-        cond = term if cond is None else (cond & term)
-    if cond is None:
-        raise ValueError("need at least one blocking key")
-    return a.join(b, cond)
-
-
-def join_cardinality(a: DataFrame, b: DataFrame, on: list[str]) -> int:
-    """EXACT output row count of the equi-join a ⋈ b on ``on`` — computed
-    from the two sides' per-key counts (Σ_k cnt_a(k)·cnt_b(k)) without
-    running the join. The two-sided sibling of ``pair_mass``: two
-    map-side-combined aggregates plus a key-cardinality join, so the
-    preflight costs O(distinct keys) however large the join output would
-    be — run it before an expensive join to decide salting
-    (``skew.detect_hot_keys``), blocking, or a bail-out, the same way
-    the plan audit vets shapes before execution."""
-    ca = a.groupBy(*on).agg(F.count(F.lit(1)).alias("__ca"))
-    cb = b.groupBy(*on).agg(F.count(F.lit(1)).alias("__cb"))
-    row = (
-        ca.join(cb, list(on))
-        .agg(F.sum(F.col("__ca") * F.col("__cb")).cast("long").alias("m"))
-        .first()
-    )
-    return int(row["m"] or 0)
 
 
 def prefix_filter_edit_join(

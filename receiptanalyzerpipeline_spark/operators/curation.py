@@ -147,9 +147,16 @@ def contaminated_ids(
     from receiptanalyzerpipeline_spark.operators.dedup import (
         _collapse_reps,
         shingle_index,
+        word_shingles,
     )
 
-    ev = shingle_index(eval_docs, id_col, text_col, k).select("shingle").distinct()
+    # Only the eval TEXT matters, so the eval set may be keyed by any
+    # column name (or none).
+    ev = (
+        eval_docs.select(F.explode(word_shingles(F.col(text_col), k)).alias("shingle"))
+        .where(F.col("shingle").isNotNull())
+        .distinct()
+    )
     reps, members = _collapse_reps(train, id_col, text_col)
     tr = shingle_index(reps, "doc_id", "_text", k)
     rep_hits = (

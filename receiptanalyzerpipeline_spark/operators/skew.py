@@ -84,8 +84,8 @@ def detect_hot_keys(
     max_keys: int = 1000,
 ):
     """Data-driven hot-key detection (the occupancy-targeting idea a third
-    time: ``auto_n_planes`` sizes LSH buckets, ``auto_blocking_keys``
-    sizes ER blocks, THIS sizes join salts). One map-side-combined
+    time: ``auto_n_planes`` sizes LSH buckets, ``ivf.auto_n_cells``
+    sizes IVF cells, THIS sizes join salts). One map-side-combined
     aggregate finds keys whose group exceeds a task's row capacity; the
     heaviest key sets the salt count (ceil(max/capacity)). The returned
     hot-key frame is LIMIT-bounded to ``max_keys`` by descending count —

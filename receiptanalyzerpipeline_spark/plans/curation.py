@@ -330,96 +330,38 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE levenshtein(a.p_name, b.p_name) <= 2
     """,
     doc=(
-        "Blocked fuzzy matching (entity resolution): candidate pairs come "
-        "from a blocking-key EQUI-join (p_brand), then exact Levenshtein "
-        "<= 2 scores each candidate — the vendor-string dedup shape for "
-        "OCR'd text (the reference's vendor names, anarcptlib.py:44-50, "
-        "arrive with exactly these 1-2 character OCR edits). Cost is "
-        "sum(block^2), never corpus^2; blocks shuffle on the blocking "
-        "key. Both engines implement classic Levenshtein on ints — "
-        "engine-portable with no rounding concerns."
+        "Blocked fuzzy matching (entity resolution): every same-brand "
+        "(p_brand) part pair within Levenshtein 2 — the vendor-string "
+        "dedup shape for OCR'd text (the reference's vendor names, "
+        "anarcptlib.py:44-50, arrive with exactly these 1-2 character OCR "
+        "edits). Candidates come from q_er2's lossless rarest-3-gram "
+        "prefix filter with brand as an extra equi-join key, so cost "
+        "scales with per-(brand, gram) co-occurrence, never block^2; "
+        "exact Levenshtein verifies each candidate. The oracle is the "
+        "exhaustive brand self-join. Both engines implement classic "
+        "Levenshtein on ints — engine-portable with no rounding concerns."
     ),
     tags=("dedup", "entity-resolution", "fuzzy"),
     order=("key_a", "key_b"),
 )
 def q_er1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _er1_plan(spark, sf_dir)
-
-
-def _er1_plan(
-    spark: SparkSession, sf_dir: str, pairs_per_record_budget: float = 64.0
-) -> DataFrame:
-    # Occupancy-targeted routing (VERDICT r6 task 4): the coarse
-    # (brand, length-band) blocking is linear-ish at small SF, but on a
-    # clone-dense corpus its per-block pair mass grows quadratically —
-    # the sf1 sweep killed the JVM after 348 s of in-block Levenshteins.
-    # blocking.join_cardinality computes the EXACT candidate count of the
-    # coarse join from per-key counts (O(distinct keys), no join run);
-    # when it exceeds the pairs-per-record budget, the plan routes
-    # through the LOSSLESS rarest-q-gram prefix filter
-    # (blocking.prefix_filter_pairs, q_er2's machinery) with brand as an
-    # exact blocking key — candidate mass then scales with true-match
-    # density, not block². Both branches verify with the same exact
-    # Levenshtein, so results (and the oracle hash) are identical either
-    # way; only the candidate-generation cost differs.
-    from receiptanalyzerpipeline_spark.operators import blocking as B
+    # Lossless rarest-q-gram prefix filter with brand as an exact
+    # blocking key (blocking.prefix_filter_edit_join holds the
+    # derivation): discovery and Levenshtein run once per distinct
+    # (brand, name), clone members expand back mechanically, and
+    # candidate mass scales with true-match density, not block^2.
+    from receiptanalyzerpipeline_spark.operators.blocking import (
+        prefix_filter_edit_join,
+    )
 
     part = table(spark, sf_dir, "part")
-    band_w = 4
-    a = part.select(
-        F.col("p_partkey").alias("key_a"),
-        F.col("p_name").alias("name_a"),
-        F.col("p_brand").alias("brand"),
-        F.floor(F.length("p_name") / band_w).alias("band"),
-    )
-    b = part.select(
-        F.col("p_partkey").alias("key_b"),
-        F.col("p_name").alias("name_b"),
-        F.col("p_brand").alias("brand"),
-        F.floor(F.length("p_name") / band_w).alias("band_b"),
-    )
-    b3 = b.withColumn(
-        "band",
-        F.explode(F.array(F.col("band_b") - 1, F.col("band_b"), F.col("band_b") + 1)),
-    ).drop("band_b")
-
-    n = part.count()
-    coarse_pairs = B.join_cardinality(a, b3, ["brand", "band"])
-    if coarse_pairs <= pairs_per_record_budget * max(n, 1):
-        # Length band is lossless for edit ≤ 2 (width 4 ≥ max edit, and
-        # adjacent bands are joined, so |len diff| ≤ 2 pairs can never
-        # span non-adjacent bands). merge hint ⇒ both sides shuffle on
-        # (brand, band): parallelism = distinct keys, never a one-task
-        # broadcast probe (round-6 hardening, kept for the coarse path).
-        cands = (
-            a.hint("merge")
-            .join(b3, ["brand", "band"])
-            .where(F.col("key_a") < F.col("key_b"))
-            .where((F.length("name_a") - F.length("name_b")).between(-2, 2))
-            .select("key_a", "key_b", "name_a", "name_b")
-        )
-    else:
-        # Lossless prefix-filter edit join with exact-duplicate collapse
-        # (blocking.prefix_filter_edit_join, the full derivation lives
-        # there): discovery and Levenshtein run once per distinct
-        # (brand, name); clone members expand back mechanically.
-        return B.prefix_filter_edit_join(
-            part.withColumnRenamed("p_brand", "brand"),
-            "p_partkey",
-            "p_name",
-            q=3,
-            d=2,
-            block_keys=("brand",),
-        )
-    return (
-        cands.select(
-            "key_a",
-            "key_b",
-            "name_a",
-            "name_b",
-            F.levenshtein("name_a", "name_b").cast("long").alias("edit_dist"),
-        )
-        .where(F.col("edit_dist") <= 2)
+    return prefix_filter_edit_join(
+        part.withColumnRenamed("p_brand", "brand"),
+        "p_partkey",
+        "p_name",
+        q=3,
+        d=2,
+        block_keys=("brand",),
     )
 
 

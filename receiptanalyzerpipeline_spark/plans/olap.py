@@ -329,7 +329,7 @@ def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT 'hll', '_ALL_', CAST(COUNT(DISTINCT o_custkey) AS DOUBLE), TRUE
             FROM orders
             UNION ALL
-            -- blk: auto-blocking pair-mass ladder (operators/blocking.py)
+            -- blk: blocking pair-mass ladder (sum of squared block counts)
             SELECT 'blk', g, e, tol FROM (
                 SELECT 'k1_nat' AS g, CAST(SUM(cnt*cnt) AS DOUBLE) AS e,
                        SUM(cnt*cnt) <= 32 * SUM(cnt) AS tol
@@ -353,9 +353,9 @@ def q_a11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "approx_count_distinct, GK approx_percentile, DataSketches HLL "
         "merge, and a portable count-min sketch) emitted NEXT TO the "
         "exact value it estimates, plus a within_tol boolean computed "
-        "Spark-side. Round 5 adds a 'blk' part: the exact auto-blocking "
-        "pair-mass statistic (sum of squared block counts, "
-        "operators/blocking.py) for the q_er3 key ladder, with its "
+        "Spark-side. Round 5 adds a 'blk' part: the exact blocking "
+        "pair-mass statistic (sum of squared block counts) for the "
+        "q_er3 key ladder, with its "
         "32-pairs-per-record occupancy budget emitted as data — the "
         "coarse key fails the budget, the composites hold it. "
         "The oracle replays the exact side and asserts the "
@@ -485,13 +485,13 @@ def q_a5_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("within_tol"),
     )
-    # --- blk: auto-blocking pair-mass statistic (operators/blocking.py) -
-    # The EXACT candidate-pair count Σ_blocks cnt² for the q_er3 key
-    # ladder, with the ≤32·N occupancy budget emitted as data: the oracle
-    # recomputes both sides, so the driver hash pins the statistic the
-    # greedy auto_blocking_keys search ranks keys by (the booleans show
-    # the single coarse key failing the budget and the composites holding
-    # it — the round-4 ER quadratic trap, verified every round).
+    # --- blk: blocking pair-mass statistic ------------------------------
+    # The EXACT candidate-pair count Σ_blocks cnt² that an equi-join on
+    # each q_er3 key set would generate, with the ≤32·N occupancy budget
+    # emitted as data: the oracle recomputes both sides, so the oracle
+    # hash pins the statistic (the booleans show the single coarse key
+    # failing the budget and the composites holding it — the round-4 ER
+    # quadratic trap, verified every round).
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").cast("long").alias("nat"),
         F.col("c_mktsegment").alias("seg"),

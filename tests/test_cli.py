@@ -141,29 +141,39 @@ def test_cli_curate_sample_rate_keeps_mix_buckets(spark, tmp_path, sf_dir):
 def test_cli_curate_eval_set_non_default_id_col(spark, tmp_path, sf_dir):
     """`curate --eval-set` decontaminates under any --id-col: the hit
     list is keyed back to the caller's id column, so some documents are
-    dropped instead of the anti-join failing on a missing column."""
+    dropped instead of the anti-join failing on a missing column. Only
+    the eval set's text is read, so its own id column may be named
+    differently from the corpus's."""
     import duckdb
 
     src = f"{sf_dir}/documents.parquet"
-    ev, inp = str(tmp_path / "eval.parquet"), str(tmp_path / "renamed.parquet")
+    inp = str(tmp_path / "renamed.parquet")
     con = duckdb.connect()
-    con.execute(
-        f"COPY (SELECT doc_id AS record_id, text FROM '{src}' WHERE source = 'src0') "
-        f"TO '{ev}' (FORMAT PARQUET)"
-    )
     con.execute(
         f"COPY (SELECT doc_id AS record_id, text FROM '{src}' WHERE source <> 'src0') "
         f"TO '{inp}' (FORMAT PARQUET)"
     )
-    plain, decon = str(tmp_path / "plain"), str(tmp_path / "decon")
+    evals = {}
+    for eval_id in ("record_id", "doc_id"):
+        evals[eval_id] = str(tmp_path / f"eval_{eval_id}.parquet")
+        con.execute(
+            f"COPY (SELECT doc_id AS {eval_id}, text FROM '{src}' WHERE source = 'src0') "
+            f"TO '{evals[eval_id]}' (FORMAT PARQUET)"
+        )
     base = ["curate", "--input", inp, "--id-col", "record_id", "--shards", "2"]
+    plain = str(tmp_path / "plain")
     assert main(base + ["--output", plain]) == 0
-    assert main(base + ["--output", decon, "--eval-set", ev]) == 0
 
     def ids(path):
         return {r["record_id"] for r in spark.read.parquet(path).select("record_id").collect()}
 
-    assert ids(decon) < ids(plain)
+    kept = {}
+    for eval_id, ev in evals.items():
+        decon = str(tmp_path / f"decon_{eval_id}")
+        assert main(base + ["--output", decon, "--eval-set", ev]) == 0
+        kept[eval_id] = ids(decon)
+    assert kept["record_id"] < ids(plain)
+    assert kept["doc_id"] == kept["record_id"]
 
 
 def test_cli_audit_clean_and_dirty(spark, capsys):

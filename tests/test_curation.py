@@ -301,19 +301,6 @@ def test_temperature_mixture_flattens_skewed_sources(spark, tmp_path):
     assert abs(out["head"]["kept_frac"] - out["head"]["rate"]) < 0.05
 
 
-def test_er1_prefix_branch_matches_coarse_branch(spark):
-    """VERDICT r6 task 4: q_er1's occupancy routing must be result-
-    invariant — the lossless q-gram prefix branch (rep-collapsed) and
-    the coarse (brand, band) branch produce the identical pair set."""
-    from receiptanalyzerpipeline_spark.plans.curation import _er1_plan
-
-    sf = "/root/testdata/sf0.001"
-    coarse = {tuple(r) for r in _er1_plan(spark, sf, pairs_per_record_budget=1e18).collect()}
-    prefix = {tuple(r) for r in _er1_plan(spark, sf, pairs_per_record_budget=0.0).collect()}
-    assert len(coarse) > 0
-    assert prefix == coarse
-
-
 def test_contaminated_ids_distinct_under_duplicate_doc_ids(spark):
     """ADVICE r8: the rep-collapsed path carries one member row per
     INPUT row, so a duplicated (id, text) train row used to emit its id

@@ -75,7 +75,6 @@ EAGER_ALLOWED: dict[str, str] = {
     "q_d2_neardup_suite": "spill + iterate: materialized suite; members run components",
     "q_d7_dedup_clusters": "iterate: connected components",
     "q_e3_ocr_pipeline": "write: OCR golden path with quarantine sink + rename sink",
-    "q_er1_fuzzy_match": "fit: occupancy-targeted auto-blocking calibrates block keys",
     "q_g1_graph_suite": "iterate: pagerank + components rounds (parquet state)",
     "q_g1_pagerank": "iterate: 3 pagerank rounds (parquet state)",
     "q_u1_setops": "write: SQL write-lifecycle part (CTAS/INSERT/MERGE/DELETE then AS-OF read)",
