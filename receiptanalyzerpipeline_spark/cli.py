@@ -49,30 +49,31 @@ def _backend(name: str, rate_per_sec: float | None = None):
 def cmd_analyze(args: argparse.Namespace) -> int:
     """One-shot batch: images → ahash → OCR → curated tables (SURVEY §3.1)."""
     from receiptanalyzerpipeline_spark.multimodal.images import read_images
-    from receiptanalyzerpipeline_spark.multimodal.ocr import ocr_documents
+    from receiptanalyzerpipeline_spark.multimodal.ocr import hashed_images, ocr_documents
     from receiptanalyzerpipeline_spark.sources.textract import (
         extract_line_items,
         flatten_summary_fields,
         pivot_receipt_summary,
     )
+    from receiptanalyzerpipeline_spark.streaming.ingest import curated_keys, merge_curated
 
     spark = _spark()
     path = args.image_file or args.path
     images = read_images(spark, path, glob=args.glob)
     work = Path(args.work_dir)
+    curated = str(work / "receipt_summary"), str(work / "receipt_line_item")
     backend = _backend(args.backend, args.ocr_rate)
-    # One hash, OCR and parse pass shared by both show()s and both writes.
-    with ocr_documents(images, str(work / "raw_zone"), backend) as docs:
-        summary = pivot_receipt_summary(flatten_summary_fields(docs))
-        items = extract_line_items(docs)
-        summary.show(truncate=False)
-        items.show(truncate=False)
-        if args.write:
-            from receiptanalyzerpipeline_spark.streaming.ingest import merge_curated
-
-            merge_curated(
-                summary, items, str(work / "receipt_summary"), str(work / "receipt_line_item")
-            )
+    # One hash, OCR and parse pass shared by both show()s and both writes;
+    # the curated tables are probed before the OCR write, as in `watch`.
+    with hashed_images(images) as (hashed, hashes):
+        held = curated_keys(spark, *curated, hashes) if args.write else None
+        with ocr_documents(hashed, hashes, str(work / "raw_zone"), backend) as docs:
+            summary = pivot_receipt_summary(flatten_summary_fields(docs))
+            items = extract_line_items(docs)
+            summary.show(truncate=False)
+            items.show(truncate=False)
+            if held is not None:
+                merge_curated(summary, items, held, *curated)
     return 0
 
 

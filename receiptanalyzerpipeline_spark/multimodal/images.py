@@ -20,10 +20,12 @@ Decode is pluggable (this container has no PIL):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -80,16 +82,25 @@ def _ahash_hex(content: bytes | None) -> str | None:
     return format(val, "016x")
 
 
-def with_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Add ``ahash`` (16-hex string) + ``ahash_bits`` (int64, two's
-    complement of the 64-bit hash) columns. Arrow-batched; decode+hash run
-    executor-side, embarrassingly parallel across partitions."""
+@functools.lru_cache(maxsize=1)
+def ahash_column(sc: SparkContext, content_col: str = "content") -> Column:
+    """The aHash of ``content_col`` as a 16-hex string: an Arrow-batched
+    pandas UDF, built (and its function pickled) once per SparkContext.
+    Unlike a built-in expression, the UDF carries its context's Python
+    accumulator, so a restarted context must not reuse it."""
 
     @F.pandas_udf("string")
     def _ahash(content: pd.Series) -> pd.Series:
         return content.map(_ahash_hex)
 
-    out = df.withColumn("ahash", _ahash(F.col(content_col)))
+    return _ahash(F.col(content_col))
+
+
+def with_ahash(df: DataFrame, content_col: str = "content") -> DataFrame:
+    """Add ``ahash`` (16-hex string) + ``ahash_bits`` (int64, two's
+    complement of the 64-bit hash) columns. Arrow-batched; decode+hash run
+    executor-side, embarrassingly parallel across partitions."""
+    out = df.withColumn("ahash", ahash_column(df.sparkSession.sparkContext, content_col))
     # hex → signed int64 with exact bit pattern: shiftleft wraps (Java <<),
     # which IS two's complement — a plain high*2^32 multiply would overflow
     # under ANSI mode for hashes with the top bit set.

@@ -8,14 +8,17 @@ Here OCR is a ``mapInPandas`` stage with:
 - **pluggable backends**: ``TextractBackend`` (boto3, client built once per
   partition, reference parity) or ``StubBackend`` (deterministic canned
   documents keyed by content hash — CI runs with no AWS at all);
-- **write-once memoization**: ``ocr_with_cache`` anti-joins the input
-  against a raw-zone parquet keyed by ``ahash`` and OCRs only the misses,
-  so retries, AQE re-execution, and re-runs never re-pay the OCR call —
-  the *plan-shape* optimization the reference encodes as pipeline order
-  (hash/dedup before Textract, SURVEY §4.1);
-- **one pass per batch**: ``ocr_documents`` persists the hashed images and
-  the parsed documents, so a caller with several sinks hashes, probes the
-  cache and parses once;
+- **write-once memoization**: ``ocr_with_cache`` probes a raw-zone
+  parquet keyed by ``ahash`` with the batch's own hashes (one filtered
+  scan, collected) and OCRs only the misses, so retries, AQE re-execution
+  and re-runs never re-pay the OCR call, and the probe's cost is set by
+  the batch, not by the size of the cache — the *plan-shape*
+  optimization the reference encodes as pipeline order (hash/dedup before
+  Textract, SURVEY §4.1);
+- **one pass per batch**: ``hashed_images`` persists the hashed images
+  and collects their hashes, and ``ocr_documents`` persists the parsed
+  documents, so a caller with several sinks hashes, probes the cache and
+  parses once;
 - OCR results as JSON strings in the raw zone (schema applied on read via
   ``from_json`` with sources.textract.TEXTRACT_SCHEMA) so the cache is
   append-only and schema-evolution-safe (K3 semantics).
@@ -25,16 +28,15 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from contextlib import contextmanager
 from typing import Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from receiptanalyzerpipeline_spark.multimodal.images import with_ahash
+from receiptanalyzerpipeline_spark.multimodal.images import ahash_column
 from receiptanalyzerpipeline_spark.sources.textract import TEXTRACT_SCHEMA
 
 OCR_RESULT_SCHEMA = "ahash string, doc_json string, ocr_error string"
@@ -250,73 +252,112 @@ def parse_ocr_documents(raw: DataFrame) -> DataFrame:
     )
 
 
+def in_keys(col: str, keys: Iterable[str]) -> str:
+    """SQL text of ``col IN ('k1', 'k2', ...)``, quotes escaped. A key set
+    crosses py4j as this one expression; ``Column.isin(list)`` costs a
+    round trip per key (about 230 against 4 for 50 keys). ``keys`` must
+    not be empty."""
+    quoted = ", ".join("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys)
+    return f"`{col}` IN ({quoted})"
+
+
+def _batch_hashes(hashed: DataFrame) -> list[str]:
+    """The distinct non-null ``ahash`` values of a batch, collected to the
+    driver in one job with no shuffle. A receipt micro-batch is capped at
+    ``streaming.ingest.MAX_FILES_PER_TRIGGER`` files, which bounds the
+    list."""
+    return sorted({r[0] for r in hashed.select("ahash").collect()} - {None})
+
+
+def held_keys(
+    spark: SparkSession, path: str, key: str, hashes: list[str], hash_col: str = "ahash"
+) -> set[str]:
+    """The ``key`` values that the parquet table at ``path`` already holds
+    for rows whose ``hash_col`` is one of ``hashes``: one filtered scan of
+    the two columns, read with a declared schema (no inference job) and
+    collected.
+
+    Empty ONLY when the path does not exist yet (first run). Any other
+    failure re-raises, a corrupt file included: treating an unreadable
+    table as "nothing there" would silently re-pay OCR calls or append
+    duplicate curated rows."""
+    from pyspark.errors import AnalysisException
+
+    if not hashes:
+        return set()
+    schema = ", ".join(f"`{c}` string" for c in {key, hash_col})
+    try:
+        table = spark.read.schema(schema).parquet(path)
+    except AnalysisException as ex:
+        if ex.getCondition() == "PATH_NOT_FOUND":
+            return set()
+        raise
+    return {r[0] for r in table.where(F.expr(in_keys(hash_col, hashes))).select(key).collect()}
+
+
 def ocr_with_cache(
-    spark: SparkSession, images: DataFrame, cache_path: str, backend: OcrBackend
+    spark: SparkSession,
+    images: DataFrame,
+    cache_path: str,
+    backend: OcrBackend,
+    hashes: list[str] | None = None,
 ) -> DataFrame:
     """Memoized OCR: hit rows come from the raw-zone cache, misses run the
     backend once and are appended. Returns the full (ahash, doc_json,
     ocr_error) set for the input images.
 
-    The anti-join keys on ahash — exactly-once OCR per distinct image
-    content, idempotent under replay (SURVEY §7.3.4/§7.3.6)."""
-    distinct_imgs = images.select("ahash", "content").dropDuplicates(["ahash"])
-    cache = _read_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
-    if cache is None:
-        cache = spark.createDataFrame([], OCR_RESULT_SCHEMA)
-
-    misses = distinct_imgs.join(cache.select("ahash"), "ahash", "left_anti")
-    # Probe MISSES (a plain anti-join) for emptiness, never the OCR output:
-    # probing `fresh` would invoke the backend once for the probe and again
-    # for the write — two paid calls per miss. The single `fresh.write` job
-    # below is the only execution of the OCR stage.
-    if misses.limit(1).count() > 0:
-        ocr_expense(misses, backend).write.mode("append").parquet(cache_path)
-    cache_now = _read_or_none(spark, cache_path, OCR_RESULT_SCHEMA)
-    if cache_now is None:  # nothing cached and nothing missed: empty input
+    The raw zone is probed with the batch's own hashes (``hashes``, or
+    ``_batch_hashes(images)`` when the caller has not collected them), so
+    the cost is set by the batch, not by the size of the cache: one
+    filtered key scan, the OCR write of the misses, and a filtered read
+    back. Exactly one OCR call per distinct new image content, idempotent
+    under replay (SURVEY §7.3.4/§7.3.6)."""
+    if hashes is None:
+        hashes = _batch_hashes(images)
+    if not hashes:
         return spark.createDataFrame([], OCR_RESULT_SCHEMA)
-    return cache_now.join(distinct_imgs.select("ahash"), "ahash", "left_semi")
+    cached = held_keys(spark, cache_path, "ahash", hashes)
+    misses = [h for h in hashes if h not in cached]
+    # The write is the only execution of the OCR stage: nothing probes or
+    # counts its output, which would pay the backend a second time.
+    if misses:
+        todo = images.where(F.expr(in_keys("ahash", misses))).select("ahash", "content")
+        ocr_expense(todo.dropDuplicates(["ahash"]), backend).write.mode("append").parquet(
+            cache_path
+        )
+    raw = spark.read.schema(OCR_RESULT_SCHEMA).parquet(cache_path)
+    return raw.where(F.expr(in_keys("ahash", hashes)))
+
+
+@contextmanager
+def hashed_images(images: DataFrame) -> Iterator[tuple[DataFrame, list[str]]]:
+    """Hash a batch's ``content`` column once: yields the persisted
+    ``(ahash, content)`` frame and its distinct hashes, and releases the
+    frame on exit. The collect of the hashes is the job that computes the
+    hash; every later probe, the OCR write and the read-back reuse it."""
+    ahash = ahash_column(images.sparkSession.sparkContext).alias("ahash")
+    hashed = images.select(ahash, "content").persist()
+    try:
+        yield hashed, _batch_hashes(hashed)
+    finally:
+        hashed.unpersist()
 
 
 @contextmanager
 def ocr_documents(
-    images: DataFrame, cache_path: str, backend: OcrBackend
+    hashed: DataFrame, hashes: list[str], cache_path: str, backend: OcrBackend
 ) -> Iterator[DataFrame]:
-    """Image bytes → parsed documents, with each stage computed once.
+    """A hashed batch (``hashed_images``) → its parsed documents, persisted
+    so that every action on the yielded frame reuses one parse.
 
-    Hashes the ``content`` column, runs ``ocr_with_cache`` over it and
-    parses the result. The hashed images and the parsed documents are
-    persisted, so the cache probe, the OCR write and every action on the
-    yielded frame reuse one hash pass and one parse instead of re-reading
-    the input and the raw zone. Neither persisted frame holds the paid
-    call: OCR runs only inside ``ocr_with_cache``'s append write, and the
-    documents are read back from the raw zone, so recomputing an evicted
-    partition re-reads the cache and never calls the backend again. Both
-    frames are released on exit."""
-    hashed = with_ahash(images.select("content")).select("ahash", "content").persist()
-    docs = None
+    The persisted frame does not hold the paid call: OCR runs only inside
+    ``ocr_with_cache``'s append write, and the documents are read back from
+    the raw zone, so recomputing an evicted partition re-reads the cache
+    and never calls the backend again. Released on exit."""
+    docs = parse_ocr_documents(
+        ocr_with_cache(hashed.sparkSession, hashed, cache_path, backend, hashes)
+    ).persist()
     try:
-        raw = ocr_with_cache(images.sparkSession, hashed, cache_path, backend)
-        docs = parse_ocr_documents(raw).persist()
         yield docs
     finally:
-        if docs is not None:
-            docs.unpersist()
-        hashed.unpersist()
-
-
-def _read_or_none(
-    spark: SparkSession, path: str, schema: StructType | str
-) -> DataFrame | None:
-    """Read a parquet table with a declared schema (no inference job),
-    returning None ONLY when the path does not exist yet (first run). Any
-    other failure re-raises, and a corrupt file fails the query that
-    executes the frame: treating an unreadable table as "nothing there"
-    would silently re-pay OCR calls or append duplicate curated rows."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as ex:
-        if ex.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+        docs.unpersist()

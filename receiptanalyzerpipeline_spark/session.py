@@ -89,11 +89,11 @@ def get_spark(
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         # Above this many root paths a listing becomes a Spark job with
         # one task per path, and the file stream source passes each
-        # micro-batch file as a root path. A batch that `watch` lands on
-        # one host stays under 1024 and is listed on the driver (at
-        # Spark's 32, two listing jobs were 100 of a 50-file batch's 150
-        # tasks). A cluster submitter overrides this like the defaults
-        # below.
+        # micro-batch file as a root path. A `watch` batch is capped at
+        # 1024 files (streaming.ingest.MAX_FILES_PER_TRIGGER), so it is
+        # listed on the driver (at Spark's 32, two listing jobs were 100
+        # of a 50-file batch's 150 tasks). A cluster submitter overrides
+        # this like the defaults below.
         "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
         # Local-mode memory hygiene; harmless on a cluster where the
         # submitter overrides these.

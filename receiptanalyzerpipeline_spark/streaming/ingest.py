@@ -7,14 +7,16 @@ Reference → engine mapping (SURVEY §3.2, §2.9):
     openability/size-stability poll → atomic write-then-rename ingestion
                                        contract (file source lists
                                        complete files only)          (T2)
-    hash → rename → move            → with_ahash column; no rename — the
+    hash → rename → move            → ahash column; no rename — the
                                        hash IS a column              (K6)
-    bounded queue + sentinel flush  → micro-batches; maxFilesPerTrigger
-                                       for backpressure           (T3/T4)
+    bounded queue + sentinel flush  → micro-batches of at most
+                                       MAX_FILES_PER_TRIGGER files (T3/T4)
     per-event try/except            → OCR error column + quarantine  (T5)
     at-most-once lossy queue        → checkpointed exactly-once
-                                       foreachBatch + idempotent
-                                       anti-join merge on img_id     (T7)
+                                       foreachBatch + idempotent merge:
+                                       probe the keys already held for
+                                       the batch's hashes, append the
+                                       rest                          (T7)
 
 The binaryFile file source is the only watcher: ``anarcpt-spark watch``
 and ``run_ingest`` both read the landing directory through
@@ -25,11 +27,14 @@ DuckDB oracle (flatten/pivot) — Spark's batch/streaming unification means
 the streaming path inherits their correctness.
 
 Each micro-batch is hashed, OCR'd and parsed once (multimodal.ocr
-``ocr_documents``): the hashed images and the parsed documents are
-persisted for the cache probe, the OCR write and the two curated merges,
-then released at the end of the batch, so a long-running stream does not
-accumulate cached batches. Every parquet read declares its schema, so no
-read launches a schema-inference job.
+``hashed_images`` and ``ocr_documents``): the hashed images and the parsed
+documents are persisted for the probes, the OCR write and the two curated
+merges, then released at the end of the batch, so a long-running stream
+does not accumulate cached batches. The batch's distinct hashes are
+collected once, and every table is read only through a filter on them (a
+key probe), never joined against whole: a warm batch runs 11 Spark jobs
+whatever the size of the history. Every parquet read declares its schema,
+so no read launches a schema-inference job.
 """
 
 from __future__ import annotations
@@ -48,7 +53,9 @@ from pyspark.sql.types import (
 
 from receiptanalyzerpipeline_spark.multimodal.ocr import (
     OcrBackend,
-    _read_or_none,
+    hashed_images,
+    held_keys,
+    in_keys,
     ocr_documents,
 )
 from receiptanalyzerpipeline_spark.sources.textract import (
@@ -67,48 +74,70 @@ BINARY_FILE_SCHEMA = StructType(
 )
 
 
+# Files per micro-batch. It bounds the hashes a batch collects to the
+# driver, and keeps each batch's file list (one root path per file) under
+# session.py's parallel-listing threshold, so the driver lists it. Under
+# availableNow a larger backlog drains in several batches.
+MAX_FILES_PER_TRIGGER = 1024
+
+
 def read_image_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    glob: str = "*.{png,jpg,jpeg}",
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, landing_dir: str, glob: str = "*.{png,jpg,jpeg}"
 ) -> DataFrame:
-    """File-source stream over the landing directory (S3/local alike)."""
-    reader = (
+    """File-source stream over the landing directory (S3/local alike), at
+    most ``MAX_FILES_PER_TRIGGER`` files per micro-batch."""
+    return (
         spark.readStream.format("binaryFile")
         .schema(BINARY_FILE_SCHEMA)
         .option("pathGlobFilter", glob)
+        .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
+        .load(landing_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(landing_dir)
 
 
-def _merge_append_new(batch: DataFrame, target_path: str, key: str) -> None:
-    """Idempotent merge: append only keys absent from the target.
+def curated_keys(
+    spark: SparkSession, curated_summary: str, curated_items: str, hashes: list[str]
+) -> tuple[set[str], set[str]]:
+    """The summary and item keys both curated tables already hold for a
+    batch's hashes (``img_id`` is the hash), each collected by one
+    filtered scan. A table that exists but cannot be read raises."""
+    return (
+        held_keys(spark, curated_summary, "img_id", hashes, "img_id"),
+        held_keys(spark, curated_items, "item_key", hashes, "img_id"),
+    )
+
+
+def _append_new(batch: DataFrame, key: str, held: set[str], target_path: str) -> None:
+    """Idempotent merge: append the batch's rows whose key is not in
+    ``held``, the keys ``curated_keys`` found in the target for this batch.
 
     Parquet stand-in for MERGE INTO (no Delta in this environment): the
-    anti-join on the natural key makes replays no-ops, which together with
-    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6). Only the
-    key column is read, with its declared type; a target that exists but
-    cannot be read fails the batch rather than counting as empty."""
-    existing = _read_or_none(batch.sparkSession, target_path, StructType([batch.schema[key]]))
-    fresh = batch if existing is None else batch.join(existing, key, "left_anti")
+    filter on the natural key makes replays no-ops, which together with
+    the checkpoint gives exactly-once *effects* (SURVEY §7.3.6). A filter
+    keeps the batch's column order, so every file of a table has one
+    schema; rows with a null key are kept, as an anti-join keeps them."""
+    fresh = batch.where(F.expr(f"NOT coalesce({in_keys(key, held)}, false)")) if held else batch
     fresh.write.mode("append").parquet(target_path)
 
 
 def merge_curated(
-    summary: DataFrame, items: DataFrame, curated_summary: str, curated_items: str
+    summary: DataFrame,
+    items: DataFrame,
+    held: tuple[set[str], set[str]],
+    curated_summary: str,
+    curated_items: str,
 ) -> None:
     """Idempotently append one parsed batch to both curated tables (flat
-    parquet, keyed on ``img_id`` and ``img_id#line_no``). ``watch`` and
+    parquet, keyed on ``img_id`` and ``item_key`` = ``img_id#line_no``),
+    skipping the keys in ``held`` (``curated_keys``). ``watch`` and
     ``analyze --write`` both write through here, so the two verbs share
     one layout and a re-run appends nothing."""
-    _merge_append_new(summary, curated_summary, "img_id")
-    _merge_append_new(
+    _append_new(summary, "img_id", held[0], curated_summary)
+    _append_new(
         items.withColumn("item_key", F.concat_ws("#", "img_id", "line_no")),
-        curated_items,
         "item_key",
+        held[1],
+        curated_items,
     )
 
 
@@ -120,10 +149,18 @@ def process_receipt_batch(
     backend: OcrBackend,
 ) -> None:
     """One micro-batch: hash → memoized OCR → flatten/pivot → merge, with
-    the hash and the parse computed once and shared by both sinks."""
-    with ocr_documents(images, raw_zone, backend) as docs:
-        summary = pivot_receipt_summary(flatten_summary_fields(docs))
-        merge_curated(summary, extract_line_items(docs), curated_summary, curated_items)
+    the hash and the parse computed once and shared by both sinks.
+
+    Every table is probed with the batch's hashes before anything is
+    written, so an unreadable raw zone or curated table fails the batch
+    before it pays for an OCR call or appends a row."""
+    with hashed_images(images) as (hashed, hashes):
+        if not hashes:
+            return
+        held = curated_keys(images.sparkSession, curated_summary, curated_items, hashes)
+        with ocr_documents(hashed, hashes, raw_zone, backend) as docs:
+            summary = pivot_receipt_summary(flatten_summary_fields(docs))
+            merge_curated(summary, extract_line_items(docs), held, curated_summary, curated_items)
 
 
 def run_ingest(
@@ -145,8 +182,6 @@ def run_ingest(
     stream = read_image_stream(spark, landing_dir)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         process_receipt_batch(batch, raw_zone, curated_summary, curated_items, backend)
 
     writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)

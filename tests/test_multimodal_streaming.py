@@ -67,11 +67,15 @@ def test_ahash_neardup_and_exact_dedup(spark):
     assert survivors == {"a", "b", "c"}  # a2 collides with a; lowest path wins
 
 
+def _stream_dirs(base: Path) -> dict[str, str]:
+    d = {k: str(base / k) for k in ["landing", "checkpoint", "raw", "summary", "items"]}
+    Path(d["landing"]).mkdir(parents=True)
+    return d
+
+
 @pytest.fixture()
 def stream_dirs(tmp_path: Path) -> dict[str, str]:
-    d = {k: str(tmp_path / k) for k in ["landing", "checkpoint", "raw", "summary", "items"]}
-    Path(d["landing"]).mkdir()
-    return d
+    return _stream_dirs(tmp_path)
 
 
 def _ingest(spark, d, backend=None, checkpoint=None, available_now=True):
@@ -215,14 +219,25 @@ def test_ingest_exactly_once_and_loud_on_unreadable_target(spark, stream_dirs, t
     _ingest(spark, d, backend, checkpoint=str(tmp_path / "checkpoint_replay"))
     assert state() == (sorted(hashes), 2, 4)
 
-    summary_files = sorted(Path(d["summary"]).glob("part-*.parquet"))
-    for f in summary_files:
-        f.write_bytes(b"not parquet")
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        process_receipt_batch(
-            images_df(spark, {"b": IMG_B}), d["raw"], d["summary"], d["items"], backend
-        )
-    assert sorted(Path(d["summary"]).glob("part-*.parquet")) == summary_files
+    def files():
+        return {k: sorted(Path(d[k]).iterdir()) for k in ("raw", "summary", "items")}
+
+    # Every table is probed before anything is written: whichever one is
+    # unreadable, a batch with a new image fails before it pays for OCR
+    # or appends a file anywhere.
+    before, calls = files(), state()[0]
+    for target in ("summary", "raw", "items"):
+        parts = {f: f.read_bytes() for f in Path(d[target]).glob("part-*.parquet")}
+        for f in parts:
+            f.write_bytes(b"not parquet")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            process_receipt_batch(
+                images_df(spark, {"b": IMG_B}), d["raw"], d["summary"], d["items"], backend
+            )
+        for f, content in parts.items():
+            f.write_bytes(content)
+        assert sorted(log.read_text().splitlines()) == calls, target
+        assert files() == before, target
 
 
 def test_continuous_ingest_returns_running_query(spark, stream_dirs):
@@ -261,3 +276,98 @@ def test_ingest_batch_lists_files_without_a_spark_job(spark, stream_dirs):
     tasks = [s.numTasks for s in stages if s is not None]
     assert tasks, "the stream's jobs are tagged with its run id"
     assert max(tasks) < 40, tasks
+
+
+def _curated_rows(spark, d) -> tuple[list, list]:
+    return tuple(
+        sorted(map(tuple, spark.read.parquet(d[k]).select(*sorted(cols)).collect()))
+        for k, cols in (("summary", ("img_id", "vendor_name")), ("items", ("item_key", "price")))
+    )
+
+
+def test_ingest_drains_a_backlog_in_capped_batches(spark, tmp_path, monkeypatch):
+    """At most MAX_FILES_PER_TRIGGER files per micro-batch, so a backlog
+    drains in several batches under availableNow, with the same curated
+    rows as one uncapped batch."""
+    from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
+    from receiptanalyzerpipeline_spark.sources.fixtures import RECEIPT_ACME
+    from receiptanalyzerpipeline_spark.streaming import ingest
+
+    images = [stub_image([(i * 31 + j * 7) % 256 for j in range(64)]) for i in range(5)]
+    # Every document carries RECEIPT_ACME's two line items.
+    backend = StubBackend({h: {**RECEIPT_ACME, "img_id": h} for h in map(_ahash_hex, images)})
+    runs = {}
+    for cap in (2, ingest.MAX_FILES_PER_TRIGGER):
+        d = _stream_dirs(tmp_path / str(cap))
+        for i, img in enumerate(images):
+            (Path(d["landing"]) / f"scan_{i:03d}.png").write_bytes(img)
+        monkeypatch.setattr(ingest, "MAX_FILES_PER_TRIGGER", cap)
+        q = _ingest(spark, d, backend)
+        batches = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+        runs[cap] = batches, _curated_rows(spark, d)
+    (capped, rows), (uncapped, rows_once) = runs.values()
+    assert capped == [2, 2, 1] and uncapped == [5]
+    assert rows == rows_once and (len(rows[0]), len(rows[1])) == (5, 10)
+
+
+def test_curated_tables_keep_one_column_order(spark, stream_dirs):
+    """The first append and every later (filtered) append write the same
+    column order, so all part files of a curated table share one schema."""
+    import pyarrow.parquet as pq
+
+    from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
+    from receiptanalyzerpipeline_spark.sources.fixtures import RECEIPT_ACME
+
+    d = stream_dirs
+    landing = Path(d["landing"])
+    # Every document carries RECEIPT_ACME's two line items.
+    backend = StubBackend(
+        {h: {**RECEIPT_ACME, "img_id": h} for h in map(_ahash_hex, (IMG_A, IMG_B))}
+    )
+    (landing / "scan_001.png").write_bytes(IMG_A)
+    _ingest(spark, d, backend)
+    (landing / "scan_002.png").write_bytes(IMG_B)
+    (landing / "scan_003.png").write_bytes(IMG_A)
+    _ingest(spark, d, backend)
+    for table in ("summary", "items"):
+        schemas = {tuple(pq.read_schema(f).names) for f in Path(d[table]).glob("part-*.parquet")}
+        assert len(schemas) == 1, (table, schemas)
+    assert spark.read.parquet(d["items"]).count() == 4
+
+
+def test_warm_batch_job_count(spark, stream_dirs):
+    """A warm receipt batch probes history with its own hashes instead of
+    joining against it: hash collect, three key probes, the OCR write and
+    the two curated appends (each a shuffle stage and a write) stay within
+    11 Spark jobs."""
+    from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
+    from receiptanalyzerpipeline_spark.streaming.ingest import process_receipt_batch
+
+    d = stream_dirs
+    sc = spark.sparkContext
+
+    def batch(named):
+        process_receipt_batch(
+            images_df(spark, named), d["raw"], d["summary"], d["items"], StubBackend()
+        )
+
+    batch({"a": IMG_A, "c": IMG_C})
+    sc.setJobGroup("warm-receipt-batch", "jobs of one warm receipt batch")
+    try:
+        batch({"a": IMG_A, "a2": IMG_A2, "b": IMG_B})
+        jobs = sc.statusTracker().getJobIdsForGroup("warm-receipt-batch")
+    finally:
+        sc.setJobGroup("", "")
+    assert _summary_count(spark, d) == 3
+    assert 0 < len(jobs) <= 11, len(jobs)
+
+
+def test_in_keys_escapes_quotes_and_backslashes(spark):
+    """A key set travels as one SQL IN list; keys holding quotes or
+    backslashes still match themselves only."""
+    from receiptanalyzerpipeline_spark.multimodal.ocr import in_keys
+
+    keys = ["x'y", "b\\c", "plain"]
+    df = spark.createDataFrame([(k,) for k in [*keys, "x", "bc"]], ["k"])
+    got = {r[0] for r in df.where(F.expr(in_keys("k", keys[:2]))).collect()}
+    assert got == {"x'y", "b\\c"}
