@@ -86,13 +86,3 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.parquet(path)
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All tables keyed by name (lazy scans)."""
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql usage."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -154,40 +154,3 @@ def exact_dedup_by_ahash(df: DataFrame, order_col: str = "path") -> DataFrame:
     w = Window.partitionBy("ahash").orderBy(F.col(order_col))
     return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
 
-
-def with_thumbnail(df: DataFrame, size: int = 8, content_col: str = "content") -> DataFrame:
-    """Add a ``thumbnail`` binary column: size×size grayscale bytes
-    (row-major uint8), via the same decode ladder as the hash path
-    (PIL resize when present; STUB8x8/pseudo-luma otherwise — for
-    size ≠ 8 the fallback grid is nearest-neighbor scaled from 8×8).
-
-    The resize step of the brief's decode/feature-extract/resize/
-    frame-sample quartet, as an Arrow-batched pandas UDF: map-side,
-    no shuffle, thumbnail bytes become an ordinary binary column for
-    downstream dedup/embedding.
-    """
-
-    def _thumb(content: bytes | None) -> bytes | None:
-        if content is None:
-            return None
-        content = bytes(content)
-        if _HAVE_PIL and not content.startswith(STUB_MAGIC):  # pragma: no cover
-            import io
-
-            img = (
-                Image.open(io.BytesIO(content))
-                .convert("L")
-                .resize((size, size), Image.LANCZOS)
-            )
-            return np.asarray(img, dtype=np.uint8).tobytes()
-        g = _decode_to_gray8x8(content)
-        if size != 8:
-            idx = (np.arange(size) * 8) // size
-            g = g[np.ix_(idx, idx)]
-        return g.astype(np.uint8).tobytes()
-
-    @F.pandas_udf("binary")
-    def _thumbnail(content: pd.Series) -> pd.Series:
-        return content.map(_thumb)
-
-    return df.withColumn("thumbnail", _thumbnail(F.col(content_col)))

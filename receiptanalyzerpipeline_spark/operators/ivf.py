@@ -142,7 +142,7 @@ def ivf_topk(
 def auto_n_cells(n: int, target_cell_size: int = 256, lo: int = 4, hi: int = 4096) -> int:
     """Cells sized so a probe's per-cell scan stays ~constant as the
     corpus grows — the IVF member of the occupancy-target family
-    (auto_n_planes, skew.detect_hot_keys): n_cells ≈ n / target_cell_size."""
+    (auto_n_planes): n_cells ≈ n / target_cell_size."""
     import math
 
     return max(lo, min(hi, math.ceil(n / float(target_cell_size))))

@@ -20,8 +20,8 @@ strategies that scale linearly:
 
 Skew note (100 TB): both shuffles key on the join key; a single hot key
 (e.g. a bot user) concentrates in one task. AQE skew-join splitting
-(enabled in session defaults) handles moderate skew; for pathological
-keys compose with salting (``operators.skew``).
+(enabled in session defaults) splits it in ``time_range_join``; it does
+not apply to ``asof_join``'s window, whose per-key slice must fit a task.
 
 Timestamps are handled as TIMESTAMP_NTZ-safe: epoch arithmetic goes
 through ``timestampdiff`` from a fixed NTZ epoch, never a

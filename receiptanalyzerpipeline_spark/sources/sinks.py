@@ -4,7 +4,8 @@ Reference → engine:
 
     K1 batched ORM insert (db.py:9-13)       → partitioned parquet append /
                                                JDBC batch write
-    K2 create_all DDL (main.py:135-141)      → explicit-schema create
+    K2 create_all DDL (main.py:135-141)      → none: a table is created by
+                                               its first write
     K3 Alembic add-column migration          → mergeSchema-on-read append
        (migrations/versions/e5c6...py:20-28)   (schema evolution without
                                                rewrites)
@@ -115,12 +116,6 @@ def write_jdbc(
     df.write.format("jdbc").option("url", url).option("dbtable", table).options(
         **options
     ).mode(mode).save()
-
-
-def create_table(spark: SparkSession, df: DataFrame, name: str) -> None:
-    """K2: explicit-schema managed-table DDL from a (possibly empty)
-    DataFrame."""
-    df.limit(0).write.mode("overwrite").saveAsTable(name)
 
 
 def write_bucketed(

@@ -9,6 +9,7 @@ import json
 import os
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -155,3 +156,42 @@ def test_streaming_hll_sketch_aggregation_matches_batch(spark, tmp_path: Path):
     assert streamed == batch  # mergeable state: incremental == one-shot
     for k, est in streamed.items():
         assert abs(est - exact[k]) <= max(1, 0.05 * exact[k])
+
+
+@pytest.mark.slow
+def test_drop_duplicates_within_watermark(spark, tmp_path):
+    """Bounded-state streaming dedup: dropDuplicatesWithinWatermark keeps
+    dedup state only within the watermark horizon (state size ∝ window,
+    not stream length — the 100 TB-viable form of q_t2's keyed dedup).
+    A duplicate arriving in a later micro-batch within the horizon must
+    be suppressed."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    schema = StructType(
+        [StructField("event_id", LongType()), StructField("ts", TimestampType())]
+    )
+    with open(landing / "b1.json", "w") as f:
+        f.write(json.dumps({"event_id": 1, "ts": "2024-01-01T10:00:00"}) + "\n")
+        f.write(json.dumps({"event_id": 2, "ts": "2024-01-01T10:00:30"}) + "\n")
+    with open(landing / "b2.json", "w") as f:
+        # event_id=1 again (well within the 1h horizon) + a fresh event.
+        f.write(json.dumps({"event_id": 1, "ts": "2024-01-01T10:05:00"}) + "\n")
+        f.write(json.dumps({"event_id": 3, "ts": "2024-01-01T10:06:00"}) + "\n")
+
+    deduped = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(landing))
+        .withWatermark("ts", "1 hour")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    q = (
+        deduped.writeStream.format("memory")
+        .queryName("dd_wm")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout=300)
+    got = sorted(r["event_id"] for r in spark.sql("SELECT * FROM dd_wm").collect())
+    assert got == [1, 2, 3], got
