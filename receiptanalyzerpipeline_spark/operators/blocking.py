@@ -2,15 +2,30 @@
 
 ``prefix_filter_edit_join`` returns every pair of records whose names
 are within Levenshtein ``d`` (and whose optional exact ``block_keys``
-are equal). Candidates come from the lossless symmetric rarest-q-gram
-prefix filter (``prefix_filter_pairs``): any pair within edit distance
-``d`` shares at least one of each member's ``d*q+1`` globally rarest
-q-grams, so a rare-gram equi-join plus a length filter finds every true
-pair without ever forming block² or corpus² candidate sets. Exact
-duplicates of (block_keys, name) collapse to one representative before
-discovery, so both candidate mass and the Levenshtein count scale with
-distinct content. q_er1 (brand-blocked) and q_er2 (unblocked) are the
+are equal). q_er1 (brand-blocked) and q_er2 (unblocked) are the
 registry's two callers.
+
+Candidates come from the lossless symmetric rarest-q-gram prefix
+filter. Strings within edit distance d share at least
+max(|s|,|t|) − q + 1 − d·q q-grams, so any pair under the threshold
+shares ≥ 1 gram of each member's d·q+1 RAREST grams, ranked by one
+CONSISTENT global frequency (both join sides derive from the same
+ranking, which is all the symmetric-prefix theorem needs). A rare-gram
+equi-join plus a length filter therefore finds every true pair without
+ever forming block² or corpus² candidate sets. Short strings (longer
+member < q·(d+1), where the bound is vacuous) index a catch-all bucket
+instead; the 5-char sentinel cannot collide with real q-grams. With
+``block_keys`` the gram join also requires key equality, so cost scales
+with per-(key, gram) co-occurrence. tests/test_curation.py and
+tests/test_blocking.py check the composition against exhaustive joins.
+
+Exact duplicates of (block_keys, name) collapse to one representative
+before discovery, so both candidate mass and the Levenshtein count
+scale with distinct content.
+
+The whole join is one SQL statement: building it costs a few dozen
+py4j round trips where a chain of DataFrame calls, each analysed
+eagerly by the JVM, cost well over a thousand.
 
 Join strategy is the one size decision: past ``SHUFFLE_ONLY_ROWS``
 input rows, read from plan statistics or parquet footers by
@@ -22,12 +37,8 @@ Either strategy returns the same rows.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-__all__ = [
-    "prefix_filter_pairs",
-    "prefix_filter_edit_join",
-]
+__all__ = ["prefix_filter_edit_join"]
 
 
 # Inputs past this row count route the prefix machinery's joins through
@@ -104,94 +115,12 @@ def _estimated_rows(df: DataFrame) -> int:
     return int(str(stats.sizeInBytes())) // _ASSUMED_ROW_BYTES
 
 
-def prefix_filter_pairs(
-    df: DataFrame,
-    key_col: str,
-    name_col: str,
-    q: int = 3,
-    d: int = 2,
-    block_keys: tuple[str, ...] = (),
-    shuffle_only: bool | None = None,
-) -> DataFrame:
-    """LOSSLESS candidate pairs for ``levenshtein(name_a, name_b) <= d``:
-    the symmetric rarest-(d*q+1)-gram prefix filter.
-
-    Theorem: strings within edit distance d share at least
-    max(|s|,|t|) − q + 1 − d·q q-grams, so any pair under the threshold
-    shares ≥ 1 gram of each member's d·q+1 RAREST grams (ranked by a
-    CONSISTENT global frequency — both join sides derive from the same
-    ranking, which is all the symmetric-prefix theorem needs). Short
-    strings (longer member < q·(d+1), where the bound is vacuous) index
-    a catch-all bucket instead; the 5-char sentinel cannot collide with
-    real q-grams. See plans/curation.py q_er2 for the full derivation
-    and the exhaustive-join proof tests (tests/test_curation.py).
-
-    ``block_keys`` adds exact-match blocking columns (e.g. brand): the
-    gram join then requires gram AND key equality, and cost scales with
-    per-(key, gram) co-occurrence — never block².
-
-    Returns (key_a, key_b, name_a, name_b) distinct candidates; callers
-    apply the edit-distance verify. Output is a SUPERSET of the true
-    pairs and the verify stage makes the composition exact.
-    """
-    prefix_n = d * q + 1
-    if shuffle_only is None:
-        shuffle_only = _estimated_rows(df) > SHUFFLE_ONLY_ROWS
-    base = df.select(
-        F.col(key_col).alias("key"),
-        F.col(name_col).alias("name"),
-        *[F.col(k) for k in block_keys],
-    )
-    grams_sql = (
-        f"array_distinct(transform(sequence(1, length(name) - {q - 1}), "
-        f"i -> substring(name, i, {q})))"
-    )
-    case_sql = (
-        f"CASE WHEN length(name) >= {q * (d + 1)} THEN {grams_sql} "
-        f"WHEN length(name) >= {q} THEN array_append({grams_sql}, '#SHRT') "
-        f"ELSE array('#SHRT') END"
-    )
-    g = base.select(
-        "key", "name", *block_keys, F.explode(F.expr(case_sql)).alias("gram")
-    )
-    freq = g.groupBy("gram").agg(F.count("*").alias("cnt"))
-    prefix = (
-        g.join(freq, "gram")
-        .groupBy("key", "name", *block_keys)
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list(F.struct("cnt", "gram"))), 1, prefix_n
-            ).alias("pg")
-        )
-        .select(
-            "key",
-            "name",
-            *block_keys,
-            F.explode(F.transform(F.col("pg"), lambda x: x["gram"])).alias("gram"),
-        )
-    )
-    a = prefix.select(
-        F.col("key").alias("key_a"), F.col("name").alias("name_a"),
-        *block_keys, "gram",
-    )
-    b = prefix.select(
-        F.col("key").alias("key_b"), F.col("name").alias("name_b"),
-        *block_keys, "gram",
-    )
-    # Both sides are corpus-proportional gram indexes CARRYING NAME
-    # STRINGS — past SHUFFLE_ONLY_ROWS, force SMJ so no heap ever builds
-    # a name-weighted HashedRelation from a mis-estimated size.
-    if shuffle_only:
-        b = b.hint("merge")
-    return (
-        a.join(b, ["gram", *block_keys])
-        .where(
-            (F.col("key_a") < F.col("key_b"))
-            & (F.abs(F.length("name_a") - F.length("name_b")) <= d)
-        )
-        .select("key_a", "key_b", "name_a", "name_b")
-        .distinct()
-    )
+def _ident(name: str) -> str:
+    """A caller's column name as a quoted SQL identifier inside the
+    statement text: backticks doubled for SQL, braces doubled because
+    ``spark.sql(text, df=...)`` formats the text like ``str.format``."""
+    quoted = name.replace("`", "``").replace("{", "{{").replace("}", "}}")
+    return f"`{quoted}`"
 
 
 def prefix_filter_edit_join(
@@ -207,83 +136,89 @@ def prefix_filter_edit_join(
     edit_dist) with ``levenshtein <= d`` (and equal ``block_keys``),
     id-ordered.
 
-    Composition (round 7, the clone-density lesson — SCALE.md): collapse
-    exact duplicates of (block_keys, name) to one representative (min
-    key), generate candidates with the lossless rarest-q-gram prefix
-    filter over the representatives, Levenshtein-verify ONCE per rep
-    pair, then expand back: intra-group pairs are edit 0 by identity,
-    inter-group pairs carry their reps' distance with names swapped
-    alongside keys when id normalization reorders them. Both candidate
-    mass and Levenshtein count scale with distinct content, not
-    duplication — on a 10x-cloned corpus that is 100x fewer edit-distance
-    evaluations for the identical result set.
-    """
-    from pyspark.sql.window import Window
+    Composition (round 7, the clone-density lesson — SCALE.md): a window
+    over (block_keys, name) tags each row with its clone group's
+    representative (min key). Candidates come from the prefix filter
+    over the representatives alone, and Levenshtein runs once per rep
+    pair; each verified pair then expands to its groups' members, names
+    swapped alongside keys when id normalization reorders them. Clone
+    pairs (same block keys and name, edit 0) are one self-join of the
+    windowed rows on the window's own keys, so it reuses the window's
+    partitioning. On a 10x-cloned corpus that is 100x fewer
+    edit-distance evaluations for the identical result set.
 
+    Rows with a NULL key, name or block key are dropped up front. None
+    can be in a verified pair, but the window groups NULL names together
+    (an unverified edit-0 pair, ADVICE r7), and a NULL member key would
+    expand to a pair of one key with itself.
+    """
     if shuffle_only is None:
         shuffle_only = _estimated_rows(df) > SHUFFLE_ONLY_ROWS
-    # Past SHUFFLE_ONLY_ROWS the member map and rep tables are big
-    # enough (with name payloads) that broadcast builds endanger a
-    # small heap; below it Spark's size-adaptive broadcast is faster.
-    _mh = (lambda x: x.hint("merge")) if shuffle_only else (lambda x: x)
-    base = df.select(
-        F.col(key_col).alias("_key"),
-        F.col(name_col).alias("_name"),
-        *[F.col(k) for k in block_keys],
+
+    def merge(*rels: str) -> str:
+        # Past SHUFFLE_ONLY_ROWS the gram index and the member map carry
+        # corpus-sized name payloads: sort-merge joins, so no broadcast
+        # build scales with the corpus. Below it, Spark chooses by size.
+        return f"/*+ MERGE({', '.join(rels)}) */" if shuffle_only else ""
+
+    bk = [f"_b{i}" for i in range(len(block_keys))]
+    renamed = ", ".join([
+        f"{_ident(key_col)} AS _key", f"{_ident(name_col)} AS _name",
+        *(f"{_ident(k)} AS {b}" for k, b in zip(block_keys, bk)),
+    ])
+    not_null = " AND ".join(f"{c} IS NOT NULL" for c in ["_key", "_name", *bk])
+    cols = ", ".join(["_key", "_name", *bk])
+    same_block = "".join(f" AND a.{b} = b.{b}" for b in bk)
+    # Block keys first: the window's exchange and sort order, reused as is.
+    same_clone = " AND ".join(f"a.{c} = b.{c}" for c in [*bk, "_name"])
+    grams = (
+        f"array_distinct(transform(sequence(1, length(_name) - {q - 1}), "
+        f"i -> substring(_name, i, {q})))"
     )
-    # NULL names (or NULL block keys) can never appear in a verified
-    # pair — levenshtein(NULL, ·) is NULL and the candidate equi-join
-    # drops NULL keys — but Window.partitionBy groups NULLs together,
-    # so without this filter two NULL-name rows would form a rep group
-    # and emit an unverified edit_dist=0 pair (ADVICE r7). Drop them up
-    # front so the collapsed path stays result-identical to the direct
-    # verify for arbitrary nullable inputs.
-    null_guard = F.col("_name").isNotNull()
-    for k in block_keys:
-        null_guard = null_guard & F.col(k).isNotNull()
-    base = base.where(null_guard)
-    w = Window.partitionBy(*block_keys, "_name")
-    tagged = base.withColumn("_rep", F.min("_key").over(w))
-    members = tagged.select(F.col("_rep").alias("_rid"), F.col("_key").alias("_mem"))
-    reps = tagged.where(F.col("_key") == F.col("_rep")).select(
-        F.col("_key").alias("key"), F.col("_name").alias("name"), *block_keys
-    )
-    rep_pairs = (
-        prefix_filter_pairs(
-            reps, "key", "name", q=q, d=d, block_keys=block_keys,
-            shuffle_only=shuffle_only,
+    return df.sparkSession.sql(
+        f"""
+        WITH base AS (SELECT {renamed} FROM {{df}}),
+        tagged AS (
+          SELECT *, min(_key) OVER (PARTITION BY {", ".join([*bk, "_name"])}) AS _rep
+          FROM base WHERE {not_null}
+        ),
+        grams AS (
+          SELECT {cols}, explode(CASE
+              WHEN length(_name) >= {q * (d + 1)} THEN {grams}
+              WHEN length(_name) >= {q} THEN array_append({grams}, '#SHRT')
+              ELSE array('#SHRT') END) AS gram
+          FROM tagged WHERE _key = _rep
+        ),
+        freq AS (SELECT gram, count(*) AS cnt FROM grams GROUP BY gram),
+        ranked AS (
+          SELECT {cols},
+                 slice(sort_array(collect_list(struct(cnt, gram))), 1, {d * q + 1}) AS pg
+          FROM grams JOIN freq USING (gram)
+          GROUP BY {cols}
+        ),
+        prefix AS (SELECT {cols}, explode(transform(pg, x -> x.gram)) AS gram FROM ranked),
+        pairs AS (
+          SELECT {merge("b")} DISTINCT a._key AS key_a, b._key AS key_b,
+                 a._name AS name_a, b._name AS name_b
+          FROM prefix a JOIN prefix b ON a.gram = b.gram{same_block}
+          WHERE a._key < b._key AND abs(length(a._name) - length(b._name)) <= {d}
+        ),
+        verified AS (
+          SELECT *, CAST(levenshtein(name_a, name_b) AS BIGINT) AS edit_dist FROM pairs
         )
-        .withColumn("edit_dist", F.levenshtein("name_a", "name_b").cast("long"))
-        .where(F.col("edit_dist") <= d)
+        SELECT {merge("ma", "mb")}
+               least(ma._key, mb._key) AS key_a, greatest(ma._key, mb._key) AS key_b,
+               CASE WHEN ma._key > mb._key THEN v.name_b ELSE v.name_a END AS name_a,
+               CASE WHEN ma._key > mb._key THEN v.name_a ELSE v.name_b END AS name_b,
+               v.edit_dist
+        FROM verified v
+        JOIN tagged ma ON ma._rep = v.key_a
+        JOIN tagged mb ON mb._rep = v.key_b
+        WHERE v.edit_dist <= {d}
+        UNION ALL
+        SELECT /*+ MERGE(b) */ a._key, b._key, a._name, a._name, CAST(0 AS BIGINT)
+        FROM tagged a JOIN tagged b ON {same_clone}
+        WHERE a._key < b._key
+        """,
+        df=df,
     )
-    # Expansion joins: the member map is corpus-sized (one row per input
-    # row) — above the routing threshold, merge-hint so no broadcast
-    # build scales with the corpus (same OOM class as the gram join).
-    ma = members.select(F.col("_rid").alias("key_a"), F.col("_mem").alias("_ma"))
-    mb = members.select(F.col("_rid").alias("key_b"), F.col("_mem").alias("_mb"))
-    swap = F.col("_ma") > F.col("_mb")
-    inter = (
-        rep_pairs.join(_mh(ma), "key_a")
-        .join(_mh(mb), "key_b")
-        .select(
-            F.least("_ma", "_mb").alias("key_a"),
-            F.greatest("_ma", "_mb").alias("key_b"),
-            F.when(swap, F.col("name_b")).otherwise(F.col("name_a")).alias("name_a"),
-            F.when(swap, F.col("name_a")).otherwise(F.col("name_b")).alias("name_b"),
-            "edit_dist",
-        )
-    )
-    g = members.join(_mh(reps.select(F.col("key").alias("_rid"), "name")), "_rid")
-    intra = (
-        g.select("_rid", "name", F.col("_mem").alias("key_a"))
-        .join(_mh(g.select("_rid", F.col("_mem").alias("key_b"))), "_rid")
-        .where(F.col("key_a") < F.col("key_b"))
-        .select(
-            "key_a",
-            "key_b",
-            F.col("name").alias("name_a"),
-            F.col("name").alias("name_b"),
-            F.lit(0).cast("long").alias("edit_dist"),
-        )
-    )
-    return inter.unionByName(intra)

@@ -345,23 +345,19 @@ def q_n3(spark: SparkSession, sf_dir: str) -> DataFrame:
     order=("key_a", "key_b"),
 )
 def q_er1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lossless rarest-q-gram prefix filter with brand as an exact
-    # blocking key (blocking.prefix_filter_edit_join holds the
-    # derivation): discovery and Levenshtein run once per distinct
-    # (brand, name), clone members expand back mechanically, and
-    # candidate mass scales with true-match density, not block^2.
+    # q_er2's edit-distance join with p_brand as an exact block key, one
+    # SQL statement (operators/blocking.py holds the prefix-filter
+    # theorem): discovery and Levenshtein run once per distinct
+    # (brand, name), same-brand clones pair in one self-join on the
+    # clone window's own partitioning, and candidate mass scales with
+    # true-match density, not block^2.
     from receiptanalyzerpipeline_spark.operators.blocking import (
         prefix_filter_edit_join,
     )
 
     part = table(spark, sf_dir, "part")
     return prefix_filter_edit_join(
-        part.withColumnRenamed("p_brand", "brand"),
-        "p_partkey",
-        "p_name",
-        q=3,
-        d=2,
-        block_keys=("brand",),
+        part, "p_partkey", "p_name", q=3, d=2, block_keys=("p_brand",)
     )
 
 
@@ -1036,15 +1032,15 @@ def q_x25(spark: SparkSession, sf_dir: str) -> DataFrame:
     order=("key_a", "key_b"),
 )
 def q_er2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Candidate generation + verify live in operators/blocking.
-    # prefix_filter_edit_join (factored out in round 7, with the
-    # exact-duplicate collapse added after q_er2 itself ground at sf1 —
-    # clone groups square the gram-bucket mass AND multiply the
-    # Levenshtein count 100×). With no block keys this produces exactly
-    # the original q_er2 result; the exhaustive oracle proves the whole
-    # composition (prefix filter + collapse/expand) lossless end-to-end
-    # (tests/test_curation.py covers short/empty-string edge cases vs
-    # the exhaustive join).
+    # Candidate generation and verify are one SQL statement in
+    # operators/blocking.prefix_filter_edit_join: the rarest-gram prefix
+    # filter over one representative per distinct name (the collapse
+    # added after q_er2 ground at sf1 — clone groups square the
+    # gram-bucket mass AND multiply the Levenshtein count 100×), then
+    # expansion to members, plus same-name clone pairs from one
+    # self-join. The exhaustive oracle proves the whole composition
+    # lossless end-to-end (tests/test_curation.py covers short/empty-
+    # string edge cases, tests/test_blocking.py clone groups).
     from receiptanalyzerpipeline_spark.operators.blocking import (
         prefix_filter_edit_join,
     )

@@ -362,6 +362,28 @@ def test_warm_batch_job_count(spark, stream_dirs):
     assert 0 < len(jobs) <= 11, len(jobs)
 
 
+def test_warm_receipt_batch_compiles_no_new_classes(spark, stream_dirs):
+    """Steady-state JVM compile time on the ingest path is HotSpot warming
+    up, not Spark's codegen cache missing: by the third batch of one shape
+    (three fresh receipts each), every generated class is a cache hit."""
+    import random
+
+    from receiptanalyzerpipeline_spark.multimodal.ocr import StubBackend
+    from receiptanalyzerpipeline_spark.streaming.ingest import process_receipt_batch
+
+    d = stream_dirs
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    rng = random.Random(17)
+    compiled = []
+    for i in range(3):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        named = {f"b{i}_{j}": stub_image([rng.randrange(256) for _ in range(64)]) for j in range(3)}
+        process_receipt_batch(images_df(spark, named), d["raw"], d["summary"], d["items"], StubBackend())
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
+    assert _summary_count(spark, d) == 9
+    assert compiled[2] == 0, compiled
+
+
 def test_in_keys_escapes_quotes_and_backslashes(spark):
     """A key set travels as one SQL IN list; keys holding quotes or
     backslashes still match themselves only."""
