@@ -87,19 +87,11 @@ N_PLANES = 4  # per table: 16 buckets — coarse partitions, decent recall
 N_TABLES = 4  # independent hash tables; candidates = union of bucket hits
 
 
-def hyperplane_sign(plane: Column, dim: Column) -> Column:
-    """±1 coefficient for (plane, dim), from md5 hex parity — the same
-    expression is replayable in any engine with md5."""
-    hex_digit = F.substring(
-        F.md5(F.concat(plane.cast("string"), F.lit(":"), dim.cast("string"))), 1, 1
-    )
-    return (F.conv(hex_digit, 16, 10).cast("int") % 2) * 2 - 1
-
-
 def _sign(plane: int, dim: int) -> float:
-    """Driver-side value of hyperplane_sign: md5 of the identical string
-    the SQL expression hashes, first hex digit's parity → ±1. Oracles
-    keep recomputing md5 in SQL; this is the same number precomputed."""
+    """±1 coefficient for (plane, dim): the parity of the first hex digit
+    of ``md5("<plane>:<dim>")``, odd → +1, even → −1. The expression is
+    replayable in any engine with md5; oracles recompute it in SQL, and
+    this is the same number precomputed."""
     import hashlib
 
     h = hashlib.md5(f"{plane}:{dim}".encode()).hexdigest()[0]

@@ -629,25 +629,6 @@ def newest_manifest_stamp(path: str, key: str):
     return None
 
 
-def read_changes(
-    spark: SparkSession, path: str, from_version: int, to_version: int | None = None
-) -> DataFrame:
-    """Rows ADDED between two versions (incremental/CDC read for
-    append-mode tables): the files in ``to_version``'s manifest that are
-    absent from ``from_version``'s. After an overwrite commit the file
-    sets diverge entirely, so the diff equals the overwrite's full
-    contents — callers doing true CDC across overwrites need row-level
-    diffs (q_d9's incremental-dedup shape)."""
-    if to_version is None:
-        to_version = current_version(path)
-    _, new = _diff_file_sets(
-        path, _read_manifest(path, from_version), _read_manifest(path, to_version)
-    )
-    if not new:
-        return read_snapshot(spark, path, version=to_version).limit(0)
-    return spark.read.parquet(*new)
-
-
 def read_row_changes(
     spark: SparkSession, path: str, from_version: int, to_version: int | None = None
 ) -> DataFrame:
@@ -661,14 +642,14 @@ def read_row_changes(
     delete(old)+insert(new). Rows a MERGE carried through a rewritten
     file appear as a self-cancelling delete+insert pair — more delta
     volume than minimal CDC, but exact for any retraction-aware consumer
-    (additive aggregates subtract deletes; see ``operators/ivm.py``), and
-    the volume is O(files touched), never O(table).
+    (an additive aggregate subtracts the deletes), and the volume is
+    O(files touched), never O(table).
 
     Compaction commits are logical no-ops and emit nothing. Consecutive
     PRESENT manifests are diffed, so an expired intermediate version
     simply folds its changes into the next surviving commit's diff — the
     net change stays exact. Requires ``from_version``'s manifest to still
-    exist (retention must keep at least the IVM watermark)."""
+    exist (retention must keep at least the consumer's watermark)."""
     from pyspark.sql import functions as F
 
     if to_version is None:
@@ -904,59 +885,6 @@ def _repair_pointer(path: str) -> None:
     vs = versions(path)
     if vs:
         _advance_pointer(path, vs[-1])
-
-
-def merge_sink(path: str, key_cols: list[str], order_col: str | None = None):
-    """``foreachBatch`` function applying each micro-batch as a MERGE
-    upsert (CDC-apply: streaming key-value changes materialize into a
-    snapshot table holding the latest row per key), EXACTLY-ONCE under
-    replay via the same batch-id manifest contract as ``snapshot_sink``.
-
-    ``order_col``: within-batch last-wins — when a batch carries several
-    changes for one key, the row with the greatest ``order_col`` wins
-    (MERGE itself requires unique source keys). Cross-batch ordering is
-    Structured Streaming's: batches commit in order and replays are
-    whole-batch no-ops, so the table never regresses to an older value.
-
-    First batch bootstraps the table (append commit); later batches are
-    copy-on-write merges rewriting only the files their keys touch — the
-    upsert cost tracks the CHANGE volume, not the table size.
-
-    Usage::
-
-        cdc.writeStream.foreachBatch(merge_sink(path, ["k"], "seq")).start()
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_committed(path, batch_id):
-            _repair_pointer(path)
-            return
-        df = batch_df
-        if order_col is not None:
-            w = Window.partitionBy(*key_cols).orderBy(F.desc(order_col))
-            df = (
-                df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        if df.isEmpty():
-            return
-        if current_version(path) is None:
-            write_snapshot(
-                df, path, mode="append", manifest_extra={"batch_id": batch_id}
-            )
-        else:
-            merge_upsert(
-                df.sparkSession,
-                df,
-                path,
-                key_cols,
-                manifest_extra={"batch_id": batch_id},
-            )
-
-    return commit
 
 
 def _commit_manifest(
@@ -1641,8 +1569,8 @@ def compact_snapshot(
     # Rows were validated when first committed; re-checking the whole
     # table at every compaction would be an O(table) scan for nothing.
     # compaction_of/cluster_by/stats ride the SAME atomic manifest
-    # publish: a post-hoc rewrite would let a concurrent reader (CDC
-    # offsets, IVM, read_row_changes) see truncated JSON or a commit
+    # publish: a post-hoc rewrite would let a concurrent reader (such as
+    # read_row_changes) see truncated JSON or a commit
     # that momentarily looks like a plain overwrite — which a CDC
     # consumer would replay as a full-table delete+insert.
     extra: dict = {"compaction_of": cur}
@@ -1686,11 +1614,11 @@ def expire_snapshots(
     writer's fresh dir is never swept — Delta VACUUM's retention-hours
     contract).
 
-    ``keep_from_version`` protects CONSUMER WATERMARKS: versions >= it
-    are never expired regardless of ``keep_last``, so an IVM refresh
-    watermark or a CDC stream's committed offset stays diff-able. Pass
-    the slowest consumer's recorded version (e.g. a materialized view's
-    ``base_version``, a snapshot_cdc checkpoint offset)."""
+    ``keep_from_version`` protects a CONSUMER WATERMARK: versions >= it
+    are never expired regardless of ``keep_last``, so a change-feed
+    reader's next ``read_row_changes(from_version=...)`` (e.g. ``table
+    changes --from-version``) stays diff-able. Pass the slowest such
+    reader's last-read version."""
     import shutil
     import time
 

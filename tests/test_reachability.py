@@ -1,13 +1,20 @@
-"""Every package module is reachable from a production entry point.
+"""Every package module, and nearly every public function, is reachable
+from production code.
 
-A static import walk (``ast``, no Spark session, nothing imported) from the
-CLI (``cli``, ``__main__``), the plan registry (``plans``) and the driver
-entry (``__spark_entry__.py``). Imports inside functions count: the engine
-imports many operators lazily. The package uses absolute imports only; a
-relative import is not followed, so its target shows up as unreached.
+Modules: a static import walk (``ast``, no Spark session, nothing imported)
+from the CLI (``cli``, ``__main__``), the plan registry (``plans``) and the
+driver entry (``__spark_entry__.py``). Imports inside functions count: the
+engine imports many operators lazily. The package uses absolute imports
+only; a relative import is not followed, so its target shows up as
+unreached. A module that only tests import is dead code and fails the
+test: delete it, or give it a caller (a registry query or a CLI verb).
 
-A module that only tests import is dead code and fails this test: delete
-it, or give it a caller (a registry query or a CLI verb).
+Functions: every public, undecorated, top-level function or class of the
+package needs a reference (a name, an attribute or an imported name)
+outside its own body, in the package or in the code that runs it
+(``__spark_entry__.py``, ``bench.py``, ``scripts/``, ``perfbench/``).
+Text such as a docstring mention is not a reference. Registry builders
+are decorated, so they are not scanned.
 """
 
 from __future__ import annotations
@@ -19,12 +26,30 @@ PKG = "receiptanalyzerpipeline_spark"
 REPO = Path(__file__).resolve().parent.parent
 ROOTS = [f"{PKG}.cli", f"{PKG}.__main__", f"{PKG}.plans", "__spark_entry__"]
 
-#: Unreached modules still awaiting deletion, together with the
-#: ``snapshots`` functions and tests that only they use. This set may only
-#: shrink: a module leaves it when it is deleted or gains a caller.
-NOT_YET_DELETED = {
-    f"{PKG}.operators.ivm",
-    f"{PKG}.sources.snapshot_stream",
+#: Public package definitions that only tests reference, as
+#: ``module.name`` relative to the package. This set may only shrink: a
+#: name leaves it when it is deleted or gains a production caller.
+TEST_ONLY_DEFS = {
+    "functions.text.parse_line_item_csv",
+    "functions.text.path_stem",
+    "multimodal.images.exact_dedup_by_ahash",
+    "operators.components.dedup_survivors",
+    "operators.textanalysis.winnow_fingerprints",
+    "plans.audit.plan_metrics",
+    "sources.sinks.append_evolving",
+    "sources.sinks.compact",
+    "sources.sinks.drop_columns",
+    "sources.sinks.read_evolved",
+    "sources.sinks.undrop_columns",
+    "sources.sinks.upsert_by_key",
+    "sources.sinks.write_bucketed",
+    "sources.sinks.write_jdbc",
+    "sources.sinks.write_partitioned_by_hash_prefix",
+    "sources.sinks.write_partitioned_by_month",
+    "sources.sinks.write_zordered",
+    "sources.snapshots.file_stats",
+    "streaming.neardup_stream.neardup_dedup_sink",
+    "streaming.observability.read_progress",
 }
 
 
@@ -69,6 +94,48 @@ def reachable(mods: dict[str, Path]) -> set[str]:
 def test_every_package_module_is_reachable():
     mods = _module_files()
     unreached = mods.keys() - reachable(mods)
-    assert unreached == NOT_YET_DELETED, (
-        f"modules no production path imports: {sorted(unreached)}"
-    )
+    assert not unreached, f"modules no production path imports: {sorted(unreached)}"
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    names: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.add(n.name.rsplit(".", 1)[-1])
+    return names
+
+
+def uncalled_defs() -> set[str]:
+    """Public, undecorated, top-level package definitions that no
+    production code references outside the definition's own body."""
+    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    for d in (PKG, "scripts", "perfbench"):
+        files.extend(sorted((REPO / d).rglob("*.py")))
+    defs: dict[tuple[Path, int], str] = {}
+    refs: dict[str, set[tuple[Path, int]]] = {}
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        for i, stmt in enumerate(tree.body):
+            for name in _referenced_names(stmt):
+                refs.setdefault(name, set()).add((path, i))
+            if (
+                path.is_relative_to(REPO / PKG)
+                and isinstance(stmt, (ast.FunctionDef, ast.ClassDef))
+                and not stmt.decorator_list
+                and not stmt.name.startswith("_")
+            ):
+                mod = ".".join(path.relative_to(REPO / PKG).with_suffix("").parts)
+                defs[(path, i)] = f"{mod}.{stmt.name}"
+    return {
+        qual
+        for site, qual in defs.items()
+        if not refs.get(qual.rsplit(".", 1)[-1], set()) - {site}
+    }
+
+
+def test_every_public_function_has_a_production_caller():
+    assert uncalled_defs() == TEST_ONLY_DEFS

@@ -391,10 +391,10 @@ def test_snapshot_time_travel(spark, tmp_path):
 
 
 def test_snapshot_incremental_read(spark, tmp_path):
-    """read_changes returns exactly the rows a downstream incremental
-    consumer needs between two append commits."""
+    """read_row_changes returns exactly the rows a downstream incremental
+    consumer needs between two append commits, each tagged an insert."""
     from receiptanalyzerpipeline_spark.sources.snapshots import (
-        read_changes,
+        read_row_changes,
         write_snapshot,
     )
 
@@ -404,10 +404,11 @@ def test_snapshot_incremental_read(spark, tmp_path):
     )
     write_snapshot(li.limit(100), path)
     write_snapshot(li.limit(150).subtract(li.limit(100)), path, mode="append")
-    delta = read_changes(spark, path, 0, 1)
+    delta = read_row_changes(spark, path, 0, 1)
     assert delta.count() == 50
+    assert {r["_op"] for r in delta.select("_op").collect()} == {"insert"}
     # No-change diff is empty but schema-stable.
-    same = read_changes(spark, path, 1, 1)
+    same = read_row_changes(spark, path, 1, 1)
     assert same.count() == 0 and same.columns == delta.columns
 
 

@@ -121,8 +121,11 @@ def test_delete_where_removes_rows_and_carries_untouched_files(spark, tmp_path):
 
 
 def test_merge_delete_modes_force_ivm_full_recompute(spark, tmp_path):
-    # IVM's delta-only fast path requires an append-only chain; MERGE and
-    # DELETE rewrite history and must be detected as non-append commits.
+    # MERGE and DELETE rewrite history, so their manifests must not be
+    # recorded as appends. batch_committed reads `mode` on a legacy
+    # (unstamped) table: an append at version == batch id counts as that
+    # batch's commit. A MERGE recorded as `append` would make a legacy
+    # replay of the batch with that id look committed and drop it.
     path = _table(spark, tmp_path, [[(1, "a")]])
     v0 = snap.current_version(path)
     snap.merge_upsert(
@@ -130,9 +133,8 @@ def test_merge_delete_modes_force_ivm_full_recompute(spark, tmp_path):
     )
     v1 = snap.current_version(path)
     assert not snap._read_manifest(path, v1)["mode"] == "append"
-    from receiptanalyzerpipeline_spark.operators.ivm import _chain_is_append
-
-    assert not _chain_is_append(path, v0, v1)
+    assert snap.batch_committed(path, v0)
+    assert not snap.batch_committed(path, v1)
 
 
 def test_clustered_compaction_zone_maps_prune_on_both_dims(spark, tmp_path):
@@ -188,67 +190,6 @@ def test_pruning_keeps_files_without_stats(spark, tmp_path):
     assert _rows(pruned) == {(1, "a"), (2, "b")}
 
 
-def test_merge_sink_cdc_apply_exactly_once(spark, tmp_path):
-    """Streaming CDC-apply: key-value change batches materialize into a
-    snapshot table holding the latest row per key (within-batch last-wins
-    by seq); a full replay from a fresh checkpoint is a no-op."""
-    import json as _json
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    # Batch files (maxFilesPerTrigger=1 → one batch each, in name order):
-    # f0 inserts k=1,2; f1 updates k=2 twice in-batch (seq decides) and
-    # inserts k=3; f2 updates k=1.
-    batches = [
-        [{"k": 1, "v": "a", "seq": 1}, {"k": 2, "v": "b", "seq": 2}],
-        [
-            {"k": 2, "v": "stale", "seq": 3},
-            {"k": 2, "v": "B!", "seq": 4},
-            {"k": 3, "v": "c", "seq": 5},
-        ],
-        [{"k": 1, "v": "A!", "seq": 6}],
-    ]
-    for i, b in enumerate(batches):
-        with open(landing / f"f{i}.json", "w") as f:
-            for row in b:
-                f.write(_json.dumps(row) + "\n")
-
-    table_path = str(tmp_path / "tbl")
-
-    def run(checkpoint: str) -> None:
-        stream = (
-            spark.readStream.schema("k long, v string, seq long")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(landing))
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                snap.merge_sink(table_path, ["k"], order_col="seq")
-            )
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=300)
-
-    run(str(tmp_path / "cp1"))
-    vs = snap.versions(table_path)
-    got = {
-        (r["k"], r["v"])
-        for r in snap.read_snapshot(spark, table_path).select("k", "v").collect()
-    }
-    assert got == {(1, "A!"), (2, "B!"), (3, "c")}
-    # Fresh checkpoint: every batch is redelivered; batch-id manifests
-    # make each redelivery a no-op (no version churn, same contents).
-    run(str(tmp_path / "cp2"))
-    assert snap.versions(table_path) == vs
-    got2 = {
-        (r["k"], r["v"])
-        for r in snap.read_snapshot(spark, table_path).select("k", "v").collect()
-    }
-    assert got2 == got
-
-
 @pytest.mark.slow
 def test_zone_maps_persist_across_append_merge_delete(spark, tmp_path):
     """Once clustered, zone maps survive later commits: carried files keep
@@ -297,7 +238,8 @@ def test_merge_delete_interleavings_match_model(spark, tmp_path):
     """Randomized (seeded) interleavings of MERGE / DELETE / clustered or
     plain compaction / retention must always leave the latest read equal
     to a driver-side key→value model — the copy-on-write analogue of the
-    append-layer interleaving invariant in test_ivm."""
+    append-layer interleaving invariant in
+    test_snapshot_op_interleavings_preserve_contents."""
     import random
 
     for seed in (11, 42):
@@ -672,8 +614,8 @@ def test_zorder_on_string_keys_prunes_lexicographic_ranges(spark, tmp_path):
 
 def test_vacuum_keep_from_protects_consumer_watermarks(spark, tmp_path):
     """keep_from_version: retention never expires a version a consumer
-    still needs, so an IVM/CDC watermark at that version stays diff-able
-    after the vacuum."""
+    still needs, so a change-feed reader's watermark at that version stays
+    diff-able after the vacuum."""
     path = _table(
         spark, tmp_path,
         [[(1, "a")], [(2, "b")], [(3, "c")], [(4, "d")], [(5, "e")]],
@@ -739,3 +681,72 @@ def test_merge_upsert_manifest_extra_guarded(spark, tmp_path):
         for r in snap.read_snapshot(spark, p).collect()
     }
     assert rows == {(1, "a"), (2, "B"), (3, "c")}
+
+
+def test_snapshot_op_interleavings_preserve_contents(spark, tmp_path):
+    """Randomized (seeded) interleavings of append / replay / compact /
+    expire must always leave the latest read equal to the multiset of
+    appended rows — the invariant every other layer (curation state, the
+    change feed) builds on."""
+    import random
+
+    from receiptanalyzerpipeline_spark.sources.snapshots import (
+        compact_snapshot,
+        expire_snapshots,
+        read_snapshot,
+        snapshot_sink,
+        versions,
+    )
+
+    for seed in (7, 23, 91):
+        rng = random.Random(seed)
+        path = str(tmp_path / f"tbl_{seed}")
+        sink = snapshot_sink(path)
+        appended: list[int] = []
+        next_batch = 0
+        delivered: dict[int, tuple[int, int]] = {}
+        for _ in range(10):
+            op = rng.choice(["append", "append", "replay", "compact", "expire"])
+            if op == "append":
+                lo = next_batch * 100
+                hi = lo + rng.randint(1, 30)
+                delivered[next_batch] = (lo, hi)
+                sink(spark.range(lo, hi).toDF("id"), next_batch)
+                appended.extend(range(lo, hi))
+                next_batch += 1
+            elif op == "replay" and delivered:
+                b = rng.choice(sorted(delivered))
+                lo, hi = delivered[b]
+                sink(spark.range(lo, hi).toDF("id"), b)  # must be a no-op
+            elif op == "compact" and versions(path):
+                compact_snapshot(spark, path)
+            elif op == "expire" and len(versions(path)) > 2:
+                expire_snapshots(path, keep_last=2)
+            if versions(path):
+                got = sorted(r["id"] for r in read_snapshot(spark, path).collect())
+                assert got == sorted(appended), (seed, op)
+
+
+def test_replay_of_expired_batch_stays_a_noop(spark, tmp_path):
+    """The ledger closes the expire-then-replay hole: after retention
+    removes a batch's manifest, re-delivering that batch must STILL be
+    recognized as committed (no duplicate rows)."""
+    from receiptanalyzerpipeline_spark.sources.snapshots import (
+        batch_committed,
+        expire_snapshots,
+        read_snapshot,
+        snapshot_sink,
+        versions,
+    )
+
+    path = str(tmp_path / "tbl")
+    sink = snapshot_sink(path)
+    for b in range(4):
+        sink(spark.range(b * 10, (b + 1) * 10).toDF("id"), b)
+    expired = expire_snapshots(path, keep_last=2)
+    assert expired == [0, 1]
+    assert batch_committed(path, 0) and batch_committed(path, 1)
+
+    sink(spark.range(0, 10).toDF("id"), 0)  # late replay of expired batch
+    assert read_snapshot(spark, path).count() == 40  # no duplicates
+    assert versions(path) == [2, 3]
