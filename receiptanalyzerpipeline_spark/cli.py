@@ -9,8 +9,8 @@
 
 Differences by design (SURVEY §7.4): analyze returns BOTH summary and line
 items (the reference's S3 branch crashes unpacking a single value); no
-rename-based dedup — the hash is a column and layout is hash-prefix
-partitioning; the sink is partitioned parquet, not SQLite.
+rename-based dedup — the hash is a column (``img_id``); the sink is a
+parquet table keyed on it, not SQLite.
 """
 
 from __future__ import annotations

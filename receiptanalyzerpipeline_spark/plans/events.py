@@ -425,8 +425,8 @@ def q_t7(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id tiebreaker; the open interval is flagged is_current. "
         "One shuffle on user_id + in-partition sort — the standard way a "
         "warehouse derives slowly-changing dimensions from a 100 TB "
-        "change stream (and the batch shape of the streaming upsert sink "
-        "sources/sinks.upsert_by_key)."
+        "change stream (its type-1 counterpart, replace by key, is the "
+        "snapshot MERGE sources/snapshots.merge_upsert)."
     ),
     tags=("events", "window", "dimension"),
     order=("user_id", "valid_from", "event_id"),

@@ -98,7 +98,7 @@ def _morton_sql(x: str, y: str, bits: int) -> str:
     """,
     doc=(
         "Morton (Z-order) cell id over (linenumber, quantity) — the exact "
-        "bit-interleave kernel behind write_zordered/compact_snapshot "
+        "bit-interleave kernel behind zorder_frame and compact_snapshot "
         "cluster_by (SURVEY N7 layout policy), oracle-replayed arithmetically."
     ),
     tags=("projection", "layout"),

@@ -1,209 +1,37 @@
-"""Sinks (SURVEY §2.1 K1-K6): curated-table writers with the 100 TB layout.
+"""Sinks (SURVEY §2.1 K1-K6): the training-shard export and the Z-order
+layout kernel. The curated tables and table maintenance live elsewhere.
 
 Reference → engine:
 
-    K1 batched ORM insert (db.py:9-13)       → partitioned parquet append /
-                                               JDBC batch write
-    K2 create_all DDL (main.py:135-141)      → none: a table is created by
-                                               its first write
-    K3 Alembic add-column migration          → mergeSchema-on-read append
-       (migrations/versions/e5c6...py:20-28)   (schema evolution without
-                                               rewrites)
-    K4 move-to-S3 (watcher.py:104-118)       → same writers against s3a://
-                                               URIs (Hadoop S3A); no code
-                                               difference
-    K6 rename-to-hash (anarcptlib.py:155-159)→ hash is a column; physical
-                                               layout = hash-prefix
-                                               partition, not a rename
+    K1 batched ORM insert (db.py:9-13)       → idempotent parquet append of
+                                               the curated tables
+                                               (streaming.ingest.merge_curated);
+                                               a JDBC target is Spark's own
+                                               df.write.format("jdbc"),
+                                               not wrapped here
+    K2 create_all DDL (main.py:135-141)      → init-db writes both curated
+                                               tables empty with explicit
+                                               schemas; otherwise the first
+                                               write creates a table
+    K3 Alembic add-column migration          → widening snapshot appends
+       (migrations/versions/e5c6...py:20-28)   (snapshots._check_append_schema:
+                                               old files read NULL for a
+                                               new column, nothing rewritten)
+    K4 move-to-S3 (watcher.py:104-118)       → the same writers against
+                                               s3a:// URIs (Hadoop S3A); no
+                                               code difference
+    K6 rename-to-hash (anarcptlib.py:155-159)→ the hash is a column (img_id);
+                                               no rename and no layout helper
 
-Layout policy (SURVEY N7): curated receipt tables partition by month
-(time-pruned scans for the dominant date-range queries); raw/dedup zones
-partition by 2-hex hash prefix (256 uniform buckets, co-locates the
-dedup join key).
+Here: ``write_training_shards`` (the shard export of ``anarcpt-spark
+curate``), and ``zvalue``/``zorder_frame``, the Morton kernel behind q_p5
+and ``snapshots.compact_snapshot(cluster_by=)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def write_partitioned_by_month(
-    df: DataFrame, path: str, ts_col: str = "receipt_date", mode: str = "append"
-) -> None:
-    """Append with month partitions: `<path>/month=YYYY-MM/part-*.parquet`.
-    NULL dates land in a literal `month=unknown` partition instead of
-    failing (reference defaults unparsed dates, we quarantine them)."""
-    with_month = df.withColumn(
-        "month",
-        F.coalesce(F.date_format(F.col(ts_col), "yyyy-MM"), F.lit("unknown")),
-    )
-    with_month.write.partitionBy("month").mode(mode).parquet(path)
-
-
-def write_partitioned_by_hash_prefix(
-    df: DataFrame, path: str, hash_col: str = "ahash", mode: str = "append"
-) -> None:
-    """Append with 2-hex-char hash-prefix partitions (256 uniform buckets) —
-    the physical form of the reference's rename-to-hash layout."""
-    with_prefix = df.withColumn("hash_prefix", F.substring(F.col(hash_col), 1, 2))
-    with_prefix.write.partitionBy("hash_prefix").mode(mode).parquet(path)
-
-
-def append_evolving(df: DataFrame, path: str) -> None:
-    """Schema-evolution-safe append (K3): new columns may appear in later
-    writes; readers see the union via read_evolved."""
-    df.write.mode("append").parquet(path)
-
-
-_DROP_MASK = "_dropped_columns.json"
-
-
-def drop_columns(path: str, *cols: str) -> None:
-    """ALTER TABLE DROP COLUMN as projection masking (K3 downgrade path —
-    the reference's Alembic migration drops ``other_data`` on downgrade,
-    /root/reference/migrations/versions/e5c6e71f62a6_initial_migration.py:24-28).
-    No data files are rewritten: the dropped names are recorded in a tiny
-    mask file next to the data and read_evolved projects them away — an
-    O(1) metadata commit at any table size, and reversible (undrop) since
-    the bytes remain until a compaction rewrites them."""
-    import json
-    from pathlib import Path
-
-    mask = Path(path) / _DROP_MASK
-    dropped = set(json.loads(mask.read_text())) if mask.exists() else set()
-    dropped.update(cols)
-    mask.write_text(json.dumps(sorted(dropped)))
-
-
-def undrop_columns(path: str, *cols: str) -> None:
-    """Reverse drop_columns for columns whose data files still carry the
-    bytes (no compaction yet) — the Alembic upgrade direction."""
-    import json
-    from pathlib import Path
-
-    mask = Path(path) / _DROP_MASK
-    dropped = set(json.loads(mask.read_text())) if mask.exists() else set()
-    dropped.difference_update(cols)
-    mask.write_text(json.dumps(sorted(dropped)))
-
-
-def read_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Read an evolving parquet table with the merged (union) schema minus
-    any mask-dropped columns — the engine's ALTER TABLE ADD/DROP COLUMN."""
-    import json
-    from pathlib import Path
-
-    df = spark.read.option("mergeSchema", "true").parquet(path)
-    mask = Path(path) / _DROP_MASK
-    if mask.exists():
-        dropped = [c for c in json.loads(mask.read_text()) if c in df.columns]
-        if dropped:
-            df = df.drop(*dropped)
-    return df
-
-
-def write_jdbc(
-    df: DataFrame, url: str, table: str, mode: str = "append", **options: str
-) -> None:
-    """K1 parity sink: batch JDBC write — the engine form of the reference's
-    SQLModel insert into SQLite (/root/reference/anarcpt/db.py:9-13).
-    Executed in tests against embedded Derby (jdbc:derby:<path>;create=true,
-    the in-process JDBC engine Spark ships for its metastore), proving the
-    full write+readback path; any other warehouse is the same call with its
-    URL/driver."""
-    df.write.format("jdbc").option("url", url).option("dbtable", table).options(
-        **options
-    ).mode(mode).save()
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table (``bucketBy`` + optional ``sortBy``): the
-    co-located-join layout. Two tables bucketed identically on their join
-    key hash-partition at WRITE time, so a later join needs no shuffle
-    exchange at all (tests/test_bucketing.py asserts the plan) — at
-    100 TB this converts the nightly fact-fact join's dominant cost into
-    a one-time write-side cost amortized over every downstream join.
-    ``sortBy`` additionally pre-sorts within buckets, letting sort-merge
-    join skip its sort."""
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(name)
-
-
-def upsert_by_key(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    version_col: str,
-) -> None:
-    """MERGE-style upsert into a parquet target without a table format:
-    union target + updates, keep the max-``version_col`` row per key,
-    rewrite. Equivalent to ``MERGE WHEN MATCHED UPDATE WHEN NOT MATCHED
-    INSERT`` with last-writer-wins.
-
-    Scale posture: the rewrite is the cost — at 100 TB this targets ONE
-    partition at a time (pair with ``write_partitioned_by_month``'s layout
-    and dynamic partition overwrite) or moves to a table format with
-    file-level merge (Delta/Iceberg), which keeps this exact dedup
-    semantics but rewrites only touched files. The keep-latest dedup is
-    one hash shuffle on the key; ties on version break by the remaining
-    columns (deterministic under retry).
-    """
-    import os
-
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(),
-        *[F.col(c).desc() for c in updates.columns if c not in key_cols and c != version_col],
-    )
-    if os.path.exists(path):
-        current = spark.read.parquet(path)
-        merged = current.unionByName(updates.select(*current.columns))
-    else:
-        merged = updates
-    result = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    # Parquet sources can't overwrite in place from a plan that reads the
-    # same path — materialize through a staging dir, then swap.
-    staging = f"{path}.__staging__"
-    result.write.mode("overwrite").parquet(staging)
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(staging, path)
-
-
-def compact(spark: SparkSession, path: str, target_files: int = 1) -> int:
-    """Small-file compaction: rewrite a parquet dataset into
-    ``target_files`` files (coalesce — a repartition-less merge; no
-    shuffle). Streaming sinks and per-trigger appends accrete small files
-    that degrade scan parallelism bookkeeping at scale; compaction is the
-    standing housekeeping job. Returns the file count before compaction.
-    """
-    import glob as _glob
-    import os
-    import shutil
-
-    before = len(_glob.glob(os.path.join(path, "*.parquet")))
-    df = spark.read.parquet(path)
-    staging = f"{path}.__staging__"
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path, ignore_errors=True)
-    os.replace(staging, path)
-    return before
 
 
 def write_training_shards(
@@ -336,21 +164,3 @@ def zorder_frame(
         .drop("__z__")
     )
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Z-order clustered writer: multi-dimensional data skipping without
-    partitioning (SURVEY N7 layout policy, Delta OPTIMIZE ZORDER shape).
-
-    A sort on one column gives perfect parquet min/max skipping on that
-    column and none on any other; interleaving the bucketized bits of k
-    columns gives useful skipping on EVERY clustered column at once — the
-    layout for 100 TB fact tables probed by more than one key. See
-    ``zorder_frame`` for the mechanics.
-    """
-    zorder_frame(df, cols, n_files, bits).write.mode("overwrite").parquet(path)

@@ -1,62 +1,8 @@
-"""Bucketed co-located joins: identically-bucketed tables must join with
-NO shuffle exchange — the write-time layout replaces the per-query
-shuffle (SCALE.md, joins section)."""
+"""Corrupt-file policy at the batch source: a parquet scan with
+``ignoreCorruptFiles`` skips a garbage file in its directory instead of
+failing (SURVEY P6)."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from receiptanalyzerpipeline_spark.sources.sinks import write_bucketed
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark):
-    orders = spark.range(5000).select(
-        F.col("id").alias("o_key"), (F.col("id") % 97).alias("o_val")
-    )
-    items = spark.range(20000).select(
-        (F.col("id") % 5000).alias("l_key"), (F.col("id") % 13).alias("l_val")
-    )
-    write_bucketed(orders, "t_orders_b", "o_key", n_buckets=8, sort_col="o_key")
-    write_bucketed(items, "t_items_b", "l_key", n_buckets=8, sort_col="l_key")
-    yield "t_orders_b", "t_items_b"
-    spark.sql("DROP TABLE IF EXISTS t_orders_b")
-    spark.sql("DROP TABLE IF EXISTS t_items_b")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_tables):
-    t_o, t_i = bucketed_tables
-    o = spark.table(t_o)
-    i = spark.table(t_i)
-    joined = o.join(i, o["o_key"] == i["l_key"])
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert joined.count() == 20000
-
-
-def test_bucketed_groupby_has_no_shuffle(spark, bucketed_tables):
-    t_o, _ = bucketed_tables
-    agg = spark.table(t_o).groupBy("o_key").agg(F.sum("o_val").alias("s"))
-    plan = agg._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert agg.count() == 5000
-
-
-def test_month_partition_pruning(spark, sf_dir, tmp_path):
-    """write_partitioned_by_month layout + a month filter must prune
-    partitions at the scan (PartitionFilters), not post-filter rows."""
-    from receiptanalyzerpipeline_spark.catalog import table
-    from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_month
-
-    path = str(tmp_path / "events_by_month")
-    ev = table(spark, sf_dir, "events").select("event_id", "ts", "value")
-    write_partitioned_by_month(ev, path, ts_col="ts", mode="overwrite")
-
-    scan = spark.read.parquet(path).filter(F.col("month") == "2024-01")
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(month" in plan, plan
-    assert scan.count() == ev.count()  # all synthetic events are 2024-01
 
 
 def test_corrupt_file_policy(spark, tmp_path):

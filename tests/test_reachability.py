@@ -15,11 +15,17 @@ outside its own body, in the package or in the code that runs it
 (``__spark_entry__.py``, ``bench.py``, ``scripts/``, ``perfbench/``).
 Text such as a docstring mention is not a reference. Registry builders
 are decorated, so they are not scanned.
+
+Shadowing: no module of the package, ``tests/``, ``scripts/``,
+``perfbench/``, ``bench.py`` or ``__spark_entry__.py`` binds the same
+top-level function or class name twice. The later definition silently
+replaces the earlier one, so pytest would never collect a shadowed test.
 """
 
 from __future__ import annotations
 
 import ast
+from collections import Counter
 from pathlib import Path
 
 PKG = "receiptanalyzerpipeline_spark"
@@ -36,17 +42,6 @@ TEST_ONLY_DEFS = {
     "operators.components.dedup_survivors",
     "operators.textanalysis.winnow_fingerprints",
     "plans.audit.plan_metrics",
-    "sources.sinks.append_evolving",
-    "sources.sinks.compact",
-    "sources.sinks.drop_columns",
-    "sources.sinks.read_evolved",
-    "sources.sinks.undrop_columns",
-    "sources.sinks.upsert_by_key",
-    "sources.sinks.write_bucketed",
-    "sources.sinks.write_jdbc",
-    "sources.sinks.write_partitioned_by_hash_prefix",
-    "sources.sinks.write_partitioned_by_month",
-    "sources.sinks.write_zordered",
     "sources.snapshots.file_stats",
     "streaming.neardup_stream.neardup_dedup_sink",
     "streaming.observability.read_progress",
@@ -109,12 +104,17 @@ def _referenced_names(node: ast.AST) -> set[str]:
     return names
 
 
+def _source_files(*dirs: str) -> list[Path]:
+    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
+    for d in dirs:
+        files.extend(sorted((REPO / d).rglob("*.py")))
+    return files
+
+
 def uncalled_defs() -> set[str]:
     """Public, undecorated, top-level package definitions that no
     production code references outside the definition's own body."""
-    files = [REPO / "__spark_entry__.py", REPO / "bench.py"]
-    for d in (PKG, "scripts", "perfbench"):
-        files.extend(sorted((REPO / d).rglob("*.py")))
+    files = _source_files(PKG, "scripts", "perfbench")
     defs: dict[tuple[Path, int], str] = {}
     refs: dict[str, set[tuple[Path, int]]] = {}
     for path in files:
@@ -139,3 +139,23 @@ def uncalled_defs() -> set[str]:
 
 def test_every_public_function_has_a_production_caller():
     assert uncalled_defs() == TEST_ONLY_DEFS
+
+
+def shadowed_defs() -> list[str]:
+    """``path:name`` for every top-level function or class name that a
+    module defines more than once."""
+    shadowed = []
+    for path in _source_files(PKG, "tests", "scripts", "perfbench"):
+        tree = ast.parse(path.read_text(), str(path))
+        names = Counter(
+            stmt.name
+            for stmt in tree.body
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        )
+        rel = path.relative_to(REPO)
+        shadowed.extend(f"{rel}:{name}" for name, n in names.items() if n > 1)
+    return shadowed
+
+
+def test_no_module_defines_a_name_twice():
+    assert shadowed_defs() == []

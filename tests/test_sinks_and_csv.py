@@ -1,68 +1,14 @@
-"""Sink layout (partitioning, schema evolution) + CSV line-item parser
-tests (SURVEY K1-K6, F5)."""
+"""Snapshot-table tests (time travel, retention, compaction, exactly-once
+sinks; SURVEY K7), the Z-order layout that ``compact_snapshot(cluster_by=)``
+writes, and assorted operator checks: the CSV line-item parser (F5),
+approximate and HLL distinct counts, PERMISSIVE JSON and
+connected-components convergence."""
 
 from __future__ import annotations
 
 from decimal import Decimal
-from pathlib import Path
 
 from pyspark.sql import functions as F
-
-
-def test_month_partitioned_layout(spark, tmp_path: Path):
-    from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_month
-
-    df = spark.createDataFrame(
-        [
-            ("r1", "2023-03-05 14:07:00"),
-            ("r2", "2023-03-20 09:00:00"),
-            ("r3", "2023-11-02 00:00:00"),
-            ("r4", None),  # unparsed date → quarantine partition
-        ],
-        ["img_id", "d"],
-    ).select("img_id", F.col("d").cast("timestamp").alias("receipt_date"))
-    out = str(tmp_path / "summary")
-    write_partitioned_by_month(df, out)
-
-    parts = {p.name for p in Path(out).iterdir() if p.name.startswith("month=")}
-    assert parts == {"month=2023-03", "month=2023-11", "month=unknown"}
-
-    # Partition pruning: a month filter must prune the scan to one partition.
-    pruned = spark.read.parquet(out).where(F.col("month") == "2023-03")
-    assert pruned.count() == 2
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "month=2023-03" in plan or "PartitionFilters" in plan
-
-
-def test_hash_prefix_layout(spark, tmp_path: Path):
-    from receiptanalyzerpipeline_spark.sources.sinks import write_partitioned_by_hash_prefix
-
-    df = spark.createDataFrame(
-        [("a1b2c3", b"x"), ("a1ffff", b"y"), ("ff0000", b"z")], ["ahash", "content"]
-    )
-    out = str(tmp_path / "raw")
-    write_partitioned_by_hash_prefix(df, out)
-    parts = {p.name for p in Path(out).iterdir() if "=" in p.name}
-    assert parts == {"hash_prefix=a1", "hash_prefix=ff"}
-
-
-def test_schema_evolution_append(spark, tmp_path: Path):
-    """K3: the other_data migration — a later write adds a column; evolved
-    reads see the union schema with NULLs for old rows."""
-    from receiptanalyzerpipeline_spark.sources.sinks import append_evolving, read_evolved
-
-    out = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([("r1", "CVS")], ["img_id", "vendor_name"])
-    append_evolving(v1, out)
-    v2 = spark.createDataFrame(
-        [("r2", "CAFE", '{"CHANGE":"0.55"}')], ["img_id", "vendor_name", "other_data"]
-    )
-    append_evolving(v2, out)
-
-    evolved = read_evolved(spark, out)
-    assert set(evolved.columns) == {"img_id", "vendor_name", "other_data"}
-    rows = {r["img_id"]: r["other_data"] for r in evolved.collect()}
-    assert rows["r1"] is None and rows["r2"] is not None
 
 
 CSV_CASES = [
@@ -95,39 +41,6 @@ def test_approx_distinct_tolerance(spark, sf_dir):
     assert abs(approx["approx_supps"] - exact["n_supps"]) / exact["n_supps"] < 0.05
 
 
-def test_upsert_by_key_last_writer_wins(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import upsert_by_key
-
-    path = str(tmp_path / "target")
-    base = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b")], "k long, version long, payload string"
-    )
-    upsert_by_key(spark, base, path, ["k"], "version")
-    upd = spark.createDataFrame(
-        [(2, 2, "b2"), (3, 1, "c")], "k long, version long, payload string"
-    )
-    upsert_by_key(spark, upd, path, ["k"], "version")
-    got = {(r["k"], r["version"], r["payload"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, 1, "a"), (2, 2, "b2"), (3, 1, "c")}
-    # Stale update must NOT clobber a newer row.
-    stale = spark.createDataFrame([(2, 1, "old")], "k long, version long, payload string")
-    upsert_by_key(spark, stale, path, ["k"], "version")
-    got = {(r["k"], r["payload"]) for r in spark.read.parquet(path).collect()}
-    assert (2, "b2") in got and (2, "old") not in got
-
-
-def test_compact_merges_small_files(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import compact
-    import glob
-
-    path = str(tmp_path / "many")
-    spark.range(1000).repartition(16).write.parquet(path)
-    before = compact(spark, path, target_files=2)
-    assert before == 16
-    assert len(glob.glob(path + "/*.parquet")) == 2
-    assert spark.read.parquet(path).count() == 1000
-
-
 def test_permissive_json_quarantines_corrupt_rows(spark, tmp_path):
     """T5 at the batch source: PERMISSIVE JSON parse routes malformed rows
     to a corrupt-record column instead of failing the job — the ingest
@@ -152,78 +65,6 @@ def test_permissive_json_quarantines_corrupt_rows(spark, tmp_path):
     assert len(bad) == 2  # garbage line + type-mismatched row, both kept
 
 
-def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):
-    """K1 executed, not just call-shaped (round-1 verdict gap): batch JDBC
-    write into embedded Derby (the in-process JDBC engine Spark ships),
-    then read back through the JDBC source. The reference's SQLModel
-    insert into SQLite (anarcpt/db.py:9-13) is this call with a SQLite
-    JDBC URL."""
-    from receiptanalyzerpipeline_spark.sources.sinks import write_jdbc
-
-    url = f"jdbc:derby:{tmp_path}/receipts_db;create=true"
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    df = spark.createDataFrame(
-        [(1, "CORNER CAFE", 18.20), (2, "ACME MART #42", 25.00)],
-        "id long, vendor_name string, total double",
-    )
-    write_jdbc(df, url, "receipt_summary", mode="append", driver=driver)
-    # Append again: JDBC append accumulates (reference inserts per receipt).
-    write_jdbc(df.limit(1), url, "receipt_summary", mode="append", driver=driver)
-
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "receipt_summary")
-        .option("driver", driver)
-        .load()
-    )
-    rows = sorted((r["id"], r["vendor_name"], r["total"]) for r in back.collect())
-    assert rows == [
-        (1, "CORNER CAFE", 18.2),
-        (1, "CORNER CAFE", 18.2),
-        (2, "ACME MART #42", 25.0),
-    ]
-
-
-def test_upsert_by_key_last_writer_wins_and_idempotent(spark, tmp_path):
-    from receiptanalyzerpipeline_spark.sources.sinks import upsert_by_key
-
-    path = str(tmp_path / "curated")
-    base = spark.createDataFrame(
-        [("a", 1, "v1"), ("b", 1, "v1")], "img_id string, version int, payload string"
-    )
-    upsert_by_key(spark, base, path, key_cols=["img_id"], version_col="version")
-
-    updates = spark.createDataFrame(
-        [("a", 2, "v2"), ("c", 1, "v1")], "img_id string, version int, payload string"
-    )
-    upsert_by_key(spark, updates, path, key_cols=["img_id"], version_col="version")
-    rows = {r["img_id"]: (r["version"], r["payload"])
-            for r in spark.read.parquet(path).collect()}
-    assert rows == {"a": (2, "v2"), "b": (1, "v1"), "c": (1, "v1")}
-
-    # Replaying the same update batch must not change anything (idempotent
-    # under retry - the MERGE contract).
-    upsert_by_key(spark, updates, path, key_cols=["img_id"], version_col="version")
-    rows2 = {r["img_id"]: (r["version"], r["payload"])
-             for r in spark.read.parquet(path).collect()}
-    assert rows2 == rows
-
-
-def test_compact_merges_small_files(spark, tmp_path):
-    import glob
-
-    from receiptanalyzerpipeline_spark.sources.sinks import compact
-
-    path = str(tmp_path / "smallfiles")
-    spark.range(0, 1000).repartition(8).write.parquet(path)
-    before = compact(spark, path, target_files=1)
-    assert before >= 8
-    after = glob.glob(f"{path}/*.parquet")
-    assert len(after) == 1
-    assert spark.read.parquet(path).count() == 1000
-
-
 def _files_matching_point(spark, path: str, col: str, probes: list) -> float:
     """Mean #files whose [min,max] envelope admits each probe value —
     the count a min/max-pruning scan planner would have to read."""
@@ -239,18 +80,20 @@ def _files_matching_point(spark, path: str, col: str, probes: list) -> float:
 
 
 def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
-    """write_zordered: one layout, min/max skipping on BOTH cluster columns.
+    """zorder_frame: one layout, min/max skipping on BOTH cluster columns.
     The linear sort baseline skips perfectly on its sort column and not at
     all on the other; z-order must beat it decisively on the second column
     while keeping real pruning on the first."""
-    from receiptanalyzerpipeline_spark.sources.sinks import write_zordered
+    from receiptanalyzerpipeline_spark.sources.sinks import zorder_frame
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
     n_files = 16
     zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    write_zordered(li, zpath, ["l_orderkey", "l_partkey"], n_files=n_files)
+    zorder_frame(li, ["l_orderkey", "l_partkey"], n_files=n_files).write.mode(
+        "overwrite"
+    ).parquet(zpath)
     (
         li.repartitionByRange(n_files, "l_orderkey")
         .sortWithinPartitions("l_orderkey")
@@ -283,10 +126,10 @@ def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
 
 
 def test_zorder_degenerate_inputs(spark, tmp_path):
-    """write_zordered must not fail on empty input or constant cluster
+    """zorder_frame must not fail on empty input or constant cluster
     columns: empty → write as-is; constant column → pinned cell 0 (the
     column contributes nothing to the z-value instead of corrupting it)."""
-    from receiptanalyzerpipeline_spark.sources.sinks import write_zordered
+    from receiptanalyzerpipeline_spark.sources.sinks import zorder_frame
 
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
@@ -294,12 +137,16 @@ def test_zorder_degenerate_inputs(spark, tmp_path):
 
     empty = li.limit(0)
     epath = str(tmp_path / "empty")
-    write_zordered(empty, epath, ["l_orderkey", "l_partkey"], n_files=4)
+    zorder_frame(empty, ["l_orderkey", "l_partkey"], n_files=4).write.mode(
+        "overwrite"
+    ).parquet(epath)
     assert spark.read.parquet(epath).count() == 0
 
     const = li.withColumn("l_partkey", F.lit(7))
     cpath = str(tmp_path / "const")
-    write_zordered(const, cpath, ["l_orderkey", "l_partkey"], n_files=4)
+    zorder_frame(const, ["l_orderkey", "l_partkey"], n_files=4).write.mode(
+        "overwrite"
+    ).parquet(cpath)
     out = spark.read.parquet(cpath)
     assert out.count() == li.count()
     # The non-constant column still clusters: each file's envelope is narrow.
@@ -590,38 +437,6 @@ def test_write_snapshot_recovers_from_orphaned_data_dir(spark, tmp_path):
     assert v2 == 2
     assert current_version(path) == 2
     assert read_snapshot(spark, path).count() == 10
-
-
-def test_schema_evolution_drop_and_undrop_column(spark, tmp_path):
-    """K3 downgrade path (reference Alembic migration drops other_data on
-    downgrade): drop_columns masks a column out of read_evolved without
-    rewriting data; undrop_columns restores it (bytes still present)."""
-    from receiptanalyzerpipeline_spark.sources.sinks import (
-        append_evolving,
-        drop_columns,
-        read_evolved,
-        undrop_columns,
-    )
-
-    out = str(tmp_path / "tbl")
-    v1 = spark.range(3).selectExpr("id", "CAST(id AS STRING) AS extra")
-    append_evolving(v1, out)
-    assert set(read_evolved(spark, out).columns) == {"id", "extra"}
-
-    drop_columns(out, "extra")
-    dropped = read_evolved(spark, out)
-    assert dropped.columns == ["id"]
-    assert dropped.count() == 3
-
-    # appends after the drop keep working; the mask still applies
-    append_evolving(spark.range(3, 5).selectExpr("id", "'x' AS extra"), out)
-    assert read_evolved(spark, out).columns == ["id"]
-    assert read_evolved(spark, out).count() == 5
-
-    undrop_columns(out, "extra")
-    restored = read_evolved(spark, out)
-    assert set(restored.columns) == {"id", "extra"}
-    assert restored.where("extra IS NOT NULL").count() == 5
 
 
 def test_compact_snapshot_reduces_files_and_preserves_history(spark, tmp_path):
